@@ -147,21 +147,90 @@ def test_latin1_gzip_byte_exact_roundtrip(spark, tmp_path):
     )
 
 
+def test_latin1_reader_keeps_every_line_fuzz(spark, tmp_path):
+    """Hypothesis: random byte lines (0x01, quotes, blank lines, CRLF
+    endings) read as ISO-8859-1 come back one for one as
+    ``line.decode('latin-1')`` with ``rows_in`` equal to the line
+    count; on ASCII-only lines the UTF-8 and ISO-8859-1 reads agree on
+    lines and parse counters."""
+    import gzip
+    import itertools
+
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    from web_analytics_visits_re_processing_spark.sources.hitlog import (
+        read_hitlog_lines,
+    )
+
+    byte = st.one_of(
+        st.sampled_from(b'\x00\x01";,19\xe9\xff '),
+        st.integers(0, 255).filter(lambda b: b not in b"\t\n\r"),
+    )
+    line = st.lists(
+        st.lists(byte, max_size=6).map(bytes), max_size=11
+    ).map(b"\t".join)
+    ending = st.sampled_from([b"\n", b"\r\n"])
+    files = itertools.count()
+
+    def read(lines: list[bytes], encoding: str, endings: list[bytes]):
+        path = tmp_path / f"feed{next(files)}.tsv.gz"
+        with gzip.open(path, "wb") as f:
+            f.write(b"".join(raw + end for raw, end in zip(lines, endings)))
+        got = [r["value"] for r in read_hitlog_lines(spark, str(path), encoding).collect()]
+        obs = Observation()
+        read_hitlog(spark, str(path), encoding, observation=obs, drop_bad_ts=False).collect()
+        return got, obs.get
+
+    @settings(max_examples=15, deadline=None)
+    @given(st.lists(st.tuples(line, ending), min_size=1, max_size=12))
+    @example([(b"1\x01x\t\"q", b"\n"), (b"", b"\r\n"), (b"caf\xe9", b"\n")])
+    def check(rows):
+        lines, endings = [r[0] for r in rows], [r[1] for r in rows]
+        got, counters = read(lines, "ISO-8859-1", endings)
+        assert got == [raw.decode("latin-1") for raw in lines]
+        assert counters["rows_in"] == len(lines)
+
+        ascii_lines = [bytes(b for b in raw if b < 0x80) for raw in lines]
+        assert read(ascii_lines, "UTF-8", endings) == read(
+            ascii_lines, "ISO-8859-1", endings
+        )
+
+    check()
+
+
 def test_visitor_rows_survive_bad_timestamps(spark, tmp_path):
     """Reference branch order (main.py:214 vs :216): visitors are
     emitted before the timestamp stage, so a row with an unparseable
-    ts yields a visitor but never a hit or visit."""
+    ts yields a visitor but never a hit or visit — also for a user
+    whose bad-ts rows sit beside good ones."""
     p = tmp_path / "badts.tsv"
     p.write_text(
         "100\tu1\ta\t\t\t1\tp\ts\tibmA\tscvA\n"
         "\tu2\tb\t\t\t1\tp\ts\tibmB\tscvB\n"  # empty ts
+        "x\tu3\tc\t\t\t1\tp\ts\tibmC\tscvC\n"  # bad ts, good rows follow
+        "200\tu3\tc\t\t\t1\tp\ts\tibmC\tscvC\n"
+        "\tu3\tc\t\t\t1\tp\ts\tibmD\tscvD\n"  # bad-ts-only visitor of u3
+        "4000\tu3\tc\t\t\t1\tp\ts\tibmC\tscvC\n"  # gap 3800 s: 2nd visit
     )
-    counts = run_visits_pipeline(spark, str(p), str(tmp_path / "out"))
-    assert counts == {"hits": 1, "visits": 1, "visitors": 2}
-    visitors = {
-        tuple(r) for r in spark.read.csv(str(tmp_path / "out/visitors")).collect()
+    out = tmp_path / "out"
+    counts = run_visits_pipeline(spark, str(p), str(out))
+    assert counts == {"hits": 3, "visits": 3, "visitors": 4}
+    visitors = {tuple(r) for r in spark.read.csv(str(out / "visitors")).collect()}
+    assert visitors == {
+        ("u1_a", "ibmA", "scvA"),
+        ("u2_b", "ibmB", "scvB"),
+        ("u3_c", "ibmC", "scvC"),
+        ("u3_c", "ibmD", "scvD"),
     }
-    assert visitors == {("u1_a", "ibmA", "scvA"), ("u2_b", "ibmB", "scvB")}
+    visits = {tuple(r) for r in spark.read.csv(str(out / "visits")).collect()}
+    assert visits == {
+        ("u1_a_100", "u1_a", "100", "100"),
+        ("u3_c_200", "u3_c", "200", "200"),
+        ("u3_c_4000", "u3_c", "4000", "4000"),
+    }
+    hit_keys = sorted(r[0] for r in spark.read.csv(str(out / "hits")).collect())
+    assert hit_keys == ["u1_a_100", "u3_c_200", "u3_c_4000"]
 
 
 def test_parser_roundtrip_fuzz(spark):

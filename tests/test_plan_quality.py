@@ -102,6 +102,60 @@ def test_cli_main_end_to_end(spark, tmp_path):
     assert "visitors: 1 rows" in printed
 
 
+def _physical_nodes(spark, root, seen: set) -> list[str]:
+    """Class names of every physical node under ``root`` not already in
+    ``seen`` (JVM object identity), descending into AQE plans, query
+    stages and cached relations, so a plan shared by several sinks is
+    counted once."""
+    ident = spark._jvm.System.identityHashCode
+    names, stack = [], [root]
+    while stack:
+        node = stack.pop()
+        if ident(node) in seen:
+            continue
+        seen.add(ident(node))
+        name = node.getClass().getSimpleName()
+        names.append(name)
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif name == "InMemoryTableScanExec":
+            stack.append(node.relation().cachedPlan())
+        else:
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_visits_pipeline_one_scan_one_exchange(spark, tmp_path):
+    """The daily job's three sinks read one persisted frame: across
+    hits, visits and visitors the executed plans hold exactly one file
+    scan and one shuffle exchange (the user-key exchange), each counted
+    once — including the bad-ts row that only the visitors sink keeps."""
+    from web_analytics_visits_re_processing_spark.pipeline import build_visits_pipeline
+    from web_analytics_visits_re_processing_spark.sources.hitlog import read_hitlog
+
+    src = tmp_path / "feed.tsv"
+    src.write_text(
+        "100\tu1\ta\t\t\t1,2\tp\ts\tibmA\tscvA\n"
+        "5000\tu1\ta\t\t\t204\tp\ts\tibmA\tscvA\n"
+        "\tu2\tb\t\t\t1\tp\ts\tibmB\tscvB\n"
+    )
+    parsed = read_hitlog(spark, str(src), "ISO-8859-1", drop_bad_ts=False)
+    result = build_visits_pipeline(parsed)
+    seen: set = set()
+    nodes: list[str] = []
+    try:
+        for df in (result.hits, result.visits, result.visitors):
+            df.collect()
+            nodes += _physical_nodes(spark, df._jdf.queryExecution().executedPlan(), seen)
+    finally:
+        result.stamped.unpersist()
+    assert nodes.count("FileSourceScanExec") == 1, nodes
+    assert nodes.count("ShuffleExchangeExec") == 1, nodes
+
+
 def test_q1_filter_pushed_to_parquet_scan(spark, sf_dir):
     """The shipdate predicate must reach the parquet scan as a pushed
     filter (row-group skipping at 100 TB), and the scan must not read

@@ -133,3 +133,42 @@ def test_incremental_merge_equals_full_batch(spark):
     assert got[(1, m(-120))] == 2
     assert got[(1, m(-30))] == 3
     assert got[(2, m(-31))] == 1 and got[(2, dt.datetime(2024, 1, 16, 0, 0, 1))] == 1
+
+
+def test_null_ts_rows_kept_without_joining_a_visit(spark):
+    """Null-ts rows sort first in the user window (NULLS FIRST). They
+    must come back with null session columns, never share the first
+    visit's session_seq, and leave every other row's visit_key as it is
+    without them; visits_from_hits skips them."""
+    from web_analytics_visits_re_processing_spark.operators.sessionize import (
+        visits_from_hits,
+        with_session_columns,
+    )
+
+    good = [
+        (1, "u", 100), (2, "u", 200), (3, "u", 5000), (4, "u", 5100),
+        (5, "v", 10), (6, "v", 9000),
+    ]
+    nulls = [(7, "u", None), (8, "u", None), (9, "w", None)]
+    schema = "event_id long, user_id string, ts long"
+    session_cols = ("session_seq", "visit_start", "visit_end", "visit_key")
+
+    def stamp(rows):
+        return with_session_columns(spark.createDataFrame(rows, schema), gap_seconds=1800)
+
+    mixed = stamp(good + nulls)
+    by_id = {r["event_id"]: r for r in mixed.collect()}
+    assert set(by_id) == {r[0] for r in good + nulls}
+    for event_id, _, _ in nulls:
+        assert all(by_id[event_id][c] is None for c in session_cols), by_id[event_id]
+    keys_alone = {r["event_id"]: r["visit_key"] for r in stamp(good).collect()}
+    assert {i: by_id[i]["visit_key"] for i in keys_alone} == keys_alone
+    assert keys_alone[1] == "u_100" and keys_alone[3] == "u_5000"
+
+    visits = sorted(tuple(r) for r in visits_from_hits(mixed).collect())
+    assert visits == [
+        ("u_100", "u", 100, 200, 2),
+        ("u_5000", "u", 5000, 5100, 2),
+        ("v_10", "v", 10, 10, 1),
+        ("v_9000", "v", 9000, 9000, 1),
+    ]

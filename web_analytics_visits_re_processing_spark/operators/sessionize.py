@@ -30,8 +30,11 @@ Divergences from the reference, both deliberate (SURVEY §4.3):
 - min/max computed on the numeric timestamp, not lexicographically on
   strings (``main.py:120-121``); identical results for fixed-width
   epoch-seconds strings, correct for everything else.
-- Rows with null/unparseable timestamps are dropped uniformly
-  (counted, not crashed — ``main.py:93`` would raise on non-numeric).
+- Rows with null/unparseable timestamps never join a visit (the
+  parser counts them; ``main.py:93`` would raise on non-numeric).
+  ``sessionize_visits`` drops them; ``with_session_columns`` keeps them
+  with null session columns so one frame can still feed the visitors
+  sink, and ``visits_from_hits`` skips them.
 
 Scale notes (100 TB): the only shuffle is on the user key. Web-scale
 user keys are power-law skewed (bots); AQE skew-join/agg splitting is
@@ -126,6 +129,10 @@ def with_session_columns(
 
     ``order_cols`` breaks timestamp ties deterministically (defaults to
     none — min/max/key results are tie-insensitive anyway).
+
+    Rows with a null ``ts`` are kept, with null ``session_seq``,
+    ``visit_start``, ``visit_end`` and ``visit_key``. They sort first in
+    the user window and would otherwise join the user's first visit.
     """
     ts = F.col(ts_col)
     w_user = Window.partitionBy(user_col).orderBy(ts_col, *(order_cols or []))
@@ -136,10 +143,13 @@ def with_session_columns(
         ts.cast("double") - F.lag(ts.cast("double"), 1).over(w_user)
         > F.lit(float(gap_seconds))
     )
-    df = df.where(ts.isNotNull()).withColumn(
+    df = df.withColumn(
         "session_seq",
-        F.sum(F.when(is_new, 1).otherwise(0)).over(
-            w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        F.when(
+            ts.isNotNull(),
+            F.sum(F.when(is_new, 1).otherwise(0)).over(
+                w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            ),
         ),
     )
     w_sess = Window.partitionBy(user_col, "session_seq")
@@ -155,7 +165,7 @@ def with_session_columns(
         key = F.concat_ws(
             "_", F.col(user_col).cast("string"), F.col("visit_start").cast("string")
         )
-    return df.withColumn("visit_key", key)
+    return df.withColumn("visit_key", F.when(ts.isNotNull(), key))
 
 
 def visits_from_hits(
@@ -169,6 +179,8 @@ def visits_from_hits(
     window functions already created (hash on ``user`` clusters every
     finer key), so the whole visits+hits fan-out costs one shuffle —
     persist the ``with_session_columns`` result when writing both.
+    Null-``visit_key`` rows (null ``ts``) belong to no visit and are
+    dropped here.
     """
     aggs = [
         F.min("visit_start").alias("visit_start"),
@@ -177,7 +189,11 @@ def visits_from_hits(
     ]
     if extra_aggs:
         aggs.extend(extra_aggs)
-    return hits_with_keys.groupBy("visit_key", user_col).agg(*aggs)
+    return (
+        hits_with_keys.where(F.col("visit_key").isNotNull())
+        .groupBy("visit_key", user_col)
+        .agg(*aggs)
+    )
 
 
 def salt_sessions(df: DataFrame, user_col: str, ts_col: str = "ts") -> DataFrame:

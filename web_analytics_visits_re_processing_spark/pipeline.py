@@ -1,11 +1,13 @@
 """The reference's end-to-end pipeline, Spark-first: hit log in,
 ``visits`` / ``hits`` / ``visitors`` out (``main.py:209-234``).
 
-Topology: ONE shuffle (the user-key exchange inside
-``with_session_columns``); hits, visits and visitors all derive from
-the same stamped DataFrame, which is persisted across the three sinks
-(Beam reuses pipeline branches implicitly; Spark needs the explicit
-``persist`` or each write would recompute the scan+shuffle).
+Topology: one input scan, one shuffle (the user-key exchange inside
+``with_session_columns``), and one persisted frame that all three
+sinks read (Beam reuses pipeline branches implicitly; Spark needs the
+explicit ``persist`` or each write would recompute the scan+shuffle).
+``visits`` groups and ``visitors`` de-duplicates on keys the
+``user_id`` hash partitioning already clusters, so neither adds an
+exchange.
 
 Faithful-vs-sane divergences (SURVEY §4.3.3), defaulting to sane:
 
@@ -16,14 +18,12 @@ Faithful-vs-sane divergences (SURVEY §4.3.3), defaulting to sane:
   (``main.py:93``).
 - min/max on numeric ts, not lexicographic strings (``main.py:120``).
 
-Faithful (not a divergence): visitors derive from the PARSED rows
-before the timestamp filter — the reference's visitor branch taps the
+Faithful (not a divergence): the reference's visitor branch taps the
 pipeline before its timestamp stage (``main.py:214`` vs ``:216``), so
 a row with an unparseable ts still yields a visitor, never a hit or
-visit. The visitors sink therefore re-scans the (cheap, codegen'd)
-parse rather than the persisted post-window frame: at scale an extra
-scan beats holding a second persisted copy, and the scan carries no
-shuffle.
+visit. ``with_session_columns`` keeps such rows with a null
+``visit_key``: visitors read every row of the persisted frame, hits
+and visits only the keyed ones.
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ from pyspark.storagelevel import StorageLevel
 
 from web_analytics_visits_re_processing_spark.operators.sessionize import (
     DEFAULT_GAP_SECONDS,
+    visits_from_hits,
     with_session_columns,
 )
 from web_analytics_visits_re_processing_spark.sources.hitlog import read_hitlog
@@ -73,21 +74,18 @@ def build_visits_pipeline(
     dedup_visitors: bool = True,
 ) -> VisitsPipelineResult:
     """Parsed hit log (see ``sources.hitlog``, ideally parsed with
-    ``drop_bad_ts=False``) → the three outputs.
-
-    Visitors tap ``parsed_hits`` directly (pre-ts-filter, matching the
-    reference's branch order); hits/visits derive from the persisted
-    sessionized frame, whose window step drops null-ts rows itself.
+    ``drop_bad_ts=False``) → the three outputs, all read from one
+    persisted sessionized frame.
     """
     stamped = with_session_columns(
         parsed_hits, user_col="user_id", ts_col="ts", gap_seconds=gap_seconds
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    hits = stamped.select(*HITS_COLUMNS)
-    visits = stamped.select(*VISITS_COLUMNS).dropDuplicates(["visit_key"])
-    visitors = parsed_hits.select(*VISITORS_COLUMNS)
+    hits = stamped.where(F.col("visit_key").isNotNull()).select(*HITS_COLUMNS)
+    visits = visits_from_hits(stamped).select(*VISITS_COLUMNS)
+    visitors = stamped.select(*VISITORS_COLUMNS)
     if dedup_visitors:
-        visitors = visitors.dropDuplicates(["user_id", "ibm_id", "scv_id"])
+        visitors = visitors.dropDuplicates(VISITORS_COLUMNS)
     return VisitsPipelineResult(hits=hits, visits=visits, visitors=visitors, stamped=stamped)
 
 

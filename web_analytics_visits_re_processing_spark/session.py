@@ -11,11 +11,14 @@ The knobs below are chosen for correctness-at-scale first:
 - **Arrow enabled** so the few Pandas-UDF operators (similarity
   fallbacks, multimodal decode) move data in columnar batches, not
   pickled rows.
-- ``spark.sql.shuffle.partitions`` defaults to 2× local cores here;
-  on a real cluster you would size it so each post-shuffle partition
-  is ~128-512 MB (e.g. 100 TB input with heavy reduction → tens of
-  thousands of partitions), or simply let AQE coalesce from a high
-  initial number.
+- **AQE may re-plan cached plans**, so a persisted frame read by
+  several sinks keeps AQE's coalesced partitions instead of one task
+  and one output file per shuffle partition.
+- ``spark.sql.shuffle.partitions`` defaults to 32 here (AQE coalesces
+  it per stage); on a real cluster you would size it so each
+  post-shuffle partition is ~128-512 MB (e.g. 100 TB input with heavy
+  reduction → tens of thousands of partitions), or simply let AQE
+  coalesce from a high initial number.
 """
 
 from __future__ import annotations
@@ -57,6 +60,7 @@ def get_spark(
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.shuffle.partitions": str(
             shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS

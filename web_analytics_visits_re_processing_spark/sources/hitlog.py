@@ -43,21 +43,25 @@ def read_hitlog_lines(
 ) -> DataFrame:
     """Raw lines (column ``value``). Glob patterns work natively.
 
-    ``encoding`` other than UTF-8 (the upstream feed is ISO-8859-1,
-    ``/root/reference/encoding_update.py``) is handled by the reader
-    itself — the reference's separate gzip-transcode pass dissolves
-    into an option. Gzip input is transparent (Hadoop codec by
-    extension).
+    One text reader for every charset: it splits on ``\\n``, ``\\r\\n``
+    or ``\\r`` and keeps each line's bytes untouched (a blank line is an
+    empty row). UTF-8 input keeps ``value`` as read. Any other
+    ``encoding`` (the upstream feed is ISO-8859-1, the reference's
+    ``encoding_update.py``) is decoded in the projection, so the
+    reference's separate gzip-transcode pass becomes one expression.
+    ISO-8859-1 maps every byte to a character. For the other charsets
+    ``decode`` accepts (e.g. US-ASCII), an undecodable byte fails the
+    job with ``MALFORMED_CHARACTER_CODING`` under ANSI mode. Gzip input
+    is transparent (Hadoop codec by extension).
     """
+    lines = spark.read.text(path)
     if encoding.upper().replace("-", "") == "UTF8":
-        return spark.read.text(path)
-    # csv reader with an unused separator/quote decodes the charset and
-    # yields whole lines in one column.
-    return (
-        spark.read.schema("value STRING")
-        .options(sep="\x01", quote="\x00", encoding=encoding)
-        .csv(path)
-    )
+        # The reader's string is already UTF-8; decode() would raise on
+        # invalid UTF-8 under ANSI.
+        return lines
+    # The text reader never validates UTF-8, so the binary cast returns
+    # the line's original bytes.
+    return lines.select(F.decode(F.col("value").cast("binary"), encoding).alias("value"))
 
 
 def parse_hitlog(

@@ -193,7 +193,7 @@ def user_lifetime_stream(
 
 # transformWithState replay tuning (r12 verdict item 3 — the tws
 # family's ~10 s was the largest unamortized fixed cost in the
-# headline). Measured at sf0.1, local[32], warm (profile_tws*.py):
+# headline). Measured at sf0.1, local[32], warm (BASELINE.md, tws family):
 #  - state partitions: r13 re-sweep on the STANDALONE processors
 #    (16/8/4 × 3 reps): 8 ≈ 16 for both gates (lifetime 5.3 vs 5.8 s,
 #    rollup 6.3 both), 4 regresses (chatter serializes). An sf0.01-
