@@ -540,21 +540,18 @@ def streaming_state_probe(spark, scaled_dir: str) -> dict:
     import shutil
 
     from web_analytics_visits_re_processing_spark.plans import QUERIES
-    from web_analytics_visits_re_processing_spark.streaming import (
-        sessionize_stream as ss,
-    )
+    from web_analytics_visits_re_processing_spark.streaming import replay
 
     probes = {
-        "streaming_sessionize_visits": "stream_append_visits",
-        "streaming_dedup_events": "stream_append_dedup",
-        "streaming_interval_join": "stream_append_ssjoin_inner",
+        "streaming_sessionize_visits": "streaming_sessionize_visits",
+        "streaming_dedup_events": "streaming_dedup_events",
+        "streaming_interval_join": "streaming_interval_join_inner",
     }
     out: dict[str, dict] = {}
     for sf_name, sf_dir in (("sf0.1", BASE_SF), ("sf1x", scaled_dir)):
-        base = os.path.basename(sf_dir.rstrip("/")) or "sf"
         per: dict[str, dict] = {}
         for qname, wname in probes.items():
-            workdir = os.path.join(REPO, ".tmp", wname, base)
+            workdir = replay.replay_workdir(wname, sf_dir)
             for sub in ("ckpt", "out"):
                 shutil.rmtree(
                     os.path.join(workdir, sub), ignore_errors=True
@@ -564,7 +561,7 @@ def streaming_state_probe(spark, scaled_dir: str) -> dict:
             per[qname] = {
                 "sec": round(time.perf_counter() - t0, 3),
                 "out_rows": n,
-                **dict(ss.LAST_APPEND_PROGRESS),
+                **dict(replay.LAST_APPEND_PROGRESS),
             }
             print(f"# stream-state {sf_name} {qname}: {per[qname]}",
                   file=sys.stderr)
@@ -592,11 +589,15 @@ def chunked_sessionize_probe(
 
     from pyspark.sql import functions as F
 
+    from web_analytics_visits_re_processing_spark.operators.sessionize import (
+        DEFAULT_GAP_SECONDS,
+    )
     from web_analytics_visits_re_processing_spark.sources.tables import (
         load_table,
     )
-    from web_analytics_visits_re_processing_spark.streaming import (
-        sessionize_stream as ss,
+    from web_analytics_visits_re_processing_spark.streaming import replay
+    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
+        sessionize_stream,
     )
 
     workdir = os.path.join(REPO, ".tmp", "stream_chunked", label)
@@ -630,7 +631,7 @@ def chunked_sessionize_probe(
     # sentinel chunk last: flushes the final watermark like the house
     # replay staging does.
     spark.createDataFrame(
-        [(hi + datetime.timedelta(days=10), ss.SENTINEL_USER_ID, 0.0)],
+        [(hi + datetime.timedelta(days=10), replay.SENTINEL_USER_ID, 0.0)],
         "ts timestamp, user_id long, value double",
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(scratch, "sent")
@@ -644,13 +645,13 @@ def chunked_sessionize_probe(
         os.path.join(scratch, "sent", sf),
         os.path.join(input_dir, "part-zz-sentinel.parquet"),
     )
-    events = ss._read_replay_stream(spark, input_dir, max_files_per_trigger=1)
-    visits = ss.sessionize_stream(events, ss.DEFAULT_GAP_SECONDS, "1 hour")
+    events = replay._read_replay_stream(spark, input_dir, max_files_per_trigger=1)
+    visits = sessionize_stream(events, DEFAULT_GAP_SECONDS, "1 hour")
     t0 = time.perf_counter()
-    out, stats = ss._run_append_to_files(visits, workdir)
+    out, stats = replay._run_append(visits, workdir)
     n = (
         spark.read.parquet(out)
-        .where(F.col("user_id") != ss.SENTINEL_USER_ID)
+        .where(F.col("user_id") != replay.SENTINEL_USER_ID)
         .count()
     )
     res = {

@@ -474,11 +474,11 @@ def test_tws_rollup_paginated_state_fetch(spark):
     prev = spark.conf.get(key)
     # fresh checkpoint so the paged run re-executes instead of
     # replaying the committed sink
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
-        _TMP_ROOT,
+    from web_analytics_visits_re_processing_spark.streaming.replay import (
+        replay_workdir,
     )
 
-    workdir = os.path.join(_TMP_ROOT, "stream_tws_typerollup", "sf0.001")
+    workdir = replay_workdir("streaming_tws_type_rollup", SF_DIR)
     spark.conf.set(key, "2")
     try:
         shutil.rmtree(os.path.join(workdir, "out"), ignore_errors=True)

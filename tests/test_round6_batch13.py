@@ -105,7 +105,7 @@ def test_streaming_heatmap_state_equals_batch(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from web_analytics_visits_re_processing_spark.sources.tables import load_table
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
         streaming_heatmap_state,
     )
 

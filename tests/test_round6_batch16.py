@@ -147,7 +147,7 @@ def test_streaming_benford_equals_batch(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from web_analytics_visits_re_processing_spark.sources.tables import load_table
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
         streaming_benford_state,
     )
 

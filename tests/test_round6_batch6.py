@@ -79,7 +79,7 @@ def test_bigram_surprisal_arithmetic(spark, tmp_path):
 
 def test_streaming_histogram_state_equals_batch(spark, sf_dir):
     from web_analytics_visits_re_processing_spark.sources.tables import load_table
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
         streaming_histogram_state,
     )
 
@@ -160,7 +160,7 @@ def test_posting_gamma_bits_arithmetic(spark, tmp_path):
 
 def test_streaming_user_totals_equal_batch(spark, sf_dir):
     from web_analytics_visits_re_processing_spark.sources.tables import load_table
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
         streaming_user_totals_state,
     )
 

@@ -79,14 +79,14 @@ def test_km_monotone_and_consistent_with_hazard(spark, sf_dir):
         prev = r["survival_ppm"]
 
 
-def _gsp_fixture(spark, tmp_path):
+def _gsp_fixture(spark, tmp_path, view="view", click="click", purchase="purchase"):
     """4 users, each with symbol sequence [b, c, a, b] where
     b=view:0 (k<25), c=click:1 (25≤k<50), a=purchase:2 (50≤k<75).
     min support 85% of 4 users → a pattern must hit ALL 4."""
     rows, eid = [], 0
     for u in range(1, 5):
         for m, (et, k) in enumerate(
-            [("view", 3), ("click", 30), ("purchase", 60), ("view", 9)]
+            [(view, 3), (click, 30), (purchase, 60), (view, 9)]
         ):
             rows.append((eid, m, u, et, 0.0, '{"k": %d}' % k))
             eid += 1
@@ -118,6 +118,22 @@ def test_gsp_apriori_prunes_and_counts_exactly(spark, tmp_path):
         (c, a, b): (4, 1_000_000),
         (lv, lv, lv): (0, 0),   # the always-on audit row
     }
+
+
+def test_gsp_symbols_with_backslashes_and_quotes_round_trip(spark, tmp_path):
+    """The F1 dictionary is built from typed literals, never spliced
+    into SQL text: event types holding a backslash-b (an escape to
+    the SQL parser), a double backslash and a single quote mine the
+    same lattice as the plain fixture and come back byte-identical."""
+    view, click, purchase = "vi\\bew", "cl\\\\ick", "pur'chase"
+    sf = _gsp_fixture(spark, tmp_path, view, click, purchase)
+    rows = QUERIES["gsp_apriori_sequences"](spark, sf).collect()
+    b, c, a = f"{view}:0", f"{click}:1", f"{purchase}:2"
+    lv = "(levels)"
+    assert {(r["a"], r["b"], r["c"]) for r in rows} == {
+        (b, a, b), (b, c, a), (b, c, b), (c, a, b), (lv, lv, lv)
+    }, rows
+    assert all((r["n_f1"], r["n_f2"], r["n_c3"]) == (3, 6, 10) for r in rows)
 
 
 def test_gsp_fixture_pruning_is_selective(spark, sf_dir):

@@ -167,7 +167,7 @@ def test_streaming_hll_state_bounded_and_equal_to_batch(spark, sf_dir):
         HLL_M,
         hll_registers,
     )
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
         streaming_hll_state,
     )
 

@@ -1,5 +1,6 @@
-"""Streaming semantics: batch ≡ streaming on the same input, and
-append-mode emission with a watermark (sessions emit once closed)."""
+"""Streaming semantics: batch ≡ streaming on the same input (the
+append-mode replays of ``plans/streaming_queries.py``), and append-mode
+emission with a watermark (sessions emit once closed)."""
 
 from __future__ import annotations
 
@@ -12,30 +13,59 @@ from web_analytics_visits_re_processing_spark.operators.sessionize import (
 )
 from web_analytics_visits_re_processing_spark.sources.tables import load_table
 from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
-    read_events_stream,
-    run_stream_to_memory,
     sessionize_stream,
-    streaming_visits_replay,
 )
 
 
-def test_batch_equals_streaming_sessionization(spark, sf_dir):
-    batch = sessionize_visits(
-        load_table(spark, sf_dir, "events"),
-        extra_aggs=[F.sum(F.floor(F.col("value") * 100)).alias("total_value_cents")],
-    ).select(
-        "visit_key",
-        F.unix_micros("visit_start").alias("visit_start_us"),
-        F.unix_micros("visit_end").alias("visit_end_us"),
-        "n_hits",
-        "total_value_cents",
+def run_stream_to_memory(
+    result,
+    query_name: str,
+    output_mode: str = "complete",
+    timeout_s: int = 300,
+) -> None:
+    """Replay a bounded stream to completion into an in-memory table.
+    Raises on timeout instead of silently returning a
+    partially-populated table."""
+    q = (
+        result.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
     )
-    stream = streaming_visits_replay(spark, sf_dir).select(
-        "visit_key", "visit_start_us", "visit_end_us", "n_hits", "total_value_cents"
+    finished = q.awaitTermination(timeout_s)
+    if not finished:
+        q.stop()
+        raise TimeoutError(
+            f"stream {query_name!r} did not finish within {timeout_s}s; "
+            "memory table would be partial"
+        )
+    q.stop()
+
+
+def test_scoped_conf_restores_set_unsets_unset_even_on_raise(spark):
+    """The replay conf scoper: a key that was set gets its value back,
+    a key that was unset is unset again, and both hold when the block
+    raises."""
+    import pytest
+
+    from web_analytics_visits_re_processing_spark.streaming.replay import (
+        scoped_conf,
     )
-    b = {tuple(r) for r in batch.collect()}
-    s = {tuple(r) for r in stream.collect()}
-    assert b == s and len(b) > 0
+
+    set_key = "spark.sql.shuffle.partitions"
+    unset_key = "spark.webanalytics.test.scopedConf"
+    before = spark.conf.get(set_key)
+    assert spark.conf.get(unset_key, None) is None
+    with scoped_conf(spark, {set_key: "3", unset_key: "x"}):
+        assert (spark.conf.get(set_key), spark.conf.get(unset_key)) == ("3", "x")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
+    with pytest.raises(RuntimeError, match="inside the block"):
+        with scoped_conf(spark, {set_key: "5", unset_key: "y"}):
+            raise RuntimeError("inside the block")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
 
 
 def test_append_mode_emits_closed_sessions_once(spark, tmp_path):
@@ -71,9 +101,11 @@ def test_append_replay_matches_batch_and_evicts_state(spark, sf_dir):
     """The gated append-mode replay equals the batch sessionizer AND
     actually evicts session state as the watermark advances (the
     complete-mode replay it replaced kept all state forever)."""
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
-        LAST_APPEND_PROGRESS,
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
         streaming_visits_append,
+    )
+    from web_analytics_visits_re_processing_spark.streaming.replay import (
+        LAST_APPEND_PROGRESS,
     )
 
     batch = sessionize_visits(
@@ -162,9 +194,11 @@ def test_streaming_dedup_equals_batch_distinct_with_eviction(spark, sf_dir):
     """Watermarked dropDuplicates == batch DISTINCT on the same keys,
     and dedup key state is actually evicted (the event-time member of
     the key is what permits it)."""
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
-        LAST_APPEND_PROGRESS,
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
         streaming_dedup_append,
+    )
+    from web_analytics_visits_re_processing_spark.streaming.replay import (
+        LAST_APPEND_PROGRESS,
     )
 
     got = {
@@ -189,7 +223,7 @@ def test_streaming_dedup_equals_batch_distinct_with_eviction(spark, sf_dir):
 def test_streaming_interval_join_equals_batch_join(spark, sf_dir):
     """Stream-stream interval join == the batch time-bounded self-join
     (inner join emits on match; watermark+interval bound the state)."""
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
         streaming_interval_join_append,
     )
 
@@ -231,9 +265,11 @@ def test_sliding_append_replay_equals_batch_and_evicts(spark, sf_dir):
     """The sliding-window append replay equals the batch sliding
     aggregate (sentinel weightless via conditional count) and windows
     are genuinely evicted from state as the watermark advances."""
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
-        LAST_APPEND_PROGRESS,
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
         streaming_sliding_counts_append,
+    )
+    from web_analytics_visits_re_processing_spark.streaming.replay import (
+        LAST_APPEND_PROGRESS,
     )
 
     batch = (
@@ -253,16 +289,16 @@ def test_sliding_append_replay_equals_batch_and_evicts(spark, sf_dir):
     assert LAST_APPEND_PROGRESS["numRowsTotal"] <= 2
 
 
-def test_tumbling_complete_replay_equals_batch(spark, sf_dir):
-    """Complete-mode memory replay of the tumbling-window counts (the
-    TEST utility; the gated query uses the append topology) equals the
-    batch windowed aggregate."""
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
-        streaming_tumbling_counts_replay,
+def test_tumbling_append_replay_equals_batch(spark, sf_dir):
+    """The append-mode replay of the tumbling-window counts (windows
+    evicted as the watermark passes, sentinel window dropped on
+    read-back) equals the batch windowed aggregate."""
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
+        streaming_tumbling_counts_append,
     )
 
     got = {
-        tuple(r) for r in streaming_tumbling_counts_replay(spark, sf_dir).collect()
+        tuple(r) for r in streaming_tumbling_counts_append(spark, sf_dir).collect()
     }
     want = {
         tuple(r)
@@ -292,7 +328,7 @@ def test_streaming_static_enrich_buckets_and_sentinel(spark):
     from pyspark.sql import functions as F
 
     from web_analytics_visits_re_processing_spark.sources.tables import load_table
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
         streaming_static_enrich_append,
     )
 
@@ -313,7 +349,7 @@ def test_cross_device_bitmask_equals_collect_set_arm(spark, sf_dir):
     emit EXACTLY the rows of the collect_set arm it replaced — both
     arms run the full replay on the fixture and compare."""
     from web_analytics_visits_re_processing_spark.plans import round10
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
         streaming_cross_device_append,
     )
 

@@ -155,9 +155,11 @@ def test_streaming_cms_constant_state_across_batches(spark, sf_dir):
         count_min_table,
     )
     from web_analytics_visits_re_processing_spark.sources.tables import load_table
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
-        _TMP_ROOT,
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
         streaming_cms_state,
+    )
+    from web_analytics_visits_re_processing_spark.streaming.replay import (
+        replay_workdir,
     )
 
     got = streaming_cms_state(spark, sf_dir, max_files_per_trigger=1)
@@ -169,9 +171,7 @@ def test_streaming_cms_constant_state_across_batches(spark, sf_dir):
     assert g == w and len(g) > 0
     assert len(g) <= 4 * 64
 
-    state = os.path.join(
-        _TMP_ROOT, "stream_cms", os.path.basename(sf_dir.rstrip("/")) or "sf", "state"
-    )
+    state = os.path.join(replay_workdir("streaming_cms_event_counts", sf_dir), "state")
     versions = [d for d in os.listdir(state) if d.startswith("v")]
     assert len(versions) >= 2, "expected multiple incremental merges"
 

@@ -609,7 +609,7 @@ def _stitched_clusters_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     like ``_stitched_clusters`` so a streaming consumer's per-batch
     replan reads a parquet leaf instead of re-running the window.
     Feeds the bitmask device count in
-    ``streaming/sessionize_stream.streaming_cross_device_append``."""
+    ``plans/streaming_queries.streaming_cross_device_append``."""
     from web_analytics_visits_re_processing_spark.plans.webanalytics import (
         _lp_cached,
     )

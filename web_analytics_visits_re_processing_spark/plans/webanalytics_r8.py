@@ -383,15 +383,21 @@ def q_gsp_apriori_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a string, b string, c string, support long,"
             " support_ppm long, n_f1 long, n_f2 long, n_c3 long",
         )
-    lits = ",".join("'" + s.replace("'", "''") + "'" for s in syms1)
+    # The F1 dictionary as an array of TYPED literals — never spliced
+    # into SQL text, where the parser would read a backslash in a
+    # symbol as an escape (``\b`` → backspace) and change the symbol.
+    _dict = F.array(*map(F.lit, syms1))
     s2a = _persisted(
         "gsp_s2a",
         spark,
         sf_dir,
         lambda: s2.select(
-            F.expr(
-                f"transform(array({lits}), s -> filter(sequence(1,"
-                " size(syms)), i -> element_at(syms, i) = s))"
+            F.transform(
+                _dict,
+                lambda s: F.filter(
+                    F.sequence(F.lit(1), F.size("syms")),
+                    lambda i: F.element_at("syms", i) == s,
+                ),
             ).alias("ma")
         ),
     )
@@ -410,9 +416,12 @@ def q_gsp_apriori_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "ai",
             "bi",
+            # try_element_at: NULL (not an ANSI error) on an absent
+            # symbol's empty position array, whatever order the AND
+            # is evaluated in
             F.expr(
                 "cast(size(_pa) > 0 and size(_pb) > 0"
-                " and element_at(_pb, -1) > element_at(_pa, 1) as long)"
+                " and try_element_at(_pb, -1) > try_element_at(_pa, 1) as long)"
             ).alias("hit"),
         )
     )
@@ -481,7 +490,6 @@ def q_gsp_apriori_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(f2.agg(F.count(F.lit(1)).alias("n_f2"))))
         .crossJoin(F.broadcast(c3.agg(F.count(F.lit(1)).alias("n_c3"))))
     )
-    _dict = F.expr(f"array({lits})")
     mined = (
         scan3.groupBy("ai", "bi", "ci")
         .agg(F.sum("hit").alias("support"))

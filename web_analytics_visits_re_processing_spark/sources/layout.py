@@ -55,7 +55,7 @@ def write_partitioned(
 # FINGERPRINT (mtime+size of every data file under sf_dir) is part of
 # the key so a regenerated fixture re-stages instead of silently
 # serving tables built from the previous round's data — the
-# _prepare_replay_input convention.
+# streaming.replay._prepare_replay_input convention.
 _BUCKETED_CACHE: dict = {}
 
 

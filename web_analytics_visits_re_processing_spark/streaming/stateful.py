@@ -39,12 +39,11 @@ matters more than custom emit predicates.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -145,31 +144,3 @@ def abandoned_sessions_stream(
         )
     )
 
-
-def abandoned_sessions_replay(
-    spark: SparkSession, sf_dir: str, gap_seconds: int = 1800
-) -> DataFrame:
-    """Append-mode replay over the fixture (sentinel-flushed like the
-    other streaming queries — see ``sessionize_stream``)."""
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
-        _TMP_ROOT,
-        SENTINEL_USER_ID,
-        _prepare_replay_input,
-        _read_replay_stream,
-        _run_append_to_files,
-    )
-
-    workdir = os.path.join(
-        _TMP_ROOT, "stream_abandoned", os.path.basename(sf_dir.rstrip("/")) or "sf"
-    )
-    input_dir = _prepare_replay_input(spark, sf_dir, workdir)
-    events = _read_replay_stream(spark, input_dir)
-    result = abandoned_sessions_stream(events, gap_seconds)
-    out, _ = _run_append_to_files(result, workdir)
-    # read back with the stream's own schema — skips a per-call footer
-    # inference pass (see sessionize_stream._read_out)
-    return (
-        spark.read.schema(result.schema)
-        .parquet(out)
-        .where(F.col("user_id") != SENTINEL_USER_ID)
-    )

@@ -42,8 +42,6 @@ protobuf-free custom-stateful path.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Iterator
 from typing import Any
 
@@ -56,6 +54,12 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
     StatefulProcessorHandle,
     TimerValues,
+)
+
+from web_analytics_visits_re_processing_spark.streaming.replay import (
+    SENTINEL_USER_ID,
+    replay_append,
+    scoped_conf,
 )
 
 OUTPUT_SCHEMA = (
@@ -199,14 +203,13 @@ def user_lifetime_stream(
 #    rollup 6.3 both), 4 regresses (chatter serializes). An sf0.01-
 #    vs-sf0.1 A/B showed per-call cost is ~100% fixed machinery
 #    (planning + per-batch store lifecycles + worker spawn), NOT
-#    per-user chatter — so take 8: half the RocksDB store lifecycles
-#    per batch, and strictly better when the driver benches at a
+#    per-user chatter — so the replay harness's 8 stands: half the
+#    RocksDB store lifecycles per batch, and strictly better on a
 #    LOWER core count (16 state tasks would serialize on 4 cores).
 #  - RocksDB changelog checkpointing: each commit ships a delta, not
 #    a full snapshot zip per store per batch (commitTimeMs was ~5.5 s
 #    summed across 16 stores × 2 batches of pure snapshot cost).
 # On a real cluster both map to the same knobs sized to the stream.
-TWS_REPLAY_SHUFFLE_PARTITIONS = "8"
 _TWS_CONFS = {
     "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
@@ -222,61 +225,23 @@ _TWS_CONFS = {
 def _tws_replay(
     spark: SparkSession,
     sf_dir: str,
-    subdir: str,
+    name: str,
     stream_fn,
     max_files_per_trigger: int,
 ) -> DataFrame:
-    """Shared scaffold for the tws gates: stage the sentinel-flushed
-    fixture, scope the RocksDB provider + changelog checkpointing to
-    THIS replay (the other streaming gates are faster on the default
-    in-memory HDFS-backed store — tiny states; RocksDB adds
-    per-partition native stores + maintenance), run append-mode to
-    files, restore every conf."""
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
-        _TMP_ROOT,
-        SENTINEL_USER_ID,
-        _prepare_replay_input,
-        _read_replay_stream,
-        _run_append_to_files,
-    )
+    """Shared scaffold for the tws gates: the sentinel-flushed append
+    replay (``streaming.replay``) with the RocksDB provider + changelog
+    checkpointing scoped to THIS replay (the other streaming gates are
+    faster on the default in-memory HDFS-backed store — tiny states;
+    RocksDB adds per-partition native stores + maintenance)."""
     from web_analytics_visits_re_processing_spark.vendor.protoshim_loader import (
         ensure_worker_protobuf,
     )
 
     ensure_worker_protobuf(spark)  # state client needs protobuf in the worker
-    prev: dict[str, str | None] = {}
-    for k, v in _TWS_CONFS.items():
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-        spark.conf.set(k, v)
-    try:
-        workdir = os.path.join(
-            _TMP_ROOT, subdir, os.path.basename(sf_dir.rstrip("/")) or "sf"
-        )
-        input_dir = _prepare_replay_input(spark, sf_dir, workdir)
-        shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-        events = _read_replay_stream(spark, input_dir, max_files_per_trigger)
-        result = stream_fn(events)
-        out, _ = _run_append_to_files(
-            result,
-            workdir,
-            shuffle_partitions=TWS_REPLAY_SHUFFLE_PARTITIONS,
-        )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    # read back with the stream's own schema — skips a per-call footer
-    # inference pass (see sessionize_stream._read_out)
-    return (
-        spark.read.schema(result.schema)
-        .parquet(out)
-        .where(F.col("user_id") != SENTINEL_USER_ID)
-    )
+    with scoped_conf(spark, _TWS_CONFS):
+        out = replay_append(spark, sf_dir, name, stream_fn, max_files_per_trigger)
+    return out.where(F.col("user_id") != SENTINEL_USER_ID)
 
 
 def user_lifetime_replay(
@@ -293,7 +258,7 @@ def user_lifetime_replay(
     return _tws_replay(
         spark,
         sf_dir,
-        "stream_tws_lifetime",
+        "streaming_tws_user_lifetime",
         lambda events: user_lifetime_stream(events, gap_seconds),
         max_files_per_trigger,
     )
@@ -436,7 +401,7 @@ def user_type_rollup_replay(
     return _tws_replay(
         spark,
         sf_dir,
-        "stream_tws_typerollup",
+        "streaming_tws_type_rollup",
         lambda events: user_type_rollup_stream(events, gap_seconds),
         max_files_per_trigger,
     )
@@ -600,13 +565,13 @@ def combined_replay(
     mtime, which let a later bench/oracle invocation serve both
     gates with zero computation — removed in the r13 optimization
     round: result caching across invocations is gaming, not
-    optimization. (The replay INPUT staging inside ``_tws_replay``
+    optimization. (The replay INPUT staging in ``streaming.replay``
     remains — it is layout plumbing for the file-stream source; the
     stream itself recomputes every time.)"""
     return _tws_replay(
         spark,
         sf_dir,
-        "stream_tws_combined",
+        "streaming_tws_combined",
         lambda events: combined_stream(events, gap_seconds),
         max_files_per_trigger,
     )

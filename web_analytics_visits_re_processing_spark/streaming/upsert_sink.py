@@ -86,32 +86,20 @@ def run_upsert_stream(
     ``output_mode='update'`` is required when ``stream_df`` is itself a
     streaming aggregation (each micro-batch then delivers the changed
     keys' new cumulative values, and latest-per-key merge keeps the
-    most recent one)."""
-    from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
-        REPLAY_SHUFFLE_PARTITIONS,
-    )
-
+    most recent one). Replays of the fixture run this through
+    ``streaming.replay.replay_upsert``, which scopes the stateful-stage
+    width to the stream."""
     writer = stream_df.writeStream.foreachBatch(
         lambda df, _epoch: upsert_batch(df, state_dir, key_cols, order_cols)
     )
     if output_mode is not None:
         writer = writer.outputMode(output_mode)
-    # same scoped stateful-stage width as _run_append_to_files: the
-    # replay starts a fresh checkpoint, so the state partitioning is
-    # free to size to the stream instead of the session-wide 32
-    sess = stream_df.sparkSession
-    _shuffle_key = "spark.sql.shuffle.partitions"
-    _prev_shuffle = sess.conf.get(_shuffle_key)
-    sess.conf.set(_shuffle_key, REPLAY_SHUFFLE_PARTITIONS)
-    try:
-        q = (
-            writer.option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(f"upsert stream did not finish within {timeout_s}s")
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_s):
         q.stop()
-    finally:
-        sess.conf.set(_shuffle_key, _prev_shuffle)
+        raise TimeoutError(f"upsert stream did not finish within {timeout_s}s")
+    q.stop()
