@@ -5,15 +5,24 @@ emission with a watermark (sessions emit once closed)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from web_analytics_visits_re_processing_spark.operators.sessionize import (
     sessionize_visits,
 )
 from web_analytics_visits_re_processing_spark.sources.tables import load_table
+from web_analytics_visits_re_processing_spark.streaming.replay import scoped_conf
 from web_analytics_visits_re_processing_spark.streaming.sessionize_stream import (
+    REPLAY_SHUFFLE_PARTITIONS,
     sessionize_stream,
+)
+
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 )
 
 
@@ -132,6 +141,122 @@ def test_append_replay_matches_batch_and_evicts_state(spark, sf_dir):
     assert LAST_APPEND_PROGRESS["numRowsRemoved"] >= len(b)
     assert LAST_APPEND_PROGRESS["numRowsTotal"] <= 1
     assert LAST_APPEND_PROGRESS["numRowsTotalMax"] >= len(b)
+    # one state partition per core, capped at 8: the stateful stage
+    # runs in one wave
+    width = int(REPLAY_SHUFFLE_PARTITIONS)
+    assert LAST_APPEND_PROGRESS["numStateStoreInstances"] == width
+    assert width <= min(8, len(os.sched_getaffinity(0)))
+
+
+def _write_event_files(src, files, first: int = 0) -> None:
+    """One parquet file per list of ``(event_id, ts, user_id, value)``
+    rows, numbered in order from ``first`` and written with pyarrow (no
+    Spark job)."""
+    os.makedirs(src, exist_ok=True)
+    for i, rows in enumerate(files, first):
+        event_id, ts, user_id, value = (list(c) for c in zip(*rows))
+        table = pa.table(
+            {
+                "event_id": pa.array(event_id, pa.int64()),
+                "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+                "user_id": pa.array(user_id, pa.int64()),
+                "event_type": ["view"] * len(rows),
+                "value": pa.array(value, pa.float64()),
+                "props": ["{}"] * len(rows),
+            }
+        )
+        pq.write_table(table, os.path.join(src, f"part-{i:05d}.parquet"))
+
+
+def _run_sessionize(spark, src, root) -> tuple[str, list]:
+    """Drain ``sessionize_stream`` over the files in ``src`` into an
+    append parquet sink under ``root`` (checkpoint beside it) with
+    availableNow; returns the run id and the progress of the triggers
+    that ran a micro-batch."""
+    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(str(src))
+    q = (
+        sessionize_stream(stream)
+        .writeStream.format("parquet")
+        .option("path", os.path.join(root, "out"))
+        .option("checkpointLocation", os.path.join(root, "ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(300)
+    finally:
+        q.stop()
+    return str(q.runId), [p for p in q.recentProgress if "addBatch" in p["durationMs"]]
+
+
+def test_file_stream_lists_new_files_on_the_driver(spark, tmp_path):
+    """A trigger's new files are listed on the driver: a micro-batch
+    over 40 new files (more than Spark's default listing threshold of
+    32 paths) runs the stream's one job and no file-listing job with
+    one task per path."""
+    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    files = [
+        [(i, base + dt.timedelta(minutes=i), i % 5, 1.0)] for i in range(40)
+    ]
+    _write_event_files(str(tmp_path / "src"), files)
+    run_id, executed = _run_sessionize(spark, tmp_path / "src", str(tmp_path))
+    assert executed and executed[0]["numInputRows"] == 40
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(run_id)
+    assert len(jobs) == len(executed), (len(jobs), len(executed))
+
+
+def test_restart_keeps_state_width_and_emits_each_session_once(spark, tmp_path):
+    """Kill and restart on one checkpoint: a stream started with 8
+    state partitions over half the files, with sessions open across
+    the stop, restarts under ``REPLAY_SHUFFLE_PARTITIONS`` with the 8
+    partitions its checkpoint recorded, and its sink equals the batch
+    sessionizer exactly once."""
+    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    step = dt.timedelta(minutes=20)  # inside the 30-minute gap
+    files = []
+    for k in range(12):
+        rows = []
+        for u in range(1, 31):
+            # every third user skips files 4-7, so it has two sessions
+            # and the first is open at the stop; u > 25 only appears in
+            # the first file, so its session is emitted before the stop
+            if (u % 3 == 0 and 4 <= k <= 7) or (u > 25 and k > 0):
+                continue
+            rows.append((k * 100 + u, base + k * step + dt.timedelta(seconds=u), u, u / 10))
+        files.append(rows)
+    events = [r for rows in files for r in rows]
+    sentinel = [(-1, base + dt.timedelta(days=10), -1, 0.0)]
+    src, root = str(tmp_path / "src"), str(tmp_path)
+    _write_event_files(src, files[:6])
+
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+        _run_sessionize(spark, src, root)
+    emitted_before_stop = spark.read.parquet(os.path.join(root, "out")).count()
+
+    # the stream is stopped, so the rest can be written in place
+    _write_event_files(src, files[6:] + [sentinel], first=6)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": REPLAY_SHUFFLE_PARTITIONS}):
+        _, executed = _run_sessionize(spark, src, root)
+    widths = {op["numStateStoreInstances"] for p in executed for op in p["stateOperators"]}
+    assert widths == {8}
+
+    cols = ["visit_key", "user_id", "visit_start", "visit_end", "n_hits", "total_value_cents"]
+    got = (
+        spark.read.parquet(os.path.join(root, "out"))
+        .where(F.col("user_id") != -1)
+        .select(cols)
+        .collect()
+    )
+    want = sessionize_visits(
+        spark.createDataFrame(
+            [(e, ts, u, "view", v, "{}") for e, ts, u, v in events], EVENTS_SCHEMA
+        ),
+        extra_aggs=[F.sum(F.floor(F.col("value") * 100)).alias("total_value_cents")],
+    ).select(cols).collect()
+    assert 0 < emitted_before_stop < len(want)
+    assert len({r["visit_key"] for r in got}) == len(got)
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def test_stateful_abandonment_across_batches(spark, tmp_path):

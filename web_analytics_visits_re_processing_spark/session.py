@@ -14,6 +14,16 @@ The knobs below are chosen for correctness-at-scale first:
 - **AQE may re-plan cached plans**, so a persisted frame read by
   several sinks keeps AQE's coalesced partitions instead of one task
   and one output file per shuffle partition.
+- **New files are listed on the driver** up to 1,024 paths
+  (``spark.sql.sources.parallelPartitionDiscovery.threshold``; Spark's
+  default is 32). A file stream source passes each trigger's new files,
+  which it has already found, as explicit paths; above the threshold
+  Spark lists them again through a job with one task per path. On a
+  4-core host (``local[4]``, local disk, warm JVM) the driver lists 60
+  files in 48-69 ms and 1,000 in 0.18-0.21 s, where the job takes
+  0.49-0.63 s and 3.9-4.4 s for the same files. On an object store
+  with thousands of new files per trigger, pass a lower value through
+  ``extra_conf``.
 - ``spark.sql.shuffle.partitions`` defaults to 32 here (AQE coalesces
   it per stage); on a real cluster you would size it so each
   post-shuffle partition is ~128-512 MB (e.g. 100 TB input with heavy
@@ -61,6 +71,7 @@ def get_spark(
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.shuffle.partitions": str(
             shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
