@@ -4,8 +4,12 @@
 
     python -m web_analytics_visits_re_processing_spark.cli \
         --input data/feed*.tsv --output out/ [--gap-seconds 1800]
-        [--encoding ISO-8859-1] [--format csv|parquet]
+        [--encoding ISO-8859-1] [--format csv|parquet|json]
         [--keep-duplicate-visitors] [--strict-reference-mode]
+
+A run that launches the driver JVM stops its session and that JVM
+before it returns, so the JVM's class-data archive is written and
+published (``session``). A session the caller already runs is left up.
 """
 
 from __future__ import annotations
@@ -13,8 +17,10 @@ from __future__ import annotations
 import argparse
 import sys
 
+from pyspark import SparkContext
+
 from web_analytics_visits_re_processing_spark.pipeline import run_visits_pipeline
-from web_analytics_visits_re_processing_spark.session import get_spark
+from web_analytics_visits_re_processing_spark.session import get_spark, stop_jvm
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -31,17 +37,22 @@ def main(argv: list[str] | None = None) -> int:
                    help="also drop rows the reference's parser would")
     args = p.parse_args(argv)
 
+    launches_jvm = SparkContext._gateway is None
     spark = get_spark(app_name="visits-pipeline", master=args.master)
-    counts = run_visits_pipeline(
-        spark,
-        input_path=args.input,
-        output_path=args.output,
-        gap_seconds=args.gap_seconds,
-        encoding=args.encoding,
-        dedup_visitors=not args.keep_duplicate_visitors,
-        output_format=args.format,
-        strict_reference_mode=args.strict_reference_mode,
-    )
+    try:
+        counts = run_visits_pipeline(
+            spark,
+            input_path=args.input,
+            output_path=args.output,
+            gap_seconds=args.gap_seconds,
+            encoding=args.encoding,
+            dedup_visitors=not args.keep_duplicate_visitors,
+            output_format=args.format,
+            strict_reference_mode=args.strict_reference_mode,
+        )
+    finally:
+        if launches_jvm:
+            stop_jvm()
     for name, n in counts.items():
         print(f"{name}: {n} rows")
     return 0

@@ -29,15 +29,42 @@ The knobs below are chosen for correctness-at-scale first:
   post-shuffle partition is ~128-512 MB (e.g. 100 TB input with heavy
   reduction → tens of thousands of partitions), or simply let AQE
   coalesce from a high initial number.
+- **The driver JVM starts from a class-data-sharing archive** (JDK
+  dynamic AppCDS, see ``cds``) when ``get_spark`` launches it: on a
+  4-core host, set-up (session plus first action) falls from ~8.4 s to
+  ~4.5 s. The archive lives in
+  ``$XDG_CACHE_HOME/web_analytics_visits_re_processing_spark/cds/``
+  (default ``~/.cache/...``), one per JDK and Spark jar list. The first
+  run on a host records it: about +3 s of set-up, and 10-20 s at exit
+  while the JVM dumps 150-220 MB (``stop_jvm`` or the process's exit
+  waits for it). The recording JVM also runs slower while it lives
+  when it compiles many distinct queries: a 20-test registry module
+  took 81-84 s against 62-68 s. The daily job's warm jobs were not
+  slower. Delete that directory to clear the cache. To opt
+  out, pass ``-Xshare:off`` (or a ``-XX:SharedArchiveFile`` /
+  ``-XX:ArchiveClassesAtExit`` of your own) in
+  ``spark.driver.extraJavaOptions``; a conf dir with real settings
+  also turns it off. A truncated archive that crashes the JVM is
+  deleted and the launch retried without it.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import subprocess
 
+from pyspark import SparkContext
+from pyspark.errors import PySparkRuntimeError
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
+from web_analytics_visits_re_processing_spark import cds
+
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# A JVM that records a CDS archive dumps it after stdin closes: 10-20 s
+# for 150-220 MB on a 4-core host.
+JVM_EXIT_TIMEOUT_S = 120
 
 
 def get_spark(
@@ -54,10 +81,6 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None and cpus:
         master = f"local[{cpus}]"
-
-    builder = SparkSession.builder.appName(app_name)
-    if master:
-        builder = builder.master(master)
 
     conf = {
         "spark.sql.session.timeZone": "UTC",
@@ -86,6 +109,89 @@ def get_spark(
     }
     if extra_conf:
         conf.update(extra_conf)
+    launch = None
+    # CDS applies only when this call launches the driver JVM: no
+    # gateway yet, and none handed over by spark-submit.
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        launch = cds.plan(
+            _find_spark_home(),
+            conf.get("spark.driver.extraJavaOptions", ""),
+            conf.get("spark.driver.extraClassPath", ""),
+        )
+    if launch is None:
+        return _get_or_create(app_name, master, conf)
+    logs = cds.crash_logs()
+    try:
+        spark = _launch(app_name, master, conf, launch)
+    except PySparkRuntimeError as exc:
+        if exc.getCondition() != "JAVA_GATEWAY_EXITED":
+            raise
+        cds.discard(launch, logs)
+        return _get_or_create(app_name, master, conf)
+    if launch.recording is not None:
+        atexit.register(_publish_at_exit, SparkContext._gateway, launch)
+    return spark
+
+
+def _get_or_create(app_name: str, master: str | None, conf: dict[str, str]) -> SparkSession:
+    builder = SparkSession.builder.appName(app_name)
+    if master:
+        builder = builder.master(master)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _launch(
+    app_name: str, master: str | None, conf: dict[str, str], launch: cds.Plan
+) -> SparkSession:
+    """Launch the driver JVM with the caller's Java options plus the CDS
+    flag, and the cache's empty conf dir in place of the templates-only
+    one; the process environment is restored afterwards."""
+    options = f"{conf.get('spark.driver.extraJavaOptions', '')} {launch.java_option}"
+    conf = {**conf, "spark.driver.extraJavaOptions": options.strip()}
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = launch.conf_dir
+    try:
+        return _get_or_create(app_name, master, conf)
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+
+
+def stop_jvm() -> None:
+    """Stop the session and the driver JVM this process launched, and
+    wait for the JVM to exit; a JVM recording a CDS archive writes it
+    as it exits. A JVM handed over by spark-submit keeps running."""
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return
+    proc = gateway.proc
+    running = proc is None or proc.poll() is None
+    if running:
+        if SparkSession._instantiatedSession is not None:
+            SparkSession._instantiatedSession.stop()
+        elif SparkContext._active_spark_context is not None:
+            SparkContext._active_spark_context.stop()
+    if proc is None:
+        return
+    if running:
+        gateway.shutdown()
+    SparkContext._gateway = SparkContext._jvm = None
+    proc.stdin.close()
+    proc.wait(timeout=JVM_EXIT_TIMEOUT_S)
+
+
+def _publish_at_exit(gateway, launch: cds.Plan) -> None:
+    """atexit hook of a recording launch: stop its JVM if still up, then
+    publish the archive if the JVM exited cleanly."""
+    try:
+        if SparkContext._gateway is gateway:
+            stop_jvm()
+        code = gateway.proc.wait(timeout=JVM_EXIT_TIMEOUT_S)
+    except subprocess.TimeoutExpired:
+        return
+    if code == 0:
+        cds.publish(launch)
