@@ -25,6 +25,10 @@ direction comes from ``better``) and the verdict:
   parent (then ``flat``);
 - ``flat``: otherwise.
 
+The same line counts the pairs that the side which ran first won and
+lost. Run order alternates, so a count near all of the pairs shows
+that the order, not the code, decided them.
+
 Drift probes (``host drift probe`` in the run's notes) are listed per
 side. A run that exits 2 (the open-loop generator fell behind) is
 reported and its pair left out. Exits 1 if any run crashed or failed
@@ -89,6 +93,17 @@ def verdict(parent: list[float], change: list[float], better: str, bound: float)
     }
 
 
+def first_run_wins(
+    parent: list[float], change: list[float], parent_first: list[bool], better: str
+) -> tuple[int, int]:
+    """(won, lost): the pairs in which the side that ran first read
+    better, and worse, than the side that ran second."""
+    sign = 1.0 if better == "higher" else -1.0
+    diffs = [sign * (p - c if pf else c - p)
+             for p, c, pf in zip(parent, change, parent_first)]
+    return sum(d > 0 for d in diffs), sum(d < 0 for d in diffs)
+
+
 def export_parent(rev: str, dest: str) -> None:
     """The committed files of ``rev`` in ``dest``."""
     archive = subprocess.run(
@@ -139,8 +154,9 @@ def main(argv: list[str] | None = None) -> int:
         export_parent(args.parent, tmp)
         for i in range(args.pairs):
             seed = args.seed0 + i
-            pair = {}
-            for side in SIDES if i % 2 == 0 else SIDES[::-1]:
+            order = SIDES if i % 2 == 0 else SIDES[::-1]
+            pair = {"first": order[0]}
+            for side in order:
                 rec = run_once(roots[side], args.workload, seed, seconds)
                 pair[side] = rec
                 print("run " + json.dumps({"seed": seed, "side": side, **rec}), flush=True)
@@ -158,9 +174,11 @@ def main(argv: list[str] | None = None) -> int:
     if runs:
         for m in spec["end_to_end"]:
             name = m["name"]
-            v = verdict([r["parent"]["metrics"][name] for r in runs],
-                        [r["change"]["metrics"][name] for r in runs],
-                        m["better"], m["bound"])
+            parent = [r["parent"]["metrics"][name] for r in runs]
+            change = [r["change"]["metrics"][name] for r in runs]
+            v = verdict(parent, change, m["better"], m["bound"])
+            first_won, first_lost = first_run_wins(
+                parent, change, [r["first"] == "parent" for r in runs], m["better"])
             (pq1, pmed, pq3), (cq1, cmed, cq3) = v["parent"], v["change"]
             print(
                 f"{name}@{args.workload}: parent {pmed:.4g} [{pq1:.4g}-{pq3:.4g}] "
@@ -168,7 +186,8 @@ def main(argv: list[str] | None = None) -> int:
                 f"change {cmed:.4g} [{cq1:.4g}-{cq3:.4g}] "
                 f"IQR/med {(cq3 - cq1) / cmed if cmed else math.inf:.3f}; "
                 f"change {(cmed - pmed) / pmed if pmed else math.inf:+.1%}; "
-                f"won {v['wins']} lost {v['losses']} tied {v['ties']} "
+                f"won {v['wins']} lost {v['losses']} tied {v['ties']}; "
+                f"first run won {first_won} lost {first_lost} "
                 f"({m['better']} is better, bound {m['bound']}): {v['verdict']}"
             )
     return 1 if failed else 0

@@ -1,7 +1,8 @@
 """The verdict rule of ``scripts/ab_pairs.py`` (no Spark): a gain needs
 nine tenths of the pairs and a median move beyond the parent's IQR; a
 median worse than the bound is worse; a spread wider than the bound is
-unresolved unless every change run beats every parent run."""
+unresolved unless every change run beats every parent run. The run-order
+count credits each pair to the side that ran first."""
 
 from __future__ import annotations
 
@@ -68,3 +69,15 @@ def test_quartiles_and_mismatched_sides():
     assert ab.quartiles([7.0]) == (7.0, 7.0, 7.0)
     with pytest.raises(ValueError):
         ab.verdict([1.0], [1.0, 2.0], "higher", 0.25)
+
+
+def test_first_run_wins_counts_the_side_that_ran_first():
+    parent_first = [True, False, True, False]
+    # the side that ran first read higher in every pair
+    parent, change = [12.0, 10.0, 12.0, 10.0], [10.0, 12.0, 10.0, 12.0]
+    assert ab.first_run_wins(parent, change, parent_first, "higher") == (4, 0)
+    assert ab.first_run_wins(parent, change, parent_first, "lower") == (0, 4)
+    # the change read higher in every pair: order split them evenly
+    assert ab.first_run_wins([10.0] * 4, [12.0] * 4, parent_first, "higher") == (2, 2)
+    # ties count for neither side
+    assert ab.first_run_wins([10.0] * 4, [10.0] * 4, parent_first, "higher") == (0, 0)

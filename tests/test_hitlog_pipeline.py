@@ -203,7 +203,8 @@ def test_visitor_rows_survive_bad_timestamps(spark, tmp_path):
     """Reference branch order (main.py:214 vs :216): visitors are
     emitted before the timestamp stage, so a row with an unparseable
     ts yields a visitor but never a hit or visit — also for a user
-    whose bad-ts rows sit beside good ones."""
+    whose bad-ts rows sit beside good ones. Deduplicated by default;
+    with ``dedup_visitors=False`` every line keeps its visitor row."""
     p = tmp_path / "badts.tsv"
     p.write_text(
         "100\tu1\ta\t\t\t1\tp\ts\tibmA\tscvA\n"
@@ -212,6 +213,7 @@ def test_visitor_rows_survive_bad_timestamps(spark, tmp_path):
         "200\tu3\tc\t\t\t1\tp\ts\tibmC\tscvC\n"
         "\tu3\tc\t\t\t1\tp\ts\tibmD\tscvD\n"  # bad-ts-only visitor of u3
         "4000\tu3\tc\t\t\t1\tp\ts\tibmC\tscvC\n"  # gap 3800 s: 2nd visit
+        "300\tu4\td\t\t\t1\tp\ts\tibmE\n"  # short: no row anywhere
     )
     out = tmp_path / "out"
     counts = run_visits_pipeline(spark, str(p), str(out))
@@ -231,6 +233,21 @@ def test_visitor_rows_survive_bad_timestamps(spark, tmp_path):
     }
     hit_keys = sorted(r[0] for r in spark.read.csv(str(out / "hits")).collect())
     assert hit_keys == ["u1_a_100", "u3_c_200", "u3_c_4000"]
+
+    # The faithful mode (--keep-duplicate-visitors): one visitors row per
+    # non-short line, bad-ts lines included; hits and visits do not change.
+    faithful = tmp_path / "faithful"
+    counts = run_visits_pipeline(spark, str(p), str(faithful), dedup_visitors=False)
+    assert counts == {"hits": 3, "visits": 3, "visitors": 6}
+    visitors = sorted(tuple(r) for r in spark.read.csv(str(faithful / "visitors")).collect())
+    assert visitors == [
+        ("u1_a", "ibmA", "scvA"),
+        ("u2_b", "ibmB", "scvB"),
+        ("u3_c", "ibmC", "scvC"),
+        ("u3_c", "ibmC", "scvC"),
+        ("u3_c", "ibmC", "scvC"),
+        ("u3_c", "ibmD", "scvD"),
+    ]
 
 
 def test_parser_roundtrip_fuzz(spark):

@@ -169,7 +169,8 @@ def test_truncated_archive_falls_back_to_a_plain_launch(cli_run, tmp_path):
 
 def test_stale_archive_still_gives_a_session(cli_run, tmp_path):
     """An archive recorded under another class path, at this key's name:
-    the JVM declines to map it and starts without CDS."""
+    the JVM declines to map it, starts without CDS, and the archive is
+    deleted."""
     (name,) = _cds_files(cli_run["cache"])
     cache = str(tmp_path / "xdg")
     stale = _cds_path(cache, name)
@@ -190,6 +191,8 @@ def test_stale_archive_still_gives_a_session(cli_run, tmp_path):
     })
     assert f"-XX:SharedArchiveFile={stale}" in got["args"]
     assert MAPPED not in log.read_text()
+    # The JVM did not map it, so it is gone and the next launch records anew.
+    assert _cds_files(cache) == []
 
 
 def test_user_conf_dir_is_kept_and_cds_skipped(tmp_path):

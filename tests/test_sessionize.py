@@ -1,64 +1,108 @@
-"""Equivalence property: the lag/running-sum sessionization (oracle
-bridge) must match native session_window on adversarial inputs."""
+"""Session numbering: with_session_seq against a plain-Python gap walk,
+and Spark's native session_window against both, on adversarial inputs;
+plus the incremental merge and the null-ts policy."""
 
 from __future__ import annotations
 
 
+def _gap_walk(rows, gap):
+    """Plain-Python session numbering of ``(event_id, user, t)`` rows,
+    ``t`` an integer: per user in ``(t, event_id)`` order, a row more
+    than ``gap`` after the previous one starts the next session."""
+    seqs, last = {}, {}
+    for event_id, user, t in sorted(rows, key=lambda r: (r[1], r[2], r[0])):
+        prev = last.get(user)
+        seq = 0 if prev is None else prev[1] + (t - prev[0] > gap)
+        last[user] = (t, seq)
+        seqs[event_id] = seq
+    return seqs
 
 
 def test_lag_formulation_equals_session_window_fuzz(spark):
-    """Property: the lag/running-sum sessionization (the DuckDB-oracle
-    bridge, with_session_columns) and Spark's native session_window
-    aggregate produce IDENTICAL visit sets on adversarial inputs —
-    including events landing exactly at prev_ts + gap (merge, not
-    split) and duplicate timestamps."""
+    """Property: with_session_seq (the lag/running-sum numbering the
+    DuckDB oracles spell in SQL) numbers sessions exactly as a
+    plain-Python gap walk, and Spark's native session_window aggregate
+    (sessionize_visits) cuts the same visits. Steps land exactly at the
+    gap (merge, not split), 1 µs or 1 s either side, at half the gap,
+    or on a tie; inputs are integral epoch seconds and sub-second
+    timestamps, also in a year where a double compare would blur 1 µs."""
     import datetime as dt
 
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
-    from pyspark.sql import functions as F
 
     from web_analytics_visits_re_processing_spark.operators.sessionize import (
         sessionize_visits,
-        with_session_columns,
+        with_session_seq,
     )
 
-    base = dt.datetime(2024, 1, 1)
-    gap = 60  # seconds, small so fuzz offsets straddle it
-    # offsets in ticks of gap/2 → exact-boundary collisions are LIKELY
-    events = st.lists(
-        st.tuples(st.integers(0, 2), st.integers(0, 40)),
-        min_size=1,
-        max_size=25,
+    gap = 60  # seconds, small so fuzz steps straddle it
+    gap_us = gap * 1_000_000
+    steps_s = st.sampled_from([0, 1, gap // 2, gap - 1, gap, gap + 1, 5 * gap])
+    steps_us = st.sampled_from(
+        [0, 1, gap_us // 2, gap_us - 1, gap_us, gap_us + 1, 5 * gap_us]
     )
 
-    @given(events)
+    def walk(users_steps):
+        """(event_id, user, t): each user's t is its running step sum."""
+        rows, t = [], {}
+        for event_id, (user, start, step) in enumerate(users_steps):
+            t[user] = t.get(user, start) + step
+            rows.append((event_id, user, t[user]))
+        return rows
+
+    def numbered(df):
+        got = with_session_seq(df, gap_seconds=gap, order_cols=["event_id"])
+        return {r["event_id"]: r["session_seq"] for r in got.collect()}
+
+    @given(st.lists(st.tuples(st.integers(0, 2), st.integers(1_700_000_000, 1_700_000_100), steps_s),
+                    min_size=1, max_size=25))
+    @settings(max_examples=10, deadline=None)
+    def check_seconds(evs):
+        rows = walk(evs)
+        df = spark.createDataFrame(rows, "event_id long, user_id long, ts long")
+        assert numbered(df) == _gap_walk(rows, gap)
+
+    # In 2400, epoch micros exceed 2**53: a double of them, or of epoch
+    # seconds, no longer tells a step of gap + 1 µs from one of gap.
+    bases = st.sampled_from([dt.datetime(2024, 1, 1), dt.datetime(2400, 1, 1)])
+
+    @given(bases, st.lists(st.tuples(st.integers(0, 2), st.integers(0, 999_999), steps_us),
+                           min_size=1, max_size=25))
+    @example(dt.datetime(2400, 1, 1), [(0, 0, 0), (0, 0, gap_us + 1)])
     @settings(max_examples=15, deadline=None)
-    def check(evs):
-        rows = [
-            (u, base + dt.timedelta(seconds=t * gap / 2), 1.0)
-            for u, t in evs
-        ]
-        df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-        native = {
+    def check_micros(base, evs):
+        rows = walk(evs)
+        df = spark.createDataFrame(
+            [(i, u, base + dt.timedelta(microseconds=t)) for i, u, t in rows],
+            "event_id long, user_id long, ts timestamp",
+        )
+        want = _gap_walk(rows, gap_us)
+        assert numbered(df) == want
+        sessions = {}
+        for i, u, t in rows:
+            sessions.setdefault((u, want[i]), []).append(t)
+        assert {
             (r["user_id"], r["visit_start"], r["visit_end"], r["n_hits"])
             for r in sessionize_visits(df, gap_seconds=gap).collect()
+        } == {
+            (u, base + dt.timedelta(microseconds=min(ts)),
+             base + dt.timedelta(microseconds=max(ts)), len(ts))
+            for (u, _), ts in sessions.items()
         }
-        lagged = {
-            tuple(r)
-            for r in with_session_columns(df, gap_seconds=gap)
-            .groupBy("user_id", "session_seq")
-            .agg(
-                F.min("ts").alias("s"),
-                F.max("ts").alias("e"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select("user_id", "s", "e", "n")
-            .collect()
-        }
-        assert native == lagged
 
-    check()
+    check_seconds()
+    check_micros()
+
+
+def test_session_seq_rejects_a_ts_it_cannot_compare_in_integers(spark):
+    import pytest
+
+    from web_analytics_visits_re_processing_spark.operators.sessionize import with_session_seq
+
+    df = spark.createDataFrame([(1, 1.5)], "user_id long, ts double")
+    with pytest.raises(TypeError, match="ts must be a timestamp or integral"):
+        with_session_seq(df)
 
 
 def test_dynamic_gap_running_end_merges_past_short_gap(spark):

@@ -23,6 +23,13 @@ exits, and ``publish`` moves it into place.
   Spark would read nothing from it; the launch then points
   ``SPARK_CONF_DIR`` at the cache's empty ``conf/`` dir. Any other conf
   dir is left alone, and CDS is skipped.
+- **Stale archives.** An archive at the key's name can still be one
+  the JVM declines to map, e.g. one recorded under a class path or JVM
+  setting the key does not cover; the JVM then logs "Unable to use
+  shared archive" and starts without it. After a launch meant to map
+  it, ``drop_unmapped`` reads the JVM's ``/proc/<pid>/maps``, which
+  lists the archive only when it is mapped, and deletes an archive
+  that is not listed, so the next launch records a new one.
 - **Publication.** The JVM writes ``<key>.<pid>.tmp`` as it exits;
   after a clean exit the file is renamed to ``<key>.jsa`` in one
   ``os.replace``, so only complete archives sit at the final name.
@@ -142,6 +149,22 @@ def discard(launch: Plan, logs_before: set[str]) -> None:
             os.remove(path)
         except FileNotFoundError:
             pass
+
+
+def drop_unmapped(launch: Plan, pid: int) -> None:
+    """Delete ``launch.archive`` unless the running JVM ``pid`` maps it.
+    Where the JVM's memory map cannot be read, the archive is kept."""
+    try:
+        with open(f"/proc/{pid}/maps") as fh:
+            maps = fh.read()
+    except OSError:
+        return
+    if launch.archive in maps or os.path.realpath(launch.archive) in maps:
+        return
+    try:
+        os.remove(launch.archive)
+    except FileNotFoundError:
+        pass
 
 
 def publish(launch: Plan) -> None:

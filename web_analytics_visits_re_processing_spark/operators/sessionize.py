@@ -1,29 +1,30 @@
 """Event-time sessionization ("visits"), the reference's core computation.
 
-Reference semantics (``/root/reference/main.py:207-234``): hits are
-keyed by ``user_id``, windowed into 30-minute-gap sessions
-(``beam.WindowInto(window.Sessions(1800))``, ``main.py:217``), grouped
-(``main.py:218``), then each group yields
-``visit_start = min(ts)``/``visit_end = max(ts)`` and a synthesized
-``visit_key = user_id + '_' + visit_start``
-(``main.py:113-146``), with the key stamped back on every hit.
+The reference (``main.py:207-234``) keys hits by ``user_id``, windows
+them into 30-minute-gap sessions (``window.Sessions(1800)``,
+``main.py:217``), groups them and gives each group ``visit_start =
+min(ts)``, ``visit_end = max(ts)`` and ``visit_key = user_id + '_' +
+visit_start`` (``main.py:113-146``), stamping the key on every hit.
 
-Two Spark-first formulations, both here:
+**The rule.** Within one user, ordered by ``ts`` (then by any tie-break
+columns), a hit starts a new visit when its gap to the previous hit is
+strictly greater than ``gap_seconds``; a hit exactly at the gap stays
+in the open visit. The gap is compared in integers: epoch micros for
+timestamps, the raw value for integral epoch seconds. A null ``ts``
+belongs to no visit.
 
-1. ``sessionize_visits`` — ``groupBy(user, session_window(ts, gap))``.
-   Idiomatic, streaming-compatible (the same expression runs under
-   ``readStream`` + ``withWatermark``), benefits from partial
-   aggregation. One hash shuffle on the user key.
+``with_session_seq`` numbers sessions by this rule (``lag`` finds the
+boundaries, a running sum numbers them) and is the only code that
+does. ``with_session_columns`` (the paper's job) and every registry
+query that groups by ``(user_id, session_seq)`` build on it. The DuckDB
+oracles spell the same lag/running sum in SQL.
 
-2. ``with_session_columns`` — the window-function formulation
-   (``lag``-gap detection + running-sum session ids + per-session
-   min/max over the same partitioning). This is how hits keep their
-   ``visit_key`` WITHOUT the reference's collect-the-group-then-explode
-   round-trip (``main.py:115-146``, which materializes each session in
-   one worker's memory — its mega-session OOM risk). Here every step
-   is a window function over the same ``user_id`` exchange: **one
-   shuffle, one sort, zero Python**, and Tungsten spills if a session
-   doesn't fit.
+``sessionize_visits`` aggregates the same visits with Spark's
+``session_window``, the form that also runs under ``readStream`` +
+``withWatermark`` (``streaming.sessionize_stream``). Spark merges
+session windows in micros and joins an event landing exactly at a
+window's end, so its visits are the ones ``with_session_seq`` numbers;
+``tests/test_sessionize.py`` pins both against a plain-Python gap walk.
 
 Divergences from the reference, both deliberate (SURVEY §4.3):
 
@@ -32,8 +33,8 @@ Divergences from the reference, both deliberate (SURVEY §4.3):
   epoch-seconds strings, correct for everything else.
 - Rows with null/unparseable timestamps never join a visit (the
   parser counts them; ``main.py:93`` would raise on non-numeric).
-  ``sessionize_visits`` drops them; ``with_session_columns`` keeps them
-  with null session columns so one frame can still feed the visitors
+  ``sessionize_visits`` drops them; ``with_session_seq`` keeps them
+  with a null ``session_seq`` so one frame can still feed the visitors
   sink, and ``visits_from_hits`` skips them.
 
 Scale notes (100 TB): the only shuffle is on the user key. Web-scale
@@ -49,11 +50,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-DEFAULT_GAP_SECONDS = 1800  # 30 min, /root/reference/main.py:207
-
-
-def _gap_str(gap_seconds: int) -> str:
-    return f"{int(gap_seconds)} seconds"
+DEFAULT_GAP_SECONDS = 1800  # 30 min, the reference's main.py:207
 
 
 def visit_key_col(user_col: Column, visit_start_col: Column) -> Column:
@@ -74,15 +71,14 @@ def sessionize_visits(
     gap_seconds: int = DEFAULT_GAP_SECONDS,
     extra_aggs: list[Column] | None = None,
 ) -> DataFrame:
-    """One row per (user, session): the reference's ``visits`` output.
+    """One row per (user, visit): the reference's ``visits`` output,
+    ``visit_key, user, visit_start, visit_end, n_hits`` and then
+    ``extra_aggs``.
 
-    ``groupBy(user, session_window)`` — works identically in batch and
-    Structured Streaming (add ``withWatermark`` upstream for the
-    latter). Events start a new session only when the gap between
-    consecutive timestamps STRICTLY exceeds ``gap_seconds`` (verified
-    empirically: Spark merges an event landing exactly at the previous
-    window's end; Beam's end-exclusive ``Sessions`` would split there —
-    a documented exactly-at-gap edge-case divergence).
+    ``groupBy(user, session_window(ts, gap))`` over the non-null-``ts``
+    rows: one hash shuffle on the user key, with partial aggregation.
+    The same expression runs in batch and, over a ``withWatermark``
+    input, in Structured Streaming. ``ts`` must be a timestamp.
     """
     aggs = [
         F.min(ts_col).alias("visit_start"),
@@ -93,7 +89,7 @@ def sessionize_visits(
         aggs.extend(extra_aggs)
     out = (
         df.where(F.col(ts_col).isNotNull())
-        .groupBy(F.col(user_col), F.session_window(F.col(ts_col), _gap_str(gap_seconds)))
+        .groupBy(F.col(user_col), F.session_window(F.col(ts_col), f"{int(gap_seconds)} seconds"))
         .agg(*aggs)
     )
     return out.select(
@@ -106,6 +102,47 @@ def sessionize_visits(
     )
 
 
+def _epoch_int(df: DataFrame, ts_col: str, col: Column) -> tuple[Column, int]:
+    """``col``, of ``ts_col``'s type, as the integer the gap is compared
+    in (epoch micros, or the epoch seconds themselves), and one second
+    in that unit."""
+    dtype = df.schema[ts_col].dataType
+    if isinstance(dtype, T.TimestampType):
+        return F.unix_micros(col), 1_000_000
+    if isinstance(dtype, T.IntegralType):
+        return col, 1
+    raise TypeError(
+        f"{ts_col} must be a timestamp or integral epoch seconds, not {dtype.simpleString()}"
+    )
+
+
+def with_session_seq(
+    df: DataFrame,
+    user_col: str = "user_id",
+    ts_col: str = "ts",
+    gap_seconds: int = DEFAULT_GAP_SECONDS,
+    order_cols: list[str] | None = None,
+) -> DataFrame:
+    """Add ``session_seq``, each row's visit number within its user
+    (from 0) by the module's rule, ``order_cols`` breaking ``ts`` ties.
+    A null ``ts`` gives a null ``session_seq`` and does not shift the
+    numbering. One ``user_col`` exchange, which any later window or
+    ``groupBy`` keyed by ``(user_col, session_seq)`` reuses.
+    """
+    t, second = _epoch_int(df, ts_col, F.col(ts_col))
+    w_user = Window.partitionBy(user_col).orderBy(ts_col, *(order_cols or []))
+    is_new = t - F.lag(t).over(w_user) > F.lit(gap_seconds * second)
+    return df.withColumn(
+        "session_seq",
+        F.when(
+            F.col(ts_col).isNotNull(),
+            F.sum(F.when(is_new, 1).otherwise(0)).over(
+                w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            ),
+        ),
+    )
+
+
 def with_session_columns(
     df: DataFrame,
     user_col: str = "user_id",
@@ -115,84 +152,49 @@ def with_session_columns(
 ) -> DataFrame:
     """Stamp ``session_seq`` / ``visit_start`` / ``visit_end`` /
     ``visit_key`` onto every hit (the reference's R7+R10 without
-    collect/explode).
-
-    Window-function formulation: ``lag`` finds gap boundaries, a
-    running sum numbers sessions, and per-session min/max run over the
-    *same* ``user_id`` partitioning, so Spark plans ONE exchange — the
-    ``(user, session_seq)`` windows are satisfied by the ``user`` hash
-    partitioning (ClusteredDistribution on a superset of keys).
-
-    This lag/running-sum construction is also the exact ANSI-SQL
-    equivalent used by the DuckDB oracle (DuckDB has no
-    ``session_window``), so it doubles as the correctness bridge.
-
-    ``order_cols`` breaks timestamp ties deterministically (defaults to
-    none — min/max/key results are tie-insensitive anyway).
-
-    Rows with a null ``ts`` are kept, with null ``session_seq``,
-    ``visit_start``, ``visit_end`` and ``visit_key``. They sort first in
-    the user window and would otherwise join the user's first visit.
+    collect/explode): ``with_session_seq``, then per-visit min/max over
+    ``(user, session_seq)`` windows that the ``user`` hash partitioning
+    already satisfies, so one exchange and one sort, no Python. Unlike
+    the reference's collect-then-explode (``main.py:115-146``), no
+    session must fit in one worker's memory. Null-``ts`` rows are kept
+    with null session columns.
     """
-    ts = F.col(ts_col)
-    w_user = Window.partitionBy(user_col).orderBy(ts_col, *(order_cols or []))
-    # Strict > matches Spark's session_window merge rule (an event at
-    # exactly prev_ts + gap still merges) — the DuckDB oracle must use
-    # the same strict comparison.
-    is_new = (
-        ts.cast("double") - F.lag(ts.cast("double"), 1).over(w_user)
-        > F.lit(float(gap_seconds))
-    )
-    df = df.withColumn(
-        "session_seq",
-        F.when(
-            ts.isNotNull(),
-            F.sum(F.when(is_new, 1).otherwise(0)).over(
-                w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        ),
-    )
+    # The key's time is visit_start as that integer: epoch micros for
+    # timestamps, and for the raw hit log's epoch seconds the
+    # reference's exact `user_id_<seconds>` (main.py:122).
+    start, _ = _epoch_int(df, ts_col, F.col("visit_start"))
     w_sess = Window.partitionBy(user_col, "session_seq")
-    df = df.withColumn("visit_start", F.min(ts_col).over(w_sess)).withColumn(
-        "visit_end", F.max(ts_col).over(w_sess)
-    )
-    # Timestamp inputs key on epoch-micros; integer epoch-seconds inputs
-    # (the raw hit log) keep the reference's exact `user_id_<seconds>`
-    # key format (main.py:122).
-    if isinstance(df.schema[ts_col].dataType, T.TimestampType):
-        key = visit_key_col(F.col(user_col), F.col("visit_start"))
-    else:
-        key = F.concat_ws(
-            "_", F.col(user_col).cast("string"), F.col("visit_start").cast("string")
+    return (
+        with_session_seq(df, user_col, ts_col, gap_seconds, order_cols)
+        .withColumn("visit_start", F.min(ts_col).over(w_sess))
+        .withColumn("visit_end", F.max(ts_col).over(w_sess))
+        .withColumn(
+            "visit_key",
+            F.when(F.col(ts_col).isNotNull(), F.concat_ws("_", F.col(user_col).cast("string"), start)),
         )
-    return df.withColumn("visit_key", F.when(ts.isNotNull(), key))
+    )
 
 
-def visits_from_hits(
-    hits_with_keys: DataFrame,
-    user_col: str = "user_id",
-    extra_aggs: list[Column] | None = None,
-) -> DataFrame:
-    """Reduce a ``with_session_columns`` result to one row per visit.
+def visits_from_hits(hits_with_keys: DataFrame) -> DataFrame:
+    """Reduce a ``with_session_columns`` result (user column
+    ``user_id``) to one row per visit: ``visit_key, user_id,
+    visit_start, visit_end, n_hits``.
 
-    Grouping on ``(user, visit_key)`` reuses the user-key exchange the
-    window functions already created (hash on ``user`` clusters every
-    finer key), so the whole visits+hits fan-out costs one shuffle —
-    persist the ``with_session_columns`` result when writing both.
-    Null-``visit_key`` rows (null ``ts``) belong to no visit and are
-    dropped here.
+    Grouping on ``(visit_key, user_id)`` reuses the user-key exchange
+    the window functions already created (hash on ``user_id`` clusters
+    every finer key), so the whole visits+hits fan-out costs one
+    shuffle — persist the ``with_session_columns`` result when writing
+    both. Null-``visit_key`` rows (null ``ts``) belong to no visit and
+    are dropped here.
     """
-    aggs = [
-        F.min("visit_start").alias("visit_start"),
-        F.max("visit_end").alias("visit_end"),
-        F.count(F.lit(1)).alias("n_hits"),
-    ]
-    if extra_aggs:
-        aggs.extend(extra_aggs)
     return (
         hits_with_keys.where(F.col("visit_key").isNotNull())
-        .groupBy("visit_key", user_col)
-        .agg(*aggs)
+        .groupBy("visit_key", "user_id")
+        .agg(
+            F.min("visit_start").alias("visit_start"),
+            F.max("visit_end").alias("visit_end"),
+            F.count(F.lit(1)).alias("n_hits"),
+        )
     )
 
 

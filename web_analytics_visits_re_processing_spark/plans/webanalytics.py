@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from web_analytics_visits_re_processing_spark.operators.sessionize import (
     sessionize_visits,
     with_session_columns,
+    with_session_seq,
 )
 from web_analytics_visits_re_processing_spark.plans.analytics import _SESSION_CTE
 from web_analytics_visits_re_processing_spark.plans.registry import query
@@ -2067,9 +2068,7 @@ def q_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark jobs whose per-round plan/checkpoint overhead (~0.4 s each,
     measured) dwarfs the μs of arithmetic at ANY data scale and
     would serialize 20 cluster barriers on a real deployment."""
-    ev = _events(spark, sf_dir)
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
+    ev = _events(spark, sf_dir).select(
         "user_id",
         "ts",
         "event_id",
@@ -2079,18 +2078,8 @@ def q_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias(
             "is_conv"
         ),
-        F.when(
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(wu)
-            > GAP_US,
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
     )
-    sess = seq.withColumn(
-        "session_seq",
-        F.sum("is_new").over(wu.rowsBetween(Window.unboundedPreceding, 0)),
-    )
+    sess = with_session_seq(ev, "user_id", "ts", 1800, order_cols=["event_id"])
     ws = Window.partitionBy("user_id", "session_seq").orderBy(
         "ts", "event_id"
     )
@@ -2369,23 +2358,8 @@ def q_session_conversion_by_entry(
     collapse uses min_by over the (ts, event_id) order — no second
     window pass and no join back — and everything to that point rides
     ONE user-keyed exchange; the final rollup is ≤ |types| rows."""
-    ev = _events(spark, sf_dir)
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sess = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(wu)
-            > GAP_US,
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    ).withColumn(
-        "session_seq",
-        F.sum("is_new").over(wu.rowsBetween(Window.unboundedPreceding, 0)),
+    sess = with_session_seq(
+        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(
         F.min(
@@ -2614,22 +2588,8 @@ def q_peak_concurrent_sessions(
     an events×events overlap join). Midnight-spanning sessions credit
     their start day end-to-end (documented choice, replayed in the
     oracle)."""
-    ev = _events(spark, sf_dir)
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sess = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(wu)
-            > GAP_US,
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    ).withColumn(
-        "session_seq",
-        F.sum("is_new").over(wu.rowsBetween(Window.unboundedPreceding, 0)),
+    sess = with_session_seq(
+        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     spans = sess.groupBy("user_id", "session_seq").agg(
         F.date_format(F.to_date(F.min("ts")), "yyyy-MM-dd").alias("day"),
@@ -2869,23 +2829,8 @@ def q_skip_bigram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamps tiebreak lexicographically (replayed in the oracle).
     Level-k patterns iterate this same join, exactly like the Apriori
     escalation note on `association_rules_pairs`."""
-    ev = _events(spark, sf_dir)
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sess = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(wu)
-            > GAP_US,
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    ).withColumn(
-        "session_seq",
-        F.sum("is_new").over(wu.rowsBetween(Window.unboundedPreceding, 0)),
+    sess = with_session_seq(
+        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     firsts = sess.groupBy("user_id", "session_seq", "event_type").agg(
         F.min(F.unix_micros("ts")).alias("first_us")
@@ -3479,22 +3424,8 @@ def q_session_length_percentiles(
     Sessions collapse on the user exchange; lengths compress to a
     (len, count) histogram map-side, so the percentile windows walk
     the length domain, never sessions."""
-    ev = _events(spark, sf_dir)
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sess = ev.select(
-        "user_id",
-        F.when(
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(wu)
-            > GAP_US,
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-        "ts",
-        "event_id",
-    ).withColumn(
-        "session_seq",
-        F.sum("is_new").over(wu.rowsBetween(Window.unboundedPreceding, 0)),
+    sess = with_session_seq(
+        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     lens = sess.groupBy("user_id", "session_seq").agg(
         F.count(F.lit(1)).alias("len")
@@ -4265,23 +4196,8 @@ def q_bounce_by_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`bounce_rate_weekly`) by its actionable dimension, and pairs
     with `session_conversion_by_entry` (same per-session collapse:
     struct-min entry + count, one user exchange)."""
-    ev = _events(spark, sf_dir)
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sess = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(wu)
-            > GAP_US,
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    ).withColumn(
-        "session_seq",
-        F.sum("is_new").over(wu.rowsBetween(Window.unboundedPreceding, 0)),
+    sess = with_session_seq(
+        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(
         F.min(F.struct("ts", "event_id", "event_type"))["event_type"].alias(
@@ -5225,23 +5141,8 @@ def q_wilson_ranked_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``extended.py`` documents — Spark ROUND-on-double goes HALF_UP
     via a decimal string while DuckDB rounds the binary value, so a
     gated-and-RANKED scalar must never pass through round)."""
-    ev = _events(spark, sf_dir)
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sess = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(wu)
-            > GAP_US,
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    ).withColumn(
-        "session_seq",
-        F.sum("is_new").over(wu.rowsBetween(Window.unboundedPreceding, 0)),
+    sess = with_session_seq(
+        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(
         F.min(F.struct("ts", "event_id", "event_type"))["event_type"].alias(
@@ -5786,23 +5687,8 @@ def q_session_duration_by_outcome(
     (outcome, second) cells map-side; the p50/p90 read off the
     cumulative rank rule — the histogram-quantile design keyed by
     outcome."""
-    ev = _events(spark, sf_dir)
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sess = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(wu)
-            > GAP_US,
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    ).withColumn(
-        "session_seq",
-        F.sum("is_new").over(wu.rowsBetween(Window.unboundedPreceding, 0)),
+    sess = with_session_seq(
+        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(
         F.expr(

@@ -15,10 +15,10 @@ integer-exact, bounded-state house style:
   right-censoring — the survival-analysis primitive emitted as exact
   (deaths, at-risk, hazard-ppm) rows rather than a float product.
 
-The reference (``/root/reference/main.py:22-240``) has none of this —
-its analytics surface ends at visit assembly; this module is §2.2
-gap-fill on the `events` table, sharing the 30-min-gap session
-convention with ``webanalytics.py``.
+The reference (``main.py:22-240``) has none of this — its analytics
+surface ends at visit assembly; this module is §2.2 gap-fill on the
+`events` table, numbering 30-min-gap sessions through
+``operators.sessionize.with_session_seq`` like ``webanalytics.py``.
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from web_analytics_visits_re_processing_spark.operators.sessionize import with_session_seq
 from web_analytics_visits_re_processing_spark.plans.registry import query
 from web_analytics_visits_re_processing_spark.plans.webanalytics import GAP_US, _events
 
@@ -44,27 +45,6 @@ seq AS (
                                 ROWS UNBOUNDED PRECEDING) AS session_seq
     FROM seq
 )"""
-
-
-def _sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events + session_seq under the shared 30-min-gap convention."""
-    ev = _events(spark, sf_dir)
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(wu) > GAP_US,
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    ).withColumn(
-        "session_seq",
-        F.sum("is_new").over(wu.rowsBetween(Window.unboundedPreceding, 0)),
-    )
 
 
 # Single-slot cache for the daily spine, keyed by sf_dir: EWMA and
@@ -177,7 +157,9 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     larger channel counts the lattice doubles per channel — the
     documented escalation is permutation-sampled Shapley over the
     same mask rollup, same downstream shape."""
-    sess = _sessionized(spark, sf_dir)
+    sess = with_session_seq(
+        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
+    )
     per_session = sess.groupBy("user_id", "session_seq").agg(
         (
             F.max(F.when(F.col("event_type") == "click", 1).otherwise(0)) * 1
@@ -376,7 +358,9 @@ def q_capped_session_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 'how much does this policy inflate session counts' readout.
     Scale: rides the standard user-key session exchange; the
     histogram is a ≤5-row rollup."""
-    sess = _sessionized(spark, sf_dir)
+    sess = with_session_seq(
+        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
+    )
     ws = Window.partitionBy("user_id", "session_seq")
     marked = sess.select(
         "user_id",
@@ -1045,7 +1029,9 @@ def q_frequent_event_sequences(
     (the BPE distinct-vocab trick — sessions repeat the same handful
     of shapes, so the grid replication touches the shape table, not
     the session table; ~2 s warm at sf0.1)."""
-    sess = _sessionized(spark, sf_dir)
+    sess = with_session_seq(
+        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
+    )
     s2 = (
         sess.groupBy("user_id", "session_seq")
         .agg(

@@ -45,7 +45,9 @@ The knobs below are chosen for correctness-at-scale first:
   ``-XX:ArchiveClassesAtExit`` of your own) in
   ``spark.driver.extraJavaOptions``; a conf dir with real settings
   also turns it off. A truncated archive that crashes the JVM is
-  deleted and the launch retried without it.
+  deleted and the launch retried without it; one the JVM starts
+  without mapping is deleted after the launch, so the next run
+  records a new one.
 """
 
 from __future__ import annotations
@@ -130,6 +132,8 @@ def get_spark(
         return _get_or_create(app_name, master, conf)
     if launch.recording is not None:
         atexit.register(_publish_at_exit, SparkContext._gateway, launch)
+    elif SparkContext._gateway.proc is not None:
+        cds.drop_unmapped(launch, SparkContext._gateway.proc.pid)
     return spark
 
 

@@ -1,14 +1,19 @@
-"""Streaming sessionization — the reference's Beam pipeline was
-event-time windowed batch (`window.Sessions`, ``main.py:217``); the
-Spark-first generalization runs the SAME ``session_window`` expression
-under Structured Streaming with a watermark (one definition, two
-execution modes — the core design point of the Structured Streaming
-model).
+"""Streaming sessionization: the paper's visits over a live feed.
+
+The reference's Beam pipeline is event-time windowed batch
+(``window.Sessions``, ``main.py:217``). Here the stream is the batch
+``operators.sessionize.sessionize_visits`` expression run over a
+watermarked input: one query, two execution modes (the design point of
+Structured Streaming). Its visits follow the one rule of
+``operators.sessionize``: a hit more than ``gap_seconds`` after its
+user's previous hit (compared in epoch micros) starts a new visit, and
+one exactly at the gap joins the open one.
 
 Production topology (100 TB/day feed):
 
     readStream (files/kafka) → withWatermark(ts, delay)
-      → groupBy(user, session_window(ts, gap)) → append-mode sink
+      → sessionize_visits (non-null ts, per-user session windows)
+      → append-mode sink
 
 Append mode emits a session exactly once, when the watermark passes
 its close — late hits inside the delay merge into their session;
@@ -41,7 +46,7 @@ from pyspark.sql import functions as F
 
 from web_analytics_visits_re_processing_spark.operators.sessionize import (
     DEFAULT_GAP_SECONDS,
-    visit_key_col,
+    sessionize_visits,
 )
 
 REPLAY_SHUFFLE_PARTITIONS = str(min(8, len(os.sched_getaffinity(0))))
@@ -52,27 +57,11 @@ def sessionize_stream(
     gap_seconds: int = DEFAULT_GAP_SECONDS,
     watermark_delay: str = "1 hour",
 ) -> DataFrame:
-    """Streaming visits aggregation: one row per closed session (append
-    mode) or per session-so-far (complete/update)."""
-    visits = (
-        events.where(F.col("ts").isNotNull())
-        .withWatermark("ts", watermark_delay)
-        .groupBy(
-            F.col("user_id"),
-            F.session_window(F.col("ts"), f"{int(gap_seconds)} seconds"),
-        )
-        .agg(
-            F.min("ts").alias("visit_start"),
-            F.max("ts").alias("visit_end"),
-            F.count(F.lit(1)).alias("n_hits"),
-            F.sum(F.floor(F.col("value") * 100)).alias("total_value_cents"),
-        )
-    )
-    return visits.select(
-        visit_key_col(F.col("user_id"), F.col("visit_start")).alias("visit_key"),
-        "user_id",
-        "visit_start",
-        "visit_end",
-        "n_hits",
-        "total_value_cents",
+    """Streaming visits: one row per closed session (append mode) or
+    per session-so-far (complete/update), with columns ``visit_key,
+    user_id, visit_start, visit_end, n_hits, total_value_cents``."""
+    return sessionize_visits(
+        events.withWatermark("ts", watermark_delay),
+        gap_seconds=gap_seconds,
+        extra_aggs=[F.sum(F.floor(F.col("value") * 100)).alias("total_value_cents")],
     )
