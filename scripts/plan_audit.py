@@ -8,6 +8,14 @@ ground truth behind the plan-shape claims in SURVEY §2.3 and
 tests/test_plan_quality.py — this file freezes it where a reviewer
 can read it without running Spark.
 
+Each plan is normalized before it is written (``normalize_plan``):
+expression ids (``#1234``) and ``plan_id=`` values are renumbered in
+order of first appearance within the plan, the random staging dirs of
+registry queries become ``<stage>`` and the process id that names the
+bucketed layouts becomes ``<pid>``. Regenerating PLANS.md on an
+unchanged tree then gives an unchanged file, so its diff shows only the
+plans a change moved.
+
 Usage: python scripts/plan_audit.py   (rewrites PLANS.md)
 """
 
@@ -21,6 +29,32 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
+_EXPR_ID = re.compile(r"#(\d+)")
+_PLAN_ID = re.compile(r"plan_id=(\d+)")
+# tempfile.mkdtemp(prefix="wavrp_stage_") under whatever the temp root is
+_STAGE_DIR = re.compile(r"[^\s\[\],:]*wavrp_stage_[^/\s\[\],]+")
+# sources.layout names its bucketed tables and dirs <tag>_<hash>_<pid>
+_LAYOUT_PID = re.compile(r"(spark_graft_bucketed[_/]\w+?_[0-9a-f]{8})_\d+")
+
+
+def _renumber(pattern: re.Pattern, text: str, template: str) -> str:
+    seen: dict[str, int] = {}
+    return pattern.sub(
+        lambda m: template.format(seen.setdefault(m.group(1), len(seen) + 1)), text
+    )
+
+
+def normalize_plan(plan: str) -> str:
+    """``plan`` without the names that differ between runs of the same
+    query: expression ids and ``plan_id=`` values renumbered from 1 in
+    order of first appearance (so equal ids stay equal and distinct ids
+    distinct), staging dirs replaced by ``<stage>`` and the process id
+    in bucketed table names by ``<pid>``."""
+    plan = _renumber(_EXPR_ID, plan, "#{}")
+    plan = _renumber(_PLAN_ID, plan, "plan_id={}")
+    plan = _LAYOUT_PID.sub(r"\1_<pid>", plan)
+    return _STAGE_DIR.sub("<stage>", plan)
 
 
 def main() -> None:
@@ -62,7 +96,7 @@ def main() -> None:
         cart = "yes" if "CartesianProduct" in plan else "no"
         b = "yes" if name in benched else ""
         lines.append(f"| `{name}` | {n_ex} | {n_bc} | {n_py} | {cart} | {b} |")
-        details.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
+        details.append(f"## {name}\n\n```\n{normalize_plan(plan).strip()}\n```\n")
     out = "\n".join(lines) + "\n\n" + "\n".join(details)
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(out)

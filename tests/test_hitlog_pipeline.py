@@ -118,6 +118,52 @@ def test_pipeline_writes_three_sinks(spark, golden_path, tmp_path):
     assert len(hits_df.columns) == 12  # reference hit CSV order, main.py:106
 
 
+def test_sink_jobs_carry_the_callers_job_group(spark, golden_path, tmp_path):
+    """The three sinks are written from threads of their own; every job
+    of the run still carries the caller's job group, so a caller can
+    tag or cancel the whole run by it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("daily-visits", "daily visits run")
+    try:
+        counts = run_visits_pipeline(spark, golden_path, str(tmp_path / "out"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert counts == {"hits": 6, "visits": 2, "visitors": 1}
+    assert set(tracker.getJobIdsForGroup()) - ungrouped == set()
+    # at least one write job per sink
+    assert len(tracker.getJobIdsForGroup("daily-visits")) >= 3
+
+
+def test_failed_sink_raises_and_releases_the_persisted_frame(
+    spark, golden_path, tmp_path, monkeypatch
+):
+    """A sink whose write job fails (here every ``visits`` row raises)
+    makes ``run_visits_pipeline`` raise once the other two sinks have
+    finished, and the persisted frame is released."""
+    from pyspark.sql import functions as F
+
+    from web_analytics_visits_re_processing_spark import pipeline
+
+    real_visits = pipeline.visits_from_hits
+
+    def failing_visits(stamped):
+        key = F.col("visit_key")
+        down = F.raise_error(F.concat(F.lit("visits sink down at "), key))
+        return real_visits(stamped).withColumn("visit_key", F.when(key.isNotNull(), down).otherwise(key))
+
+    monkeypatch.setattr(pipeline, "visits_from_hits", failing_visits)
+    out = tmp_path / "out"
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    with pytest.raises(Exception, match="visits sink down"):
+        run_visits_pipeline(spark, golden_path, str(out))
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == persisted
+    assert (out / "hits" / "_SUCCESS").exists() and (out / "visitors" / "_SUCCESS").exists()
+    assert not (out / "visits" / "_SUCCESS").exists()
+
+
 def test_latin1_gzip_byte_exact_roundtrip(spark, tmp_path):
     """R15 (/root/reference/encoding_update.py:12-36): a gzipped
     ISO-8859-1 hit log must round-trip byte-exact through

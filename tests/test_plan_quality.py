@@ -156,6 +156,27 @@ def test_visits_pipeline_one_scan_one_exchange(spark, tmp_path):
     assert nodes.count("ShuffleExchangeExec") == 1, nodes
 
 
+def test_session_columns_one_sorted_pass(spark):
+    """``with_session_columns`` stamps ``session_seq``, ``visit_start``
+    and ``visit_key`` in the user-ordered pass that numbers the visits:
+    the executed plan holds one exchange, one sort and two windows (the
+    ``lag``, then the running sum and running max), with no re-sort on
+    ``(user_id, session_seq)`` and no third window."""
+    from web_analytics_visits_re_processing_spark.operators.sessionize import (
+        with_session_columns,
+    )
+
+    df = spark.createDataFrame(
+        [("u", 100), ("u", 200), ("u", 5000), ("v", 10), ("v", None)],
+        "user_id string, ts long",
+    )
+    stamped = with_session_columns(df, gap_seconds=1800)
+    stamped.collect()
+    nodes = _physical_nodes(spark, stamped._jdf.queryExecution().executedPlan(), set())
+    counts = {n: nodes.count(n) for n in ("ShuffleExchangeExec", "SortExec", "WindowExec")}
+    assert counts == {"ShuffleExchangeExec": 1, "SortExec": 1, "WindowExec": 2}, nodes
+
+
 def test_q1_filter_pushed_to_parquet_scan(spark, sf_dir):
     """The shipdate predicate must reach the parquet scan as a pushed
     filter (row-group skipping at 100 TB), and the scan must not read

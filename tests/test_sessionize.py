@@ -183,8 +183,12 @@ def test_null_ts_rows_kept_without_joining_a_visit(spark):
     """Null-ts rows sort first in the user window (NULLS FIRST). They
     must come back with null session columns, never share the first
     visit's session_seq, and leave every other row's visit_key as it is
-    without them; visits_from_hits skips them."""
+    without them; visits_from_hits skips them, and its visits (with
+    visit_end, an aggregate of the visit) are sessionize_visits'."""
+    from pyspark.sql import functions as F
+
     from web_analytics_visits_re_processing_spark.operators.sessionize import (
+        sessionize_visits,
         visits_from_hits,
         with_session_columns,
     )
@@ -195,7 +199,7 @@ def test_null_ts_rows_kept_without_joining_a_visit(spark):
     ]
     nulls = [(7, "u", None), (8, "u", None), (9, "w", None)]
     schema = "event_id long, user_id string, ts long"
-    session_cols = ("session_seq", "visit_start", "visit_end", "visit_key")
+    session_cols = ("session_seq", "visit_start", "visit_key")
 
     def stamp(rows):
         return with_session_columns(spark.createDataFrame(rows, schema), gap_seconds=1800)
@@ -216,3 +220,13 @@ def test_null_ts_rows_kept_without_joining_a_visit(spark):
         ("v_10", "v", 10, 10, 1),
         ("v_9000", "v", 9000, 9000, 1),
     ]
+    windowed = sessionize_visits(
+        spark.createDataFrame(good + nulls, schema).withColumn("ts", F.timestamp_seconds("ts")),
+        gap_seconds=1800,
+    ).select(
+        "user_id",
+        F.unix_seconds("visit_start"),
+        F.unix_seconds("visit_end"),
+        "n_hits",
+    )
+    assert sorted(tuple(r) for r in windowed.collect()) == [v[1:] for v in visits]

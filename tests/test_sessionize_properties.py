@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from web_analytics_visits_re_processing_spark.operators.sessionize import (
     sessionize_visits,
+    visits_from_hits,
     with_session_columns,
 )
 
@@ -39,7 +40,9 @@ def test_session_invariants(spark, seed):
         _random_events(seed), "event_id long, ts timestamp, user_id long, value double"
     )
     visits = sessionize_visits(df, gap_seconds=GAP).collect()
-    hits = with_session_columns(df, gap_seconds=GAP).collect()
+    stamped = with_session_columns(df, gap_seconds=GAP)
+    hits = stamped.collect()
+    hit_visits = visits_from_hits(stamped).collect()
 
     # count preservation: every input event lands in exactly one session
     assert len(hits) == df.count()
@@ -50,13 +53,22 @@ def test_session_invariants(spark, seed):
     for v in visits:
         assert v["visit_start"] <= v["visit_end"]
 
-    # the two formulations agree exactly
+    # the two formulations agree exactly: per visit, the hits stamped
+    # with its key (their count and visit_start) and the visit-level
+    # start/end/count that visits_from_hits aggregates from them
+    by_key = {v["visit_key"]: [v["visit_start"], v["visit_end"], v["n_hits"]] for v in visits}
+    assert {
+        v["visit_key"]: [v["visit_start"], v["visit_end"], v["n_hits"]] for v in hit_visits
+    } == by_key
     from_hits = {}
     for h in hits:
-        k = h["visit_key"]
-        s = from_hits.setdefault(k, [h["visit_start"], h["visit_end"], 0])
-        s[2] += 1
-    assert {v["visit_key"]: [v["visit_start"], v["visit_end"], v["n_hits"]] for v in visits} == from_hits
+        s = from_hits.setdefault(h["visit_key"], [h["visit_start"], 0])
+        assert h["visit_start"] == s[0]
+        s[1] += 1
+    assert {k: [s, n] for k, (s, _, n) in by_key.items()} == from_hits
+    for h in hits:
+        start, end, _ = by_key[h["visit_key"]]
+        assert start <= h["ts"] <= end
 
     # gap semantics per user: consecutive hits within a session differ
     # by <= GAP; consecutive sessions are separated by > GAP

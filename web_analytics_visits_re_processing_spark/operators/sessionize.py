@@ -13,10 +13,16 @@ in the open visit. The gap is compared in integers: epoch micros for
 timestamps, the raw value for integral epoch seconds. A null ``ts``
 belongs to no visit.
 
-``with_session_seq`` numbers sessions by this rule (``lag`` finds the
-boundaries, a running sum numbers them) and is the only code that
-does. ``with_session_columns`` (the paper's job) and every registry
-query that groups by ``(user_id, session_seq)`` build on it. The DuckDB
+One boundary test (``_visit_boundary``: a ``lag`` over the
+user-ordered window) is the only code that applies this rule, and a
+running sum over it numbers the sessions. ``with_session_seq`` adds
+that number alone; every registry query that groups by ``(user_id,
+session_seq)`` builds on it. ``with_session_columns`` (the paper's
+job) reads the same boundaries in the same sorted pass: one window
+operator holds the running sum and a running max of the visit-start
+``ts``, which gives each hit its ``visit_start`` and ``visit_key``
+without a second sort on ``(user_id, session_seq)``. ``visit_end`` is
+an aggregate of the visit, taken in ``visits_from_hits``. The DuckDB
 oracles spell the same lag/running sum in SQL.
 
 ``sessionize_visits`` aggregates the same visits with Spark's
@@ -116,6 +122,22 @@ def _epoch_int(df: DataFrame, ts_col: str, col: Column) -> tuple[Column, int]:
     )
 
 
+def _visit_boundary(
+    df: DataFrame,
+    user_col: str,
+    ts_col: str,
+    gap_seconds: int,
+    order_cols: list[str] | None,
+) -> tuple[Column, Window]:
+    """``is_new``, true on a row whose gap to the user's previous row
+    is over ``gap_seconds`` (null on a user's first non-null ``ts``),
+    and the running frame of the user-ordered window it is read in."""
+    t, second = _epoch_int(df, ts_col, F.col(ts_col))
+    w_user = Window.partitionBy(user_col).orderBy(ts_col, *(order_cols or []))
+    is_new = t - F.lag(t).over(w_user) > F.lit(gap_seconds * second)
+    return is_new, w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+
 def with_session_seq(
     df: DataFrame,
     user_col: str = "user_id",
@@ -129,16 +151,12 @@ def with_session_seq(
     numbering. One ``user_col`` exchange, which any later window or
     ``groupBy`` keyed by ``(user_col, session_seq)`` reuses.
     """
-    t, second = _epoch_int(df, ts_col, F.col(ts_col))
-    w_user = Window.partitionBy(user_col).orderBy(ts_col, *(order_cols or []))
-    is_new = t - F.lag(t).over(w_user) > F.lit(gap_seconds * second)
+    is_new, w_run = _visit_boundary(df, user_col, ts_col, gap_seconds, order_cols)
     return df.withColumn(
         "session_seq",
         F.when(
             F.col(ts_col).isNotNull(),
-            F.sum(F.when(is_new, 1).otherwise(0)).over(
-                w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
+            F.sum(F.when(is_new, 1).otherwise(0)).over(w_run),
         ),
     )
 
@@ -150,35 +168,45 @@ def with_session_columns(
     gap_seconds: int = DEFAULT_GAP_SECONDS,
     order_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Stamp ``session_seq`` / ``visit_start`` / ``visit_end`` /
-    ``visit_key`` onto every hit (the reference's R7+R10 without
-    collect/explode): ``with_session_seq``, then per-visit min/max over
-    ``(user, session_seq)`` windows that the ``user`` hash partitioning
-    already satisfies, so one exchange and one sort, no Python. Unlike
-    the reference's collect-then-explode (``main.py:115-146``), no
-    session must fit in one worker's memory. Null-``ts`` rows are kept
-    with null session columns.
+    """Stamp ``session_seq`` / ``visit_start`` / ``visit_key`` onto
+    every hit (the reference's R7+R10 without collect/explode) in the
+    one user-ordered pass ``with_session_seq`` sorts for: a ``lag``
+    window finds the boundaries, then one window holds the running
+    sum that numbers the visits and the running max of the visit-start
+    ``ts`` (rows are in ``ts`` order, so the latest start seen is the
+    row's own visit's). One exchange, one sort, no Python. Unlike the
+    reference's collect-then-explode (``main.py:115-146``), no session
+    must fit in one worker's memory. Null-``ts`` rows are kept with
+    null session columns. A visit's end is an aggregate, not a per-hit
+    column: ``visits_from_hits`` takes it.
     """
+    is_new, w_run = _visit_boundary(df, user_col, ts_col, gap_seconds, order_cols)
+    ts, new = F.col(ts_col), F.col("_new_visit")
     # The key's time is visit_start as that integer: epoch micros for
     # timestamps, and for the raw hit log's epoch seconds the
     # reference's exact `user_id_<seconds>` (main.py:122).
     start, _ = _epoch_int(df, ts_col, F.col("visit_start"))
-    w_sess = Window.partitionBy(user_col, "session_seq")
     return (
-        with_session_seq(df, user_col, ts_col, gap_seconds, order_cols)
-        .withColumn("visit_start", F.min(ts_col).over(w_sess))
-        .withColumn("visit_end", F.max(ts_col).over(w_sess))
+        df.withColumn("_new_visit", is_new)
+        .withColumns(
+            {
+                "session_seq": F.when(ts.isNotNull(), F.sum(F.when(new, 1).otherwise(0)).over(w_run)),
+                "visit_start": F.when(ts.isNotNull(), F.max(F.when(F.coalesce(new, F.lit(True)), ts)).over(w_run)),
+            }
+        )
+        .drop("_new_visit")
         .withColumn(
             "visit_key",
-            F.when(F.col(ts_col).isNotNull(), F.concat_ws("_", F.col(user_col).cast("string"), start)),
+            F.when(ts.isNotNull(), F.concat_ws("_", F.col(user_col).cast("string"), start)),
         )
     )
 
 
 def visits_from_hits(hits_with_keys: DataFrame) -> DataFrame:
-    """Reduce a ``with_session_columns`` result (user column
-    ``user_id``) to one row per visit: ``visit_key, user_id,
-    visit_start, visit_end, n_hits``.
+    """Reduce a ``with_session_columns`` result (columns ``user_id``
+    and ``ts``) to one row per visit: ``visit_key, user_id,
+    visit_start, visit_end, n_hits``, with ``visit_start = min(ts)``
+    and ``visit_end = max(ts)`` (``main.py:120-121``).
 
     Grouping on ``(visit_key, user_id)`` reuses the user-key exchange
     the window functions already created (hash on ``user_id`` clusters
@@ -191,8 +219,8 @@ def visits_from_hits(hits_with_keys: DataFrame) -> DataFrame:
         hits_with_keys.where(F.col("visit_key").isNotNull())
         .groupBy("visit_key", "user_id")
         .agg(
-            F.min("visit_start").alias("visit_start"),
-            F.max("visit_end").alias("visit_end"),
+            F.min("ts").alias("visit_start"),
+            F.max("ts").alias("visit_end"),
             F.count(F.lit(1)).alias("n_hits"),
         )
     )

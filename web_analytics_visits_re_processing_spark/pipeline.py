@@ -1,13 +1,22 @@
 """The reference's end-to-end pipeline, Spark-first: hit log in,
 ``visits`` / ``hits`` / ``visitors`` out (``main.py:209-234``).
 
-Topology: one input scan, one shuffle (the user-key exchange inside
-``with_session_columns``), and one persisted frame that all three
-sinks read (Beam reuses pipeline branches implicitly; Spark needs the
-explicit ``persist`` or each write would recompute the scan+shuffle).
-``visits`` groups and ``visitors`` de-duplicates on keys the
-``user_id`` hash partitioning already clusters, so neither adds an
-exchange.
+Topology: one input scan, one shuffle and one sort (the user-key
+exchange and the user-ordered pass inside ``with_session_columns``),
+and one persisted frame that all three sinks read (Beam reuses
+pipeline branches implicitly; Spark needs the explicit ``persist`` or
+each write would recompute the scan+shuffle). ``visits`` groups and
+``visitors`` de-duplicates on keys the ``user_id`` hash partitioning
+already clusters, so neither adds an exchange.
+
+The three sinks are written at the same time, one thread each, so
+``visits`` and ``visitors`` are planned while the ``hits`` job
+runs. Each thread inherits the caller's job group and other local
+properties (``pyspark.inheritable_thread_target``), so a caller that
+tags or cancels the run by job group reaches every sink job. The
+persisted frame is still computed once: Spark builds a cached
+relation's RDD once, and a task that needs a block another task is
+writing waits for it instead of recomputing it.
 
 Faithful-vs-sane divergences (SURVEY §4.3.3), defaulting to sane:
 
@@ -28,8 +37,10 @@ and visits only the keyed ones.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -101,6 +112,11 @@ def run_visits_pipeline(
 ) -> dict[str, int]:
     """Read → sessionize → write ``hits/`` ``visits/`` ``visitors/``.
 
+    The three sink writes run at the same time, each on its own
+    thread, and their jobs carry the caller's job group. A failed sink
+    raises once all three have finished, and the persisted frame is
+    released either way.
+
     Returns row counts per sink, read from per-sink observation
     metrics riding the write jobs themselves — no extra count jobs
     over the persisted frame (the parse-drop counters likewise stream
@@ -111,20 +127,34 @@ def run_visits_pipeline(
     )
     result = build_visits_pipeline(parsed, gap_seconds, dedup_visitors)
     out = output_path.rstrip("/")
-    counts: dict[str, int] = {}
+    sinks = {"hits": result.hits, "visits": result.visits, "visitors": result.visitors}
     try:
-        for name, df in (
-            ("hits", result.hits),
-            ("visits", result.visits),
-            ("visitors", result.visitors),
-        ):
-            obs = Observation(f"{name}_sink")
-            observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            writer = observed.write.mode("overwrite").format(output_format)
-            if output_format == "csv":
-                writer = writer.option("header", "false")
-            writer.save(f"{out}/{name}")
-            counts[name] = obs.get["rows"]
+        # One thread per sink, each wrapped on this thread so it starts
+        # from its own copy of the caller's local properties (job
+        # group, scheduler pool); leaving the pool waits for all three.
+        with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+            futures = {
+                name: pool.submit(
+                    inheritable_thread_target(spark)(_write_sink),
+                    name,
+                    df,
+                    f"{out}/{name}",
+                    output_format,
+                )
+                for name, df in sinks.items()
+            }
+        return {name: future.result() for name, future in futures.items()}
     finally:
         result.stamped.unpersist()
-    return counts
+
+
+def _write_sink(name: str, df: DataFrame, path: str, output_format: str) -> int:
+    """Write one sink and return its row count, read from an observation
+    that rides the write job itself."""
+    obs = Observation(f"{name}_sink")
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
+    writer = writer.format(output_format)
+    if output_format == "csv":
+        writer = writer.option("header", "false")
+    writer.save(path)
+    return obs.get["rows"]

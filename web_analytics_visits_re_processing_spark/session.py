@@ -24,6 +24,23 @@ The knobs below are chosen for correctness-at-scale first:
   0.49-0.63 s and 3.9-4.4 s for the same files. On an object store
   with thousands of new files per trigger, pass a lower value through
   ``extra_conf``.
+- **No per-call call-site capture**
+  (``spark.python.sql.dataFrameDebugging.enabled=false``; PySpark's
+  default is ``true``). With it on, PySpark 4.1 wraps ``F.col`` and
+  every classic ``Column`` method to record the caller's frame for
+  error messages: each call makes extra py4j round trips and tries
+  ``import IPython`` / ``import ipykernel``. On a 4-core host where
+  IPython is installed without ipykernel, the daily job's first run
+  imports IPython (0.40-0.43 s) and retries the failing ``ipykernel``
+  import on every call. Building the job's DataFrames in a fresh
+  process made ~1,680 py4j round trips with the capture on and ~860
+  with it off; with the one-pass sessionize, that phase of the cold
+  job fell from 1.45-1.82 s to 1.03-1.30 s. The price: an error's
+  query context no longer names the Python line that built the
+  failing expression. To turn the capture back on, pass ``"true"``
+  through ``extra_conf``. PySpark reads the setting once per Python
+  process, at the first wrapped call, so set it before building any
+  DataFrame.
 - ``spark.sql.shuffle.partitions`` defaults to 32 here (AQE coalesces
   it per stage); on a real cluster you would size it so each
   post-shuffle partition is ~128-512 MB (e.g. 100 TB input with heavy
@@ -98,6 +115,7 @@ def get_spark(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
         "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         "spark.sql.shuffle.partitions": str(
             shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
         ),
