@@ -463,7 +463,7 @@ def main() -> None:
     spark = get_spark(
         app_name="bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 32),
+        extra_conf={"spark.sql.shuffle.partitions": str(max(cpus, 32))},
     )
     # warm the JVM/codegen paths once with a trivial action
     spark.range(1000).count()

@@ -678,7 +678,7 @@ def main() -> None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
         spark = get_spark(
             app_name="depth-probe", master=f"local[{cpus}]",
-            shuffle_partitions=max(cpus, 32),
+            extra_conf={"spark.sql.shuffle.partitions": str(max(cpus, 32))},
         )
         print(json.dumps(
             {"recursion_depth_probe": recursion_depth_probe(spark)}
@@ -689,7 +689,7 @@ def main() -> None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
         spark = get_spark(
             app_name="stream-state-probe", master=f"local[{cpus}]",
-            shuffle_partitions=max(cpus, 32),
+            extra_conf={"spark.sql.shuffle.partitions": str(max(cpus, 32))},
         )
         spark.range(1000).count()
         scaled_dir = os.path.join(REPO, ".tmp", "scale", "sf1x")
@@ -728,7 +728,9 @@ def main() -> None:
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(
-        app_name="scale-probe", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 32)
+        app_name="scale-probe",
+        master=f"local[{cpus}]",
+        extra_conf={"spark.sql.shuffle.partitions": str(max(cpus, 32))},
     )
     spark.range(1000).count()
 

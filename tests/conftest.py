@@ -13,7 +13,6 @@ def spark():
     spark = get_spark(
         app_name="tests",
         master="local[4]",
-        shuffle_partitions=8,
         extra_conf={"spark.sql.shuffle.partitions": "8"},
     )
     yield spark

@@ -1,7 +1,11 @@
-"""``scripts/plan_audit.py``'s plan normalizer (no Spark): two runs of
-the same query differ only in expression ids, ``plan_id=`` values, the
-random staging dir and the process id in bucketed layout names, and the normalizer maps both runs' plans to the
-same text while keeping distinct ids distinct."""
+"""``scripts/plan_audit.py``'s plan normalizer: two runs of the same
+query differ only in expression ids, ``plan_id=`` values, AQE
+query-stage ids, codegen ids, the random staging dir, the temp root, a
+``.tmp`` work dir and the process id in bucketed layout names, and the
+normalizer maps both runs' plans to the same text while keeping
+distinct ids distinct. A rewritten ``COUNT(DISTINCT ...)``, whose group
+order follows the process's expression ids, is planned in a new process
+and prints the same text each time."""
 
 from __future__ import annotations
 
@@ -47,6 +51,63 @@ def test_two_runs_of_one_plan_normalize_to_the_same_text():
 def test_distinct_ids_stay_distinct_and_equal_ids_equal():
     got = plan_audit.normalize_plan("a#7 b#9 a#7 [plan_id=5] [plan_id=2] [plan_id=5]")
     assert got == "a#1 b#2 a#1 [plan_id=1] [plan_id=2] [plan_id=1]"
+
+
+def test_query_stage_ids_are_renumbered_across_stage_kinds():
+    run_1 = """\
+ResultQueryStage 8
++- ShuffleQueryStage 7
+   :- TableCacheQueryStage 0
+   :     ResultQueryStage 1
+   :     +- ShuffleQueryStage 0
+   +- BroadcastQueryStage 6"""
+    run_2 = run_1.replace("Stage 8", "Stage 9").replace("Stage 7", "Stage 3").replace("Stage 6", "Stage 5")
+    assert plan_audit.normalize_plan(run_1) == plan_audit.normalize_plan(run_2) == """\
+ResultQueryStage 1
++- ShuffleQueryStage 2
+   :- TableCacheQueryStage 3
+   :     ResultQueryStage 4
+   :     +- ShuffleQueryStage 3
+   +- BroadcastQueryStage 5"""
+
+
+def test_codegen_ids_are_renumbered_and_products_kept():
+    run_1 = """\
+*(4) HashAggregate(keys=[b#17L], functions=[partial_sum((c#19L * (2)))])
++- *(4) Filter isnotnull(b#17L)
+   :  +- *(3) HashAggregate(keys=[b#16L], functions=[count(1)])"""
+    run_2 = run_1.replace("*(4)", "*(9)").replace("*(3)", "*(4)")
+    assert plan_audit.normalize_plan(run_1) == plan_audit.normalize_plan(run_2) == """\
+*(1) HashAggregate(keys=[b#1L], functions=[partial_sum((c#2L * (2)))])
++- *(1) Filter isnotnull(b#1L)
+   :  +- *(2) HashAggregate(keys=[b#3L], functions=[count(1)])"""
+
+
+def test_temp_root_becomes_a_placeholder():
+    plan = "Location: [file:/tmp/plan_audit_x1y2/spark_graft_schema_evo/sf0.01/v=1]"
+    assert plan_audit.normalize_plan(plan, "/tmp/plan_audit_x1y2") == (
+        "Location: [file:<tmp>/spark_graft_schema_evo/sf0.01/v=1]"
+    )
+
+
+def test_distinct_rewrite_is_planned_in_a_new_process():
+    """``url_canonicalize_pages`` counts two distinct columns per URL;
+    each new process prints its groups in the same order."""
+    first = plan_audit.fresh_plan("url_canonicalize_pages")
+    assert plan_audit._DISTINCT_GROUPS.search(first), first
+    assert "Expand [" in first and "plan_audit_" not in first
+    assert plan_audit.fresh_plan("url_canonicalize_pages") == first
+    assert not plan_audit._DISTINCT_GROUPS.search("HashAggregate(keys=[grid#3, gids#4])")
+
+
+def test_work_dirs_of_any_checkout_become_one_placeholder():
+    plans = [
+        f"Location: InMemoryFileIndex(1 paths)[file:{root}/.tmp/roundtrip_csv/sf0.01]"
+        for root in ("/home/a/repo", "/srv/b/checkout-2")
+    ]
+    assert {plan_audit.normalize_plan(p) for p in plans} == {
+        "Location: InMemoryFileIndex(1 paths)[file:<work>/roundtrip_csv/sf0.01]"
+    }
 
 
 def test_other_text_is_left_as_is():

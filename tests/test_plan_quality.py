@@ -177,6 +177,34 @@ def test_session_columns_one_sorted_pass(spark):
     assert counts == {"ShuffleExchangeExec": 1, "SortExec": 1, "WindowExec": 2}, nodes
 
 
+def test_session_seq_alone_prunes_the_start_and_key(spark):
+    """A registry query that groups by ``(user_id, session_seq)`` reads
+    nothing else of ``with_session_columns``: Spark prunes the running
+    max and the key, so the plan holds one exchange, one sort and two
+    windows (the ``lag``, then the running sum) and neither a ``max(``
+    window expression nor a ``concat_ws``."""
+    from web_analytics_visits_re_processing_spark.operators.sessionize import (
+        with_session_columns,
+    )
+
+    df = spark.createDataFrame(
+        [("u", 100, 1), ("u", 200, 2), ("u", 5000, 3), ("v", 10, 4), ("v", None, 5)],
+        "user_id string, ts long, event_id long",
+    )
+    per_session = (
+        with_session_columns(df, gap_seconds=1800, order_cols=["event_id"])
+        .groupBy("user_id", "session_seq")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    per_session.collect()
+    executed = per_session._jdf.queryExecution().executedPlan()
+    nodes = _physical_nodes(spark, executed, set())
+    counts = {n: nodes.count(n) for n in ("ShuffleExchangeExec", "SortExec", "WindowExec")}
+    assert counts == {"ShuffleExchangeExec": 1, "SortExec": 1, "WindowExec": 2}, nodes
+    plan = executed.toString()
+    assert "max(" not in plan and "concat_ws" not in plan, plan
+
+
 def test_q1_filter_pushed_to_parquet_scan(spark, sf_dir):
     """The shipdate predicate must reach the parquet scan as a pushed
     filter (row-group skipping at 100 TB), and the scan must not read

@@ -1,28 +1,36 @@
-"""Session numbering: with_session_seq against a plain-Python gap walk,
-and Spark's native session_window against both, on adversarial inputs;
-plus the incremental merge and the null-ts policy."""
+"""Session numbering and keys: with_session_columns against a
+plain-Python gap walk, and Spark's native session_window against both,
+on adversarial inputs; plus the incremental merge and the null-ts
+policy."""
 
 from __future__ import annotations
 
 
 def _gap_walk(rows, gap):
-    """Plain-Python session numbering of ``(event_id, user, t)`` rows,
-    ``t`` an integer: per user in ``(t, event_id)`` order, a row more
-    than ``gap`` after the previous one starts the next session."""
-    seqs, last = {}, {}
+    """Plain-Python sessions of ``(event_id, user, t)`` rows, ``t`` an
+    integer: per user in ``(t, event_id)`` order, a row more than
+    ``gap`` after the previous one starts the next session. Maps each
+    event_id to its session's number and start ``t``."""
+    sessions, last = {}, {}
     for event_id, user, t in sorted(rows, key=lambda r: (r[1], r[2], r[0])):
         prev = last.get(user)
-        seq = 0 if prev is None else prev[1] + (t - prev[0] > gap)
-        last[user] = (t, seq)
-        seqs[event_id] = seq
-    return seqs
+        if prev is None:
+            seq, start = 0, t
+        elif t - prev[0] > gap:
+            seq, start = prev[1] + 1, t
+        else:
+            seq, start = prev[1], prev[2]
+        last[user] = (t, seq, start)
+        sessions[event_id] = (seq, start)
+    return sessions
 
 
 def test_lag_formulation_equals_session_window_fuzz(spark):
-    """Property: with_session_seq (the lag/running-sum numbering the
-    DuckDB oracles spell in SQL) numbers sessions exactly as a
-    plain-Python gap walk, and Spark's native session_window aggregate
-    (sessionize_visits) cuts the same visits. Steps land exactly at the
+    """Property: with_session_columns (the lag/running-sum numbering
+    the DuckDB oracles spell in SQL) numbers sessions exactly as a
+    plain-Python gap walk and keys each hit ``user_<visit start>``, and
+    Spark's native session_window aggregate (sessionize_visits) cuts
+    the same visits under the same keys. Steps land exactly at the
     gap (merge, not split), 1 µs or 1 s either side, at half the gap,
     or on a tie; inputs are integral epoch seconds and sub-second
     timestamps, also in a year where a double compare would blur 1 µs."""
@@ -30,10 +38,11 @@ def test_lag_formulation_equals_session_window_fuzz(spark):
 
     from hypothesis import example, given, settings
     from hypothesis import strategies as st
+    from pyspark.sql import types as T
 
     from web_analytics_visits_re_processing_spark.operators.sessionize import (
         sessionize_visits,
-        with_session_seq,
+        with_session_columns,
     )
 
     gap = 60  # seconds, small so fuzz steps straddle it
@@ -52,8 +61,18 @@ def test_lag_formulation_equals_session_window_fuzz(spark):
         return rows
 
     def numbered(df):
-        got = with_session_seq(df, gap_seconds=gap, order_cols=["event_id"])
-        return {r["event_id"]: r["session_seq"] for r in got.collect()}
+        """event_id → (session_seq, visit_key)."""
+        got = with_session_columns(df, gap_seconds=gap, order_cols=["event_id"])
+        return {r["event_id"]: (r["session_seq"], r["visit_key"]) for r in got.collect()}
+
+    def expected(rows, gap_t, key_time=lambda t: t):
+        """The walk's sessions, keyed ``user_<key_time(start)>``: epoch
+        seconds as they are, or a timestamp's epoch micros."""
+        users = {i: u for i, u, _ in rows}
+        return {
+            i: (seq, f"{users[i]}_{key_time(start)}")
+            for i, (seq, start) in _gap_walk(rows, gap_t).items()
+        }
 
     @given(st.lists(st.tuples(st.integers(0, 2), st.integers(1_700_000_000, 1_700_000_100), steps_s),
                     min_size=1, max_size=25))
@@ -61,7 +80,7 @@ def test_lag_formulation_equals_session_window_fuzz(spark):
     def check_seconds(evs):
         rows = walk(evs)
         df = spark.createDataFrame(rows, "event_id long, user_id long, ts long")
-        assert numbered(df) == _gap_walk(rows, gap)
+        assert numbered(df) == expected(rows, gap)
 
     # In 2400, epoch micros exceed 2**53: a double of them, or of epoch
     # seconds, no longer tells a step of gap + 1 µs from one of gap.
@@ -77,18 +96,21 @@ def test_lag_formulation_equals_session_window_fuzz(spark):
             [(i, u, base + dt.timedelta(microseconds=t)) for i, u, t in rows],
             "event_id long, user_id long, ts timestamp",
         )
-        want = _gap_walk(rows, gap_us)
+        # A start's epoch micros as PySpark converts the datetime.
+        want = expected(
+            rows, gap_us, lambda t: T.TimestampType().toInternal(base + dt.timedelta(microseconds=t))
+        )
         assert numbered(df) == want
         sessions = {}
         for i, u, t in rows:
-            sessions.setdefault((u, want[i]), []).append(t)
+            sessions.setdefault((want[i][1], u), []).append(t)
         assert {
-            (r["user_id"], r["visit_start"], r["visit_end"], r["n_hits"])
+            (r["visit_key"], r["user_id"], r["visit_start"], r["visit_end"], r["n_hits"])
             for r in sessionize_visits(df, gap_seconds=gap).collect()
         } == {
-            (u, base + dt.timedelta(microseconds=min(ts)),
+            (key, u, base + dt.timedelta(microseconds=min(ts)),
              base + dt.timedelta(microseconds=max(ts)), len(ts))
-            for (u, _), ts in sessions.items()
+            for (key, u), ts in sessions.items()
         }
 
     check_seconds()
@@ -98,11 +120,13 @@ def test_lag_formulation_equals_session_window_fuzz(spark):
 def test_session_seq_rejects_a_ts_it_cannot_compare_in_integers(spark):
     import pytest
 
-    from web_analytics_visits_re_processing_spark.operators.sessionize import with_session_seq
+    from web_analytics_visits_re_processing_spark.operators.sessionize import (
+        with_session_columns,
+    )
 
     df = spark.createDataFrame([(1, 1.5)], "user_id long, ts double")
     with pytest.raises(TypeError, match="ts must be a timestamp or integral"):
-        with_session_seq(df)
+        with_session_columns(df)
 
 
 def test_dynamic_gap_running_end_merges_past_short_gap(spark):

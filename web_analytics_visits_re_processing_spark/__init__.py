@@ -18,9 +18,12 @@ Design principles (SURVEY.md §1.3/§4):
 - **One shuffle where one shuffle suffices.** Sessionization shuffles
   once on the user key; visits and hits both derive from that single
   exchange.
-- **Streaming-compatible expressions.** The batch sessionizer uses
-  ``session_window`` — the identical expression runs under Structured
-  Streaming with a watermark (streaming/ package).
+- **Streaming-compatible expressions.** The daily job numbers and keys
+  visits in one sorted pass, a ``lag`` window and a running sum
+  (``with_session_columns``). The visits aggregate
+  ``sessionize_visits`` cuts the same visits with ``session_window``
+  and keys them with the same expression; it runs unchanged under
+  Structured Streaming with a watermark (streaming/ package).
 - **Python only at the edges.** Pandas UDFs (Arrow-batched) appear only
   where built-in expressions genuinely cannot express the semantics
   (e.g. vectorized embedding math, the pure-Python image codec).

@@ -1,4 +1,4 @@
-"""Event-code flag functions (reference ``main.py:24-42``).
+"""Event-code flag columns (reference ``main.py:24-42``).
 
 The hit log's ``events`` column is a comma-separated list of numeric
 event codes; a named flag is 1 iff its mapped code is an EXACT member
@@ -17,40 +17,24 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# main.py:26-34. 'rfb' is mapped in the reference but never emitted to
-# the output dict (dead mapping, SURVEY §1.2); we expose it anyway so
-# the full mapping is usable.
-EVENT_CODES: dict[str, str] = {
-    "order": "1",
+# Output column → event code (main.py:26-34), in the order of the
+# reference's hit output (main.py:68-73), which renames 'bag' to
+# 'bag_view' (main.py:70). Its 'rfb' → '13' mapping is never emitted
+# (SURVEY §1.2), so it has no column here.
+FLAG_CODES: dict[str, str] = {
     "pdp_view": "2",
-    "checkout": "11",
+    "order": "1",
+    "bag_view": "14",
     "atb": "12",
-    "rfb": "13",
-    "bag": "14",
+    "checkout": "11",
     "payment": "204",
 }
 
-# Output column name per flag; the reference renames 'bag' → 'bag_view'
-# in its output dict (main.py:70).
-FLAG_COLUMNS: dict[str, str] = {
-    "pdp_view": "pdp_view",
-    "order": "order",
-    "bag": "bag_view",
-    "atb": "atb",
-    "checkout": "checkout",
-    "payment": "payment",
-}
-
-
-def event_flag(events_list: Column, event_name: str) -> Column:
-    """1 iff the mapped code for ``event_name`` ∈ ``events_list``."""
-    code = EVENT_CODES[event_name]
-    return F.array_contains(events_list, code).cast("int")
-
 
 def all_event_flags(events_list: Column) -> list[Column]:
-    """The six flag columns of the reference's hit output (main.py:68-73)."""
+    """The six flag columns of the reference's hit output: 1 iff the
+    column's code is in ``events_list``."""
     return [
-        event_flag(events_list, name).alias(out_name)
-        for name, out_name in FLAG_COLUMNS.items()
+        F.array_contains(events_list, code).cast("int").alias(column)
+        for column, code in FLAG_CODES.items()
     ]

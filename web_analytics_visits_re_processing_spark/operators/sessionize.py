@@ -13,24 +13,25 @@ in the open visit. The gap is compared in integers: epoch micros for
 timestamps, the raw value for integral epoch seconds. A null ``ts``
 belongs to no visit.
 
-One boundary test (``_visit_boundary``: a ``lag`` over the
-user-ordered window) is the only code that applies this rule, and a
-running sum over it numbers the sessions. ``with_session_seq`` adds
-that number alone; every registry query that groups by ``(user_id,
-session_seq)`` builds on it. ``with_session_columns`` (the paper's
-job) reads the same boundaries in the same sorted pass: one window
-operator holds the running sum and a running max of the visit-start
-``ts``, which gives each hit its ``visit_start`` and ``visit_key``
-without a second sort on ``(user_id, session_seq)``. ``visit_end`` is
-an aggregate of the visit, taken in ``visits_from_hits``. The DuckDB
-oracles spell the same lag/running sum in SQL.
+``with_session_columns`` is the only code that applies this rule,
+numbers the visits and builds the key, in one user-ordered pass: a
+``lag`` window finds the boundaries, then one window operator holds the
+running sum that numbers the visits (``session_seq``) and a running max
+of the visit-start ``ts`` (``visit_start``), and the key is built from
+that start. Every registry query that groups by ``(user_id,
+session_seq)`` calls it too; Spark prunes the running max and the key
+such a query never reads, so it plans one exchange, one sort and two
+window operators. ``visit_end`` is an aggregate of the visit, taken in
+``visits_from_hits``. The DuckDB oracles spell the same lag/running sum
+in SQL.
 
 ``sessionize_visits`` aggregates the same visits with Spark's
 ``session_window``, the form that also runs under ``readStream`` +
-``withWatermark`` (``streaming.sessionize_stream``). Spark merges
-session windows in micros and joins an event landing exactly at a
-window's end, so its visits are the ones ``with_session_seq`` numbers;
-``tests/test_sessionize.py`` pins both against a plain-Python gap walk.
+``withWatermark`` (``streaming.sessionize_stream``), and keys them with
+the same expression. Spark merges session windows in micros and joins
+an event landing exactly at a window's end, so its visits are the ones
+``with_session_columns`` numbers; ``tests/test_sessionize.py`` pins
+both against a plain-Python gap walk.
 
 Divergences from the reference, both deliberate (SURVEY §4.3):
 
@@ -39,8 +40,8 @@ Divergences from the reference, both deliberate (SURVEY §4.3):
   epoch-seconds strings, correct for everything else.
 - Rows with null/unparseable timestamps never join a visit (the
   parser counts them; ``main.py:93`` would raise on non-numeric).
-  ``sessionize_visits`` drops them; ``with_session_seq`` keeps them
-  with a null ``session_seq`` so one frame can still feed the visitors
+  ``sessionize_visits`` drops them; ``with_session_columns`` keeps them
+  with null session columns so one frame can still feed the visitors
   sink, and ``visits_from_hits`` skips them.
 
 Scale notes (100 TB): the only shuffle is on the user key. Web-scale
@@ -57,17 +58,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 DEFAULT_GAP_SECONDS = 1800  # 30 min, the reference's main.py:207
-
-
-def visit_key_col(user_col: Column, visit_start_col: Column) -> Column:
-    """``visit_key = user_id || '_' || epoch_micros(visit_start)``.
-
-    The reference concatenates the raw epoch-seconds string
-    (``main.py:122``); we use epoch *micros* so sub-second data cannot
-    collide, and cast through bigint so the key is deterministic and
-    DuckDB-reproducible (``user_id || '_' || epoch_us(visit_start)``).
-    """
-    return F.concat_ws("_", user_col.cast("string"), F.unix_micros(visit_start_col))
 
 
 def sessionize_visits(
@@ -99,7 +89,7 @@ def sessionize_visits(
         .agg(*aggs)
     )
     return out.select(
-        visit_key_col(F.col(user_col), F.col("visit_start")).alias("visit_key"),
+        _visit_key(out, user_col).alias("visit_key"),
         F.col(user_col),
         "visit_start",
         "visit_end",
@@ -108,57 +98,32 @@ def sessionize_visits(
     )
 
 
-def _epoch_int(df: DataFrame, ts_col: str, col: Column) -> tuple[Column, int]:
-    """``col``, of ``ts_col``'s type, as the integer the gap is compared
-    in (epoch micros, or the epoch seconds themselves), and one second
-    in that unit."""
-    dtype = df.schema[ts_col].dataType
+def _epoch_int(df: DataFrame, col: str) -> tuple[Column, int]:
+    """Column ``col`` as the integer visits are compared and keyed in
+    (epoch micros for a timestamp, integral epoch seconds as they are),
+    and one second in that unit."""
+    dtype = df.schema[col].dataType
     if isinstance(dtype, T.TimestampType):
-        return F.unix_micros(col), 1_000_000
+        return F.unix_micros(F.col(col)), 1_000_000
     if isinstance(dtype, T.IntegralType):
-        return col, 1
+        return F.col(col), 1
     raise TypeError(
-        f"{ts_col} must be a timestamp or integral epoch seconds, not {dtype.simpleString()}"
+        f"{col} must be a timestamp or integral epoch seconds, not {dtype.simpleString()}"
     )
 
 
-def _visit_boundary(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    gap_seconds: int,
-    order_cols: list[str] | None,
-) -> tuple[Column, Window]:
-    """``is_new``, true on a row whose gap to the user's previous row
-    is over ``gap_seconds`` (null on a user's first non-null ``ts``),
-    and the running frame of the user-ordered window it is read in."""
-    t, second = _epoch_int(df, ts_col, F.col(ts_col))
-    w_user = Window.partitionBy(user_col).orderBy(ts_col, *(order_cols or []))
-    is_new = t - F.lag(t).over(w_user) > F.lit(gap_seconds * second)
-    return is_new, w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+def _visit_key(df: DataFrame, user_col: str) -> Column:
+    """``visit_key = user || '_' || visit_start`` over ``df``'s
+    ``visit_start``, the start as ``_epoch_int`` gives it.
 
-
-def with_session_seq(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
-    order_cols: list[str] | None = None,
-) -> DataFrame:
-    """Add ``session_seq``, each row's visit number within its user
-    (from 0) by the module's rule, ``order_cols`` breaking ``ts`` ties.
-    A null ``ts`` gives a null ``session_seq`` and does not shift the
-    numbering. One ``user_col`` exchange, which any later window or
-    ``groupBy`` keyed by ``(user_col, session_seq)`` reuses.
+    The reference concatenates the raw epoch-seconds string
+    (``main.py:122``), which the hit log's epoch seconds reproduce
+    exactly; a timestamp start gives epoch *micros*, so sub-second data
+    cannot collide, and the key stays DuckDB-reproducible
+    (``user_id || '_' || epoch_us(visit_start)``).
     """
-    is_new, w_run = _visit_boundary(df, user_col, ts_col, gap_seconds, order_cols)
-    return df.withColumn(
-        "session_seq",
-        F.when(
-            F.col(ts_col).isNotNull(),
-            F.sum(F.when(is_new, 1).otherwise(0)).over(w_run),
-        ),
-    )
+    start, _ = _epoch_int(df, "visit_start")
+    return F.concat_ws("_", F.col(user_col).cast("string"), start)
 
 
 def with_session_columns(
@@ -169,25 +134,28 @@ def with_session_columns(
     order_cols: list[str] | None = None,
 ) -> DataFrame:
     """Stamp ``session_seq`` / ``visit_start`` / ``visit_key`` onto
-    every hit (the reference's R7+R10 without collect/explode) in the
-    one user-ordered pass ``with_session_seq`` sorts for: a ``lag``
-    window finds the boundaries, then one window holds the running
-    sum that numbers the visits and the running max of the visit-start
-    ``ts`` (rows are in ``ts`` order, so the latest start seen is the
-    row's own visit's). One exchange, one sort, no Python. Unlike the
-    reference's collect-then-explode (``main.py:115-146``), no session
-    must fit in one worker's memory. Null-``ts`` rows are kept with
-    null session columns. A visit's end is an aggregate, not a per-hit
-    column: ``visits_from_hits`` takes it.
+    every hit (the reference's R7+R10 without collect/explode) by the
+    module's rule, ``order_cols`` breaking ``ts`` ties: ``session_seq``
+    is the hit's visit number within its user, from 0.
+
+    One user-ordered pass: a ``lag`` window finds the boundaries, then
+    one window holds the running sum that numbers the visits and the
+    running max of the visit-start ``ts`` (rows are in ``ts`` order, so
+    the latest start seen is the row's own visit's). One ``user_col``
+    exchange and one sort, no Python, which any later window or
+    ``groupBy`` keyed by ``(user_col, session_seq)`` reuses; columns a
+    caller never reads are pruned from the plan. Unlike the reference's
+    collect-then-explode (``main.py:115-146``), no session must fit in
+    one worker's memory. A null ``ts`` gives null session columns and
+    does not shift the numbering. A visit's end is an aggregate, not a
+    per-hit column: ``visits_from_hits`` takes it.
     """
-    is_new, w_run = _visit_boundary(df, user_col, ts_col, gap_seconds, order_cols)
+    t, second = _epoch_int(df, ts_col)
+    w_user = Window.partitionBy(user_col).orderBy(ts_col, *(order_cols or []))
+    w_run = w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ts, new = F.col(ts_col), F.col("_new_visit")
-    # The key's time is visit_start as that integer: epoch micros for
-    # timestamps, and for the raw hit log's epoch seconds the
-    # reference's exact `user_id_<seconds>` (main.py:122).
-    start, _ = _epoch_int(df, ts_col, F.col("visit_start"))
-    return (
-        df.withColumn("_new_visit", is_new)
+    framed = (
+        df.withColumn("_new_visit", t - F.lag(t).over(w_user) > F.lit(gap_seconds * second))
         .withColumns(
             {
                 "session_seq": F.when(ts.isNotNull(), F.sum(F.when(new, 1).otherwise(0)).over(w_run)),
@@ -195,11 +163,8 @@ def with_session_columns(
             }
         )
         .drop("_new_visit")
-        .withColumn(
-            "visit_key",
-            F.when(ts.isNotNull(), F.concat_ws("_", F.col(user_col).cast("string"), start)),
-        )
     )
+    return framed.withColumn("visit_key", F.when(ts.isNotNull(), _visit_key(framed, user_col)))
 
 
 def visits_from_hits(hits_with_keys: DataFrame) -> DataFrame:

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from web_analytics_visits_re_processing_spark.operators.sessionize import (
     sessionize_visits,
     with_session_columns,
-    with_session_seq,
 )
 from web_analytics_visits_re_processing_spark.plans.analytics import _SESSION_CTE
 from web_analytics_visits_re_processing_spark.plans.registry import query
@@ -2079,7 +2078,7 @@ def q_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
             "is_conv"
         ),
     )
-    sess = with_session_seq(ev, "user_id", "ts", 1800, order_cols=["event_id"])
+    sess = with_session_columns(ev, "user_id", "ts", 1800, order_cols=["event_id"])
     ws = Window.partitionBy("user_id", "session_seq").orderBy(
         "ts", "event_id"
     )
@@ -2358,7 +2357,7 @@ def q_session_conversion_by_entry(
     collapse uses min_by over the (ts, event_id) order — no second
     window pass and no join back — and everything to that point rides
     ONE user-keyed exchange; the final rollup is ≤ |types| rows."""
-    sess = with_session_seq(
+    sess = with_session_columns(
         _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(
@@ -2588,7 +2587,7 @@ def q_peak_concurrent_sessions(
     an events×events overlap join). Midnight-spanning sessions credit
     their start day end-to-end (documented choice, replayed in the
     oracle)."""
-    sess = with_session_seq(
+    sess = with_session_columns(
         _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     spans = sess.groupBy("user_id", "session_seq").agg(
@@ -2829,7 +2828,7 @@ def q_skip_bigram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamps tiebreak lexicographically (replayed in the oracle).
     Level-k patterns iterate this same join, exactly like the Apriori
     escalation note on `association_rules_pairs`."""
-    sess = with_session_seq(
+    sess = with_session_columns(
         _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     firsts = sess.groupBy("user_id", "session_seq", "event_type").agg(
@@ -3424,7 +3423,7 @@ def q_session_length_percentiles(
     Sessions collapse on the user exchange; lengths compress to a
     (len, count) histogram map-side, so the percentile windows walk
     the length domain, never sessions."""
-    sess = with_session_seq(
+    sess = with_session_columns(
         _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     lens = sess.groupBy("user_id", "session_seq").agg(
@@ -4196,7 +4195,7 @@ def q_bounce_by_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`bounce_rate_weekly`) by its actionable dimension, and pairs
     with `session_conversion_by_entry` (same per-session collapse:
     struct-min entry + count, one user exchange)."""
-    sess = with_session_seq(
+    sess = with_session_columns(
         _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(
@@ -5141,7 +5140,7 @@ def q_wilson_ranked_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``extended.py`` documents — Spark ROUND-on-double goes HALF_UP
     via a decimal string while DuckDB rounds the binary value, so a
     gated-and-RANKED scalar must never pass through round)."""
-    sess = with_session_seq(
+    sess = with_session_columns(
         _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(
@@ -5687,7 +5686,7 @@ def q_session_duration_by_outcome(
     (outcome, second) cells map-side; the p50/p90 read off the
     cumulative rank rule — the histogram-quantile design keyed by
     outcome."""
-    sess = with_session_seq(
+    sess = with_session_columns(
         _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(

@@ -18,7 +18,7 @@ integer-exact, bounded-state house style:
 The reference (``main.py:22-240``) has none of this — its analytics
 surface ends at visit assembly; this module is §2.2 gap-fill on the
 `events` table, numbering 30-min-gap sessions through
-``operators.sessionize.with_session_seq`` like ``webanalytics.py``.
+``operators.sessionize.with_session_columns`` like ``webanalytics.py``.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from web_analytics_visits_re_processing_spark.operators.sessionize import with_session_seq
+from web_analytics_visits_re_processing_spark.operators.sessionize import with_session_columns
 from web_analytics_visits_re_processing_spark.plans.registry import query
 from web_analytics_visits_re_processing_spark.plans.webanalytics import GAP_US, _events
 
@@ -157,7 +157,7 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     larger channel counts the lattice doubles per channel — the
     documented escalation is permutation-sampled Shapley over the
     same mask rollup, same downstream shape."""
-    sess = with_session_seq(
+    sess = with_session_columns(
         _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(
@@ -358,7 +358,7 @@ def q_capped_session_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 'how much does this policy inflate session counts' readout.
     Scale: rides the standard user-key session exchange; the
     histogram is a ≤5-row rollup."""
-    sess = with_session_seq(
+    sess = with_session_columns(
         _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     ws = Window.partitionBy("user_id", "session_seq")
@@ -1029,7 +1029,7 @@ def q_frequent_event_sequences(
     (the BPE distinct-vocab trick — sessions repeat the same handful
     of shapes, so the grid replication touches the shape table, not
     the session table; ~2 s warm at sf0.1)."""
-    sess = with_session_seq(
+    sess = with_session_columns(
         _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     s2 = (

@@ -42,10 +42,11 @@ The knobs below are chosen for correctness-at-scale first:
   process, at the first wrapped call, so set it before building any
   DataFrame.
 - ``spark.sql.shuffle.partitions`` defaults to 32 here (AQE coalesces
-  it per stage); on a real cluster you would size it so each
-  post-shuffle partition is ~128-512 MB (e.g. 100 TB input with heavy
-  reduction → tens of thousands of partitions), or simply let AQE
-  coalesce from a high initial number.
+  it per stage; pass another value through ``extra_conf``); on a real
+  cluster you would size it so each post-shuffle partition is
+  ~128-512 MB (e.g. 100 TB input with heavy reduction → tens of
+  thousands of partitions), or simply let AQE coalesce from a high
+  initial number.
 - **The driver JVM starts from a class-data-sharing archive** (JDK
   dynamic AppCDS, see ``cds``) when ``get_spark`` launches it: on a
   4-core host, set-up (session plus first action) falls from ~8.4 s to
@@ -80,7 +81,6 @@ from pyspark.sql import SparkSession
 
 from web_analytics_visits_re_processing_spark import cds
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
 # A JVM that records a CDS archive dumps it after stdin closes: 10-20 s
 # for 150-220 MB on a 4-core host.
 JVM_EXIT_TIMEOUT_S = 120
@@ -89,7 +89,6 @@ JVM_EXIT_TIMEOUT_S = 120
 def get_spark(
     app_name: str = "web-analytics-engine",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
@@ -116,9 +115,7 @@ def get_spark(
         "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.python.sql.dataFrameDebugging.enabled": "false",
-        "spark.sql.shuffle.partitions": str(
-            shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-        ),
+        "spark.sql.shuffle.partitions": "32",
         # Parquet scans: keep row groups parallel but bounded.
         "spark.sql.files.maxPartitionBytes": "134217728",
         # Broadcast any dimension <64 MB — region/nation/customer/part
