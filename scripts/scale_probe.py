@@ -435,17 +435,12 @@ def build_scaled_fixture(spark, out_dir: str) -> None:
 def skew_probe(spark) -> dict:
     """Planted-whale skew probe: sf0.1 events + ONE synthetic user with
     ~2M hits at 1-second cadence (one mega-session; override
-    $SPARK_GRAFT_WHALE_HITS). Times the plain sessionizer — whose
-    user-key shuffle lands the whole whale on ONE reducer — against
-    the ``salt_sessions`` escape hatch, which appends the UTC day to
-    the grouping key so the whale fans out across ~24 reducers
-    (documented approximation: salted sessions split at day
-    boundaries). Both paths run the identical session_window agg and
-    full noop materialization."""
+    $SPARK_GRAFT_WHALE_HITS). Times the sessionizer, whose user-key
+    shuffle lands the whole whale on ONE reducer, through a full noop
+    materialization."""
     from pyspark.sql import functions as F
 
     from web_analytics_visits_re_processing_spark.operators.sessionize import (
-        salt_sessions,
         sessionize_visits,
     )
     from web_analytics_visits_re_processing_spark.sources.tables import load_table
@@ -461,17 +456,10 @@ def skew_probe(spark) -> dict:
         ).alias("ts"),
     )
     df = events.unionByName(whale)
-    out: dict[str, float | int] = {"whale_hits": whale_hits}
-    for label, d, ucol in (
-        ("plain", df, "user_id"),
-        ("salted", salt_sessions(df, "user_id"), "_salted_user"),
-    ):
-        t0 = time.perf_counter()
-        sessionize_visits(d, user_col=ucol).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        out[f"{label}_sec"] = round(time.perf_counter() - t0, 3)
-        print(f"# skew {label}: {out[f'{label}_sec']}s", file=sys.stderr)
+    t0 = time.perf_counter()
+    sessionize_visits(df).write.format("noop").mode("overwrite").save()
+    out = {"whale_hits": whale_hits, "plain_sec": round(time.perf_counter() - t0, 3)}
+    print(f"# skew plain: {out['plain_sec']}s", file=sys.stderr)
     return out
 
 

@@ -248,3 +248,17 @@ def test_wav_blob_query_construction(spark, sf_dir):
             assert w.getnchannels() == n % 2 + 1
             assert w.getframerate() == 8000 + (n % 8) * 4000
             assert w.getsampwidth() == 2
+
+
+def test_png_files_are_staged_under_the_checkouts_tmp(spark, sf_dir):
+    """``binaryfile_png_ingest``'s PNG fixture lands in the checkout's
+    own ``.tmp/`` (gitignored), not beside the checkout."""
+    import os
+
+    from web_analytics_visits_re_processing_spark.plans.llmdata import _staged_png_dir
+
+    tmp_root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
+    out = _staged_png_dir(spark, sf_dir)
+    assert os.path.commonpath([out, tmp_root]) == tmp_root
+    assert out == os.path.join(tmp_root, "png_files", os.path.basename(sf_dir), "imgs")
+    assert any(name.endswith(".png") for name in os.listdir(out))

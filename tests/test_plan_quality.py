@@ -299,8 +299,8 @@ def test_aqe_splits_skewed_join_partitions(spark):
     detects an oversized join partition (one hot key) and splits it —
     `skew=true` appears in the FINAL adaptive plan. Thresholds are
     lowered so the property is checkable on local data; salting
-    (salt_sessions / salted_two_stage_agg) remains the explicit
-    escape hatch where per-key state defeats AQE."""
+    (salted_two_stage_agg) remains the explicit escape hatch where
+    per-key state defeats AQE."""
     tuned = {
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",

@@ -25,6 +25,16 @@ def _gap_walk(rows, gap):
     return sessions
 
 
+def _walk(users_steps):
+    """(event_id, user, t) rows from ``(user, start, step)`` draws:
+    each user's t is its start plus its running step sum."""
+    rows, t = [], {}
+    for event_id, (user, start, step) in enumerate(users_steps):
+        t[user] = t.get(user, start) + step
+        rows.append((event_id, user, t[user]))
+    return rows
+
+
 def test_lag_formulation_equals_session_window_fuzz(spark):
     """Property: with_session_columns (the lag/running-sum numbering
     the DuckDB oracles spell in SQL) numbers sessions exactly as a
@@ -52,14 +62,6 @@ def test_lag_formulation_equals_session_window_fuzz(spark):
         [0, 1, gap_us // 2, gap_us - 1, gap_us, gap_us + 1, 5 * gap_us]
     )
 
-    def walk(users_steps):
-        """(event_id, user, t): each user's t is its running step sum."""
-        rows, t = [], {}
-        for event_id, (user, start, step) in enumerate(users_steps):
-            t[user] = t.get(user, start) + step
-            rows.append((event_id, user, t[user]))
-        return rows
-
     def numbered(df):
         """event_id → (session_seq, visit_key)."""
         got = with_session_columns(df, gap_seconds=gap, order_cols=["event_id"])
@@ -78,7 +80,7 @@ def test_lag_formulation_equals_session_window_fuzz(spark):
                     min_size=1, max_size=25))
     @settings(max_examples=10, deadline=None)
     def check_seconds(evs):
-        rows = walk(evs)
+        rows = _walk(evs)
         df = spark.createDataFrame(rows, "event_id long, user_id long, ts long")
         assert numbered(df) == expected(rows, gap)
 
@@ -91,7 +93,7 @@ def test_lag_formulation_equals_session_window_fuzz(spark):
     @example(dt.datetime(2400, 1, 1), [(0, 0, 0), (0, 0, gap_us + 1)])
     @settings(max_examples=15, deadline=None)
     def check_micros(base, evs):
-        rows = walk(evs)
+        rows = _walk(evs)
         df = spark.createDataFrame(
             [(i, u, base + dt.timedelta(microseconds=t)) for i, u, t in rows],
             "event_id long, user_id long, ts timestamp",
@@ -201,6 +203,101 @@ def test_incremental_merge_equals_full_batch(spark):
     assert got[(1, m(-120))] == 2
     assert got[(1, m(-30))] == 3
     assert got[(2, m(-31))] == 1 and got[(2, dt.datetime(2024, 1, 16, 0, 0, 1))] == 1
+
+
+def test_incremental_merge_of_epoch_seconds_visits(spark):
+    """The hit-log path's visits carry integral epoch seconds: merged
+    across a cutoff they equal one pass over all the hits, gluing at
+    exactly the gap and splitting at gap + 1 s."""
+    from pyspark.sql import functions as F
+
+    from web_analytics_visits_re_processing_spark.operators.sessionize import (
+        merge_incremental_visits,
+        visits_from_hits,
+        with_session_columns,
+    )
+
+    cut = 1_705_363_200  # 2024-01-16 00:00:00 UTC
+    rows = [
+        (1, cut - 3000), (1, cut - 1800), (1, cut), (1, cut + 60),  # glue at the gap
+        (2, cut - 1801), (2, cut),  # gap + 1 s: two visits
+        (3, cut - 9000),  # prior only
+        (4, cut + 10),  # new only
+    ]
+    hits = spark.createDataFrame(rows, "user_id long, ts long")
+
+    def visits(df):
+        return visits_from_hits(with_session_columns(df))
+
+    inc = merge_incremental_visits(
+        visits(hits.where(F.col("ts") < cut)), visits(hits.where(F.col("ts") >= cut))
+    )
+    cols = ["visit_key", "user_id", "visit_start", "visit_end", "n_hits"]
+    got = sorted(map(tuple, inc.select(*cols).collect()))
+    assert got == sorted(map(tuple, visits(hits).select(*cols).collect()))
+    assert got == [
+        (f"1_{cut - 3000}", 1, cut - 3000, cut + 60, 4),
+        (f"2_{cut - 1801}", 2, cut - 1801, cut - 1801, 1),
+        (f"2_{cut}", 2, cut, cut, 1),
+        (f"3_{cut - 9000}", 3, cut - 9000, cut - 9000, 1),
+        (f"4_{cut + 10}", 4, cut + 10, cut + 10, 1),
+    ]
+
+
+def test_incremental_merge_equals_one_pass_fuzz(spark):
+    """Property: a generated feed cut at any time and sessionized on
+    each side merges into the visits of one pass over the whole feed,
+    for timestamps (``sessionize_visits``) and for integral epoch
+    seconds (``visits_from_hits`` over ``with_session_columns``, the
+    hit-log path). The examples put a step of exactly the gap and one
+    of gap + 1 astride the cut, after a visit of more than one hit."""
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+    from pyspark.sql import functions as F
+
+    from web_analytics_visits_re_processing_spark.operators.sessionize import (
+        merge_incremental_visits,
+        sessionize_visits,
+        visits_from_hits,
+        with_session_columns,
+    )
+
+    gap, t0 = 60, 1_700_000_000
+    steps = st.sampled_from([0, 1, gap // 2, gap - 1, gap, gap + 1, 5 * gap])
+    feeds = st.lists(
+        st.tuples(st.integers(0, 2), st.integers(t0, t0 + 100), steps), min_size=1, max_size=25
+    )
+    cols = ["visit_key", "user_id", "visit_start", "visit_end", "n_hits"]
+
+    def one_pass(df):
+        if df.schema["ts"].dataType.typeName() == "timestamp":
+            return sessionize_visits(df, gap_seconds=gap)
+        return visits_from_hits(with_session_columns(df, gap_seconds=gap))
+
+    def check(df, cut):
+        inc = merge_incremental_visits(
+            one_pass(df.where(F.col("ts") < cut)),
+            one_pass(df.where(F.col("ts") >= cut)),
+            gap_seconds=gap,
+        )
+        assert sorted(map(tuple, inc.select(*cols).collect())) == sorted(
+            map(tuple, one_pass(df).select(*cols).collect())
+        )
+
+    @given(feeds, st.integers(0, 1500))
+    # Across the cut, user 0's two-hit visit glues at exactly the gap
+    # after its end, and user 1's splits at gap + 1.
+    @example([(u, t0, step) for u, last in ((0, gap), (1, gap + 1)) for step in (0, gap // 2, last)],
+             gap // 2 + gap)
+    @example([(0, t0, 0), (0, t0, gap + 1), (0, t0, gap)], gap + 1)
+    @settings(max_examples=8, deadline=None)
+    def check_both(evs, cut_offset):
+        cut = F.lit(t0 + cut_offset)
+        longs = spark.createDataFrame(_walk(evs), "event_id long, user_id long, ts long")
+        check(longs, cut)
+        check(longs.withColumn("ts", F.timestamp_seconds("ts")), F.timestamp_seconds(cut))
+
+    check_both()
 
 
 def test_null_ts_rows_kept_without_joining_a_visit(spark):

@@ -84,36 +84,6 @@ def test_session_invariants(spark, seed):
                 assert delta > GAP
 
 
-def test_salt_sessions_on_both_ts_types(spark):
-    """The skew escape hatch must work on epoch-seconds longs (the
-    hit-log path) as well as timestamps, and the salted key must be
-    consumable by the sessionizer."""
-    import datetime as dt
-
-    from web_analytics_visits_re_processing_spark.operators.sessionize import (
-        salt_sessions,
-        sessionize_visits,
-    )
-
-    day0, day1 = 1700000000, 1700000000 + 86_400
-    longs = spark.createDataFrame(
-        [("bot", day0), ("bot", day0 + 60), ("bot", day1)],
-        "user_id string, ts long",
-    )
-    salted = salt_sessions(longs, "user_id", "ts")
-    keys = {r["_salted_user"] for r in salted.collect()}
-    assert len(keys) == 2  # day boundary splits the hot key
-
-    stamps = spark.createDataFrame(
-        [("bot", dt.datetime(2024, 1, 1, 12)), ("bot", dt.datetime(2024, 1, 2, 12))],
-        "user_id string, ts timestamp",
-    )
-    visits = sessionize_visits(
-        salt_sessions(stamps, "user_id", "ts"), user_col="_salted_user"
-    )
-    assert visits.count() == 2
-
-
 def test_hot_key_sessionization_completes_and_is_correct(spark):
     """Power-law reality check: one bot user with 30k hits among
     normal users — the window formulation must spill/sort through it

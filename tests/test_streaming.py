@@ -260,13 +260,13 @@ def test_restart_keeps_state_width_and_emits_each_session_once(spark, tmp_path):
 
 
 def test_stateful_abandonment_across_batches(spark, tmp_path):
-    """applyInPandasWithState carries session state ACROSS micro-batches
-    (maxFilesPerTrigger=1): an abandoned session split over two files
-    emits exactly once, a converted session emits nothing, and the
-    final session emits via event-time timeout."""
+    """The abandoned-session stream carries session state ACROSS
+    micro-batches (maxFilesPerTrigger=1): an abandoned session split
+    over two files emits exactly once, a converted session emits
+    nothing, and the final session emits when the watermark passes it."""
     import datetime as dt
 
-    from web_analytics_visits_re_processing_spark.streaming.stateful import (
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
         abandoned_sessions_stream,
     )
 
@@ -313,6 +313,59 @@ def test_stateful_abandonment_across_batches(spark, tmp_path):
     assert r["session_start_us"] == us(base)
     assert r["session_end_us"] == us(base + dt.timedelta(minutes=10))
     assert (r["n_trigger"], r["n_events"]) == (2, 3)
+
+
+def test_abandonment_late_click_inside_watermark_opens_its_own_visit(spark, tmp_path):
+    """A click that arrives one micro-batch late, 40 minutes before the
+    user's open session and inside the watermark, is its own visit as
+    in batch: the stream emits the same two abandoned visits as the
+    same expression over the batch frame, each with its start at or
+    before its end."""
+    from web_analytics_visits_re_processing_spark.plans.streaming_queries import (
+        abandoned_sessions_stream,
+    )
+
+    base = dt.datetime(2024, 3, 1, 12, 0, 0)
+    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+    src = tmp_path / "src"
+    batches = [
+        [(1, base, 1, "click", 1.0, "{}")],
+        # 11:20: after the watermark (12:00 - 1 h), 40 min before the
+        # open session, so more than the gap from it
+        [(2, base - dt.timedelta(minutes=40), 1, "click", 1.0, "{}")],
+        [(9, base + dt.timedelta(days=3), 99, "view", 0.0, "{}")],
+    ]
+    for rows in batches:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(str(src))
+
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(src))
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    q = (
+        abandoned_sessions_stream(stream, gap_seconds=1800)
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300)
+    dropped = sum(
+        op.get("numRowsDroppedByWatermark", 0)
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    )
+    q.stop()
+
+    got = sorted(map(tuple, spark.read.parquet(out_dir).collect()))
+    us = lambda d: int(d.replace(tzinfo=dt.timezone.utc).timestamp()) * 1_000_000
+    late, first = us(base - dt.timedelta(minutes=40)), us(base)
+    assert dropped == 0
+    assert got == [(1, late, late, 1, 1), (1, first, first, 1, 1)]
+    batch = abandoned_sessions_stream(
+        spark.createDataFrame([r for rows in batches for r in rows], schema), gap_seconds=1800
+    )
+    assert got == sorted(map(tuple, batch.collect()))
 
 
 def test_streaming_dedup_equals_batch_distinct_with_eviction(spark, sf_dir):

@@ -394,11 +394,11 @@ def q_incremental_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental sessionization across a mid-month cutoff: history
     (< Jan 16) and the new drop (≥ Jan 16) are sessionized as
     separate batches — the daily-drop pattern that avoids re-scanning
-    100 TB of history — then glued by
+    100 TB of history — then merged by
     ``operators/sessionize.py::merge_incremental_visits`` (one
-    user-keyed row per side joins; interior sessions pass through
-    untouched). Gated against FULL-batch sessionization of all
-    events."""
+    user-keyed lag over the visit intervals; only a user's last prior
+    and first new visit can join). Gated against FULL-batch
+    sessionization of all events."""
     from web_analytics_visits_re_processing_spark.operators.sessionize import (
         merge_incremental_visits,
     )

@@ -21,11 +21,7 @@ from pyspark.sql import functions as F
 
 from web_analytics_visits_re_processing_spark.plans.registry import query
 from web_analytics_visits_re_processing_spark.sources.tables import load_table
-
-_TMP_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".tmp",
-)
+from web_analytics_visits_re_processing_spark.streaming.replay import replay_workdir
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
@@ -33,9 +29,7 @@ EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 # --- file-format readers ------------------------------------------------------
 
 def _roundtrip_dir(sf_dir: str, fmt: str) -> str:
-    return os.path.join(
-        _TMP_ROOT, f"roundtrip_{fmt}", os.path.basename(sf_dir.rstrip("/")) or "sf"
-    )
+    return replay_workdir(f"roundtrip_{fmt}", sf_dir)
 
 
 def _events_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1087,8 +1081,8 @@ WHERE u.pos < len(t.toks)
 )
 def q_udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF under LATERAL — completes the Python-extension
-    matrix (scalar pandas_udf, grouped-map/agg, mapInPandas,
-    applyInPandasWithState, and table functions). Row-at-a-time Python
+    matrix (scalar pandas_udf, grouped-map/agg, mapInPandas and table
+    functions). Row-at-a-time Python
     generators are the SLOW path — this exact result is expressible
     natively (see `token_positions`/`doc_chunks_overlap`), which is
     why it's gated for API completeness but excluded from the bench
@@ -1490,7 +1484,7 @@ FROM documents
 def q_arrow_byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``mapInArrow`` — the last cell of the Python-vectorization
     matrix (scalar/grouped pandas_udf, applyInPandas, mapInPandas,
-    applyInPandasWithState, UDTF, and now raw Arrow RecordBatches with
+    UDTF, and now raw Arrow RecordBatches with
     no pandas conversion hop): per-doc UTF-8 byte length and space
     count computed entirely in ``pyarrow.compute`` kernels — zero
     per-row Python, zero pandas materialization, zero shuffle. The
@@ -1667,7 +1661,8 @@ def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     choosing a partitioning at 100 TB: per candidate shuffle key
     (user_id, event_type), the 10 heaviest keys with integer ppm
     share and a ×100 skew factor (count ÷ mean count — ≥ say 1000
-    flags a whale for `salt_sessions` / AQE skew handling). One
+    flags a whale: AQE splits it in joins, but a user-keyed window or
+    aggregate runs it on one task). One
     unpivoted scan, one (col, key) hash agg with map-side combine
     (shuffle state = distinct keys), per-col totals joined back from
     a tiny agg; the top-10 window sees only the grouped counts."""

@@ -40,12 +40,7 @@ from web_analytics_visits_re_processing_spark.operators.sessionize import (
 from web_analytics_visits_re_processing_spark.plans.registry import query
 from web_analytics_visits_re_processing_spark.sources.hitlog import read_hitlog
 from web_analytics_visits_re_processing_spark.sources.tables import load_table
-
-# Scratch space for materialized fixtures (inside the repo, gitignored).
-_TMP_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".tmp",
-)
+from web_analytics_visits_re_processing_spark.streaming.replay import replay_workdir
 
 # event_type → comma-separated event-code list. Covers: multi-code
 # lists, the '1' vs '11'/'12' exact-membership trap, the dead 'rfb'
@@ -177,9 +172,7 @@ def materialize_hitlog_tsv(spark: SparkSession, sf_dir: str) -> str:
     return its directory. Cached per (source mtime/size, construction
     version) so repeated runs measure the parse, not fixture
     regeneration."""
-    out = os.path.join(
-        _TMP_ROOT, "hitlog_tsv", os.path.basename(sf_dir.rstrip("/")) or "sf"
-    )
+    out = replay_workdir("hitlog_tsv", sf_dir)
     marker = os.path.join(out, "_FIXTURE_META")
     meta = _fixture_meta(sf_dir)
     if os.path.exists(marker):
@@ -269,9 +262,7 @@ def write_latin1_gzip_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Gzipped ISO-8859-1 TSV from the first ``_LATIN1_LIMIT`` events
     rows (fixture generator — the tiny driver-side collect is the
     fixture writer, not the engine path under test)."""
-    out_dir = os.path.join(
-        _TMP_ROOT, "hitlog_latin1", os.path.basename(sf_dir.rstrip("/")) or "sf"
-    )
+    out_dir = replay_workdir("hitlog_latin1", sf_dir)
     os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, "hits.tsv.gz")
     rows = (

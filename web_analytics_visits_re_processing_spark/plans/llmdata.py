@@ -2928,13 +2928,9 @@ def _staged_png_dir(spark: SparkSession, sf_dir: str) -> str:
     from web_analytics_visits_re_processing_spark.operators.multimodal import (
         with_png_blob,
     )
+    from web_analytics_visits_re_processing_spark.streaming.replay import replay_workdir
 
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    )
-    workdir = os.path.join(
-        repo, ".tmp", "png_files", os.path.basename(sf_dir.rstrip("/")) or "sf"
-    )
+    workdir = replay_workdir("png_files", sf_dir)
     out = os.path.join(workdir, "imgs")
     marker = os.path.join(workdir, "_INPUT_META")
     src = f"{sf_dir}/documents.parquet"

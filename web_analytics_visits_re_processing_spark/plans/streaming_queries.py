@@ -5,8 +5,8 @@ source on the shared harness in ``streaming/replay.py``:
 - ``replay_append`` — the production topology: watermark → APPEND mode
   → parquet file sink, state evicted as the watermark advances and a
   sentinel row flushing the tail (sessions, tumbling/sliding windows,
-  dedup, stream-stream and stream-static joins, the custom stateful
-  operators of ``streaming/stateful.py`` and ``streaming/tws.py``);
+  dedup, stream-stream and stream-static joins, abandoned sessions,
+  the custom stateful operators of ``streaming/tws.py``);
 - ``replay_upsert`` — the serving pattern: update-mode streaming
   aggregation → ``foreachBatch`` snapshot upsert (sketches, histograms,
   totals, experiment cells), read off the SERVED state.
@@ -18,11 +18,12 @@ can record, under real state eviction.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from web_analytics_visits_re_processing_spark.operators.sessionize import (
     DEFAULT_GAP_SECONDS,
+    sessionize_visits,
 )
 from web_analytics_visits_re_processing_spark.plans.analytics import _SESSION_CTE
 from web_analytics_visits_re_processing_spark.plans.registry import query
@@ -168,10 +169,51 @@ def streaming_sliding_counts_append(
     return replay_append(spark, sf_dir, "streaming_sliding_counts", build)
 
 
+# The fixture's add-to-cart stand-in, and the event that converts.
+TRIGGER_EVENT = "click"
+CONVERT_EVENT = "purchase"
+
+
+def abandoned_sessions_stream(
+    events: DataFrame,
+    gap_seconds: int = DEFAULT_GAP_SECONDS,
+    watermark_delay: str = "1 hour",
+) -> DataFrame:
+    """Abandoned sessions: the visits of ``sessionize_visits`` over the
+    watermarked ``events``, with per-visit trigger and convert counts,
+    kept where a trigger came and no conversion did. Columns
+    ``user_id, session_start_us, session_end_us, n_trigger, n_events``.
+
+    In append mode a session is emitted once, when the watermark passes
+    its close; a hit that arrives in a later micro-batch but inside the
+    watermark delay joins (or opens) its visit as in batch. Over a
+    batch frame the watermark is a no-op and this is the batch result.
+    """
+
+    def count_of(event_type: str) -> Column:
+        return F.sum(F.when(F.col("event_type") == event_type, 1).otherwise(0))
+
+    visits = sessionize_visits(
+        events.withWatermark("ts", watermark_delay),
+        gap_seconds=gap_seconds,
+        extra_aggs=[
+            count_of(TRIGGER_EVENT).alias("n_trigger"),
+            count_of(CONVERT_EVENT).alias("n_convert"),
+        ],
+    )
+    return visits.where((F.col("n_trigger") > 0) & (F.col("n_convert") == 0)).select(
+        "user_id",
+        F.unix_micros("visit_start").alias("session_start_us"),
+        F.unix_micros("visit_end").alias("session_end_us"),
+        "n_trigger",
+        F.col("n_hits").alias("n_events"),
+    )
+
+
 @query(
     "streaming_abandoned_sessions",
-    # batch equivalent of the stateful operator: sessions containing a
-    # 'click' (add-to-cart stand-in) but no 'purchase'.
+    # batch equivalent of the stream: sessions containing a 'click'
+    # (add-to-cart stand-in) but no 'purchase'.
     oracle=_SESSION_CTE
     + """
 SELECT user_id,
@@ -186,14 +228,10 @@ HAVING SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) > 0
 """,
 )
 def q_streaming_abandoned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom STATEFUL streaming operator (applyInPandasWithState,
-    event-time timeouts): abandoned-session detection — emit once per
-    closed session that saw an add-to-cart-class event but no
-    purchase. Hash-gated against the batch-sessionization oracle."""
-    from web_analytics_visits_re_processing_spark.streaming.stateful import (
-        abandoned_sessions_stream,
-    )
-
+    """Abandoned-session detection replayed through the append-mode
+    topology: one row per closed session that saw an add-to-cart-class
+    event but no purchase. Hash-gated against the batch-sessionization
+    oracle."""
     abandoned = replay_append(
         spark, sf_dir, "streaming_abandoned_sessions", abandoned_sessions_stream
     )

@@ -1015,8 +1015,8 @@ def q_bot_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse, so the shuffle carries minute buckets, not raw hits;
     both aggs hash-partition on a user-prefixed key, and AQE coalesces
     the tiny second exchange. This is the profile you compute BEFORE
-    sessionizing 100 TB so the whale detector (`salt_sessions`) knows
-    its targets."""
+    sessionizing 100 TB: one task sessionizes each user, so a whale
+    named here is a single-core hot spot."""
     ev = _events(spark, sf_dir)
     per_min = ev.groupBy(
         "user_id", F.expr("unix_micros(ts) div 60000000").alias("minute")
@@ -3419,7 +3419,7 @@ def q_session_length_percentiles(
     session via the cumulative-histogram integer rank rule plus the
     single-hit share (the raw-count cousin of the weekly bounce
     rate). p99 is the number that sizes session-state budgets —
-    and the whale-session tail `salt_sessions` guards against.
+    and the whale-session tail one task must sort and walk alone.
     Sessions collapse on the user exchange; lengths compress to a
     (len, count) histogram map-side, so the percentile windows walk
     the length domain, never sessions."""

@@ -349,9 +349,9 @@ def q_capped_session_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     (analytics products cap sessions so one camped-on-a-tab user
     cannot hold a session open all day), expressed DECLARATIVELY:
     sub-session = (ts − session_start) div cap — fixed buckets from
-    the gap-session start, the same bucketed-approximation convention
-    as ``salt_sessions``' day split (a recursive elapsed-from-
-    sub-session-start rule would need iteration; the bucket form is
+    the gap-session start, a bucketed approximation (a recursive
+    elapsed-from-sub-session-start rule would need iteration; the
+    bucket form is
     one window + one projection and differs only for pathological
     cadences). Output: sessions histogrammed by how many pieces the
     cap cuts them into, with the capped-session total riding along —

@@ -4,7 +4,12 @@ The knobs below are chosen for correctness-at-scale first:
 
 - **AQE on** (coalesce post-shuffle partitions, skew-join splitting,
   runtime broadcast demotion/promotion). At 100 TB the static plan is
-  always wrong somewhere; AQE fixes it at runtime.
+  always wrong somewhere; AQE fixes it at runtime. These are Spark's
+  defaults (``spark.sql.adaptive.enabled``,
+  ``...coalescePartitions.enabled`` and ``...skewJoin.enabled`` all
+  ``true``), so the session sets none of them.
+- **File scans split at 128 MB** (``spark.sql.files.maxPartitionBytes``,
+  Spark's default): parquet row groups stay parallel but bounded.
 - **UTC session timezone** so epoch math is deterministic regardless of
   the host's zone (parquet naive timestamps compare identically in
   Spark and DuckDB oracles).
@@ -108,16 +113,11 @@ def get_spark(
         # falls back to an idempotent runtime set for driver-provided
         # vanilla sessions.
         "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
         "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.python.sql.dataFrameDebugging.enabled": "false",
         "spark.sql.shuffle.partitions": "32",
-        # Parquet scans: keep row groups parallel but bounded.
-        "spark.sql.files.maxPartitionBytes": "134217728",
         # Broadcast any dimension <64 MB — region/nation/customer/part
         # class tables stay broadcast even at large SF.
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),

@@ -1,7 +1,7 @@
 """Fixture-replay harness for the registry's streaming gates.
 
-Every streaming gate (``plans/streaming_queries.py``, ``streaming/
-stateful.py``, ``streaming/tws.py``) replays the bounded events fixture
+Every streaming gate (``plans/streaming_queries.py``,
+``streaming/tws.py``) replays the bounded events fixture
 through a real file-stream source and reads the result back as a batch
 frame, so the batch DuckDB oracle applies verbatim. The decisions that
 replay shares live here, once:

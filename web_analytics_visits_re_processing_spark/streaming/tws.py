@@ -1,8 +1,8 @@
 """Arbitrary stateful processing on Spark 4's
 ``transformWithStateInPandas`` — the typed-state + explicit-timer API
-that supersedes ``applyInPandasWithState`` (which ``stateful.py``
-keeps for the funnel operator; implementing one operator on EACH API
-covers the whole custom-stateful surface).
+that supersedes ``applyInPandasWithState``. It is the package's one
+custom-stateful operator: sessions and abandoned sessions are
+``session_window`` aggregates (``operators.sessionize``).
 
 Operator: per-user LIFETIME aggregates (first/last event time, count,
 exact value cents) held in a ``ValueState`` row, emitted EXACTLY ONCE
@@ -36,8 +36,6 @@ activated ONLY when the real distribution is absent:
 via ``addPyFile`` so the state client can talk to the JVM state
 server (which parses with real protobuf-java — the integration run
 is therefore also a wire-format conformance test of the shim).
-``applyInPandasWithState`` (``stateful.py``) still covers the
-protobuf-free custom-stateful path.
 """
 
 from __future__ import annotations
