@@ -83,377 +83,24 @@ def _sampling_history() -> tuple[dict[str, int], set[str]]:
     return last_pass, latest_bad
 
 
-# Queries first registered in round 6 (after the r05 artifact): they
-# queue BEHIND the older never-verified backlog inside tier 1, so the
-# 45 queries the r05 verdict targeted all fit the 50-slot prefix
-# before this round's additions start consuming slots. Harmless once
-# sampled (tier-1 membership ends at the first hash-green row).
-_REGISTERED_R06 = frozenset(
-    {
-        "incremental_minhash_dedup",
-        "pii_redaction_stats",
-        "leakage_safe_split",
-        "sessionize_dynamic_gap",
-        "set_ops_all_variants",
-        "null_semantics_battery",
-        "binaryfile_png_ingest",
-        "mixture_rebalance_sources",
-        "curation_pipeline",
-        "semdedup_semantic_dups",
-        "line_dedup_stats",
-        "triangle_count_copurchase",
-        "inverted_index_postings",
-        "pmi_top_bigrams",
-        "identity_stitch_visitors",
-        "histogram_quantiles_by_type",
-        "streaming_static_enrich",
-        "hard_negative_mining",
-        "retention_cond_counts",
-        "rolling_7day_active_users",
-        "window_funnel_depths",
-        "position_based_attribution",
-        "anomaly_daily_revenue",
-        "bot_detection_flags",
-        "knn_label_vote",
-        "bm25_doc_ranking",
-        "fuzzy_trigram_part_match",
-        "key_skew_profile",
-        "table_profile_stats",
-        "kcore_copurchase_parts",
-        "time_decay_attribution",
-        "longest_daily_streaks",
-        "association_rules_pairs",
-        "referential_integrity_audit",
-        "incremental_sessionize_visits",
-        "bfs_hops_copurchase",
-        "streaming_histogram_quantiles",
-        "salted_skew_join_segments",
-        "schema_evolution_union",
-        "bigram_lm_surprisal_scores",
-        "phrase_search_positions",
-        "distribution_drift_by_type",
-        "weekly_revenue_wow_change",
-        "partitioned_write_roundtrip",
-        "also_bought_top3",
-        "ab_test_readout",
-        "product_communities",
-        "equal_freq_feature_bins",
-        "weighted_sample_orders",
-        "posting_compression_sizing",
-        "streaming_topk_user_leaderboard",
-        "hll_merge_groups",
-        "rfm_segments",
-        "k_anonymity_audit",
-        "gdpr_delete_cascade",
-        "dedup_cluster_size_histogram",
-        "new_vs_returning_daily",
-        "power_users_pareto",
-        "revenue_share_within_region",
-        "trimmed_mean_by_type",
-        "mad_outlier_flags",
-        "spearman_value_time_by_type",
-        "gini_revenue_by_nation",
-        "dow_seasonality_index",
-        "kmv_distinct_users",
-        "dwell_time_by_type",
-        "markov_next_event_probs",
-        "changepoint_scan_daily",
-        "open_order_aging_buckets",
-        "markov_removal_attribution",
-        "degree_distribution_copurchase",
-        "item_cosine_similarity_top3",
-        "session_conversion_by_entry",
-        "user_event_mix_impurity",
-        "zorder_locality_stats",
-        "vocab_coverage_curve",
-        "truncation_loss_report",
-        "cross_source_overlap_matrix",
-        "label_centroid_distances",
-        "daily_percentile_bands",
-        "activity_heatmap_dow_hour",
-        "peak_concurrent_sessions_daily",
-        "nearest_purchase_to_signup",
-        "log_value_histogram",
-        "auc_mann_whitney",
-        "score_decile_gains",
-        "ann_recall_at_5",
-        "part_demand_trend_top20",
-        "skip_bigram_type_pairs",
-        "wow_revenue_contribution",
-        "basket_size_stats",
-        "supplier_hhi_by_nation",
-        "streaming_activity_heatmap",
-        "dn_retention_summary",
-        "ltv_curve_by_age",
-        "winsorized_mean_by_type",
-        "longest_growth_streak_weeks",
-        "ngram_containment_pairs",
-        "fulfillment_latency_sla",
-        "post_signup_next_actions",
-        "ann_label_filtered_topk",
-        "rrf_multi_query_fusion",
-        "join_fanout_audit",
-        "signup_to_purchase_latency",
-        "dau_mau_stickiness",
-        "event_debounce_keep_last",
-        "stratified_kfold_assignment",
-        "cohort_revenue_matrix",
-        "new_customer_revenue_share_monthly",
-        "seasonal_adjusted_anomalies",
-        "embedding_drift_by_label",
-        "session_length_percentiles",
-        "exit_rate_by_type",
-        "isolated_parts_share",
-        "dow_naive_forecast_backtest",
-        "audience_overlap_matrix",
-        "return_rate_by_brand",
-        "conversion_path_length_histogram",
-        "discount_quantity_spearman",
-        "priority_anova_eta2",
-        "segment_priority_chi2",
-        "benford_first_digit_audit",
-        "mann_kendall_trend",
-        "skyline_parts_price_size",
-        "purchase_interarrival_burstiness",
-        "streaming_benford_digits",
-        "hll_rolling_mau",
-        "dup_rate_by_source",
-        "kmv_merge_groups",
-        "missing_mass_estimate",
-        "conversion_heatmap_dow_hour",
-        "next_action_diversity",
-        "ks_two_sample_by_type",
-        "kpi_correlation_daily",
-        "mann_whitney_shift_by_type",
-        "session_gap_sensitivity",
-        "lorenz_curve_deciles",
-        "duplicate_order_flags",
-        "bpr_negative_samples",
-        "recommendation_catalog_coverage",
-        "bounce_rate_by_entry_type",
-        "wow_user_retention",
-        "mutual_best_match_parts",
-        "daily_arrival_overdispersion",
-        "max_drawdown_daily",
-        "local_extrema_days",
-        "abc_classification_parts",
-        "daily_vwap_shipments",
-        "rage_click_bursts",
-        "transition_latency_medians",
-        "sessions_per_user_histogram",
-        "copurchase_weighted_distances",
-        "edge_density_by_support_threshold",
-        "conversion_by_tenure",
-        "order_value_reconciliation",
-        "error_rate_trend",
-        "wilson_ranked_entry_types",
-        "loo_cvr_sensitivity",
-        "capture_recapture_users",
-        "split_half_reliability",
-        "simpsons_paradox_check",
-        "mix_vs_rate_decomposition",
-        "session_duration_by_outcome",
-        "two_proportion_ztest",
-        "cuped_variance_reduction",
-    }
-)
-
-
-# Queries first registered in round 7: same rule as the r06 batch —
-# they queue BEHIND the older never-verified backlog (which is the
-# r06 batch, the pre-r06 backlog fully drained in r06) so the
-# longest-waiting queries keep the 50-slot prefix.
-_REGISTERED_R07 = frozenset(
-    {
-        "sql_q2_min_cost_supplier",
-        "sql_q11_important_parts",
-        "shapley_attribution",
-        "srm_check",
-        "capped_session_splits",
-        "churn_hazard_curve",
-        "hits_copurchase_authorities",
-        "ewma_daily_revenue",
-        "acf_daily_revenue",
-        "audio_rms_windows",
-        "lsh_recall_vs_truth",
-        "xml_parse_roundtrip",
-        "theil_sen_daily_trend",
-        "holt_linear_backtest",
-        "bpe_merge_rounds",
-        "did_conversion_lift",
-        "mde_detectable_lifts",
-        "ccf_lead_lag_daily",
-        "link_prediction_common_neighbors",
-        "heaps_vocab_growth",
-        "l_diversity_audit",
-        "poisson_bootstrap_ci",
-        "frequent_event_sequences",
-        "uplift_by_engagement_stratum",
-    }
-)
-
-
-# Queries first registered in round 8: same rule — queue BEHIND the
-# r06 and r07 never-verified backlogs so the longest-waiting queries
-# keep the 50-slot prefix.
-_REGISTERED_R08 = frozenset(
-    {
-        "km_survival_curve",
-        "gsp_apriori_sequences",
-        "ndcg_at_10_ann",
-        "t_closeness_audit",
-        "score_calibration_by_band",
-        "holt_winters_dow_backtest",
-        "time_windowed_sequence_support",
-        "count_min_heavy_hitters",
-        "streaming_count_min_sketch",
-        "zipf_doubling_profile",
-        "median_ci_by_type",
-        "mmr_diversified_top3",
-        "cmh_stratified_lift",
-        "bh_fdr_segment_ztests",
-        "hodges_lehmann_shift",
-        "obf_sequential_looks",
-        "kmv_intersection_estimate",
-        "streaming_obf_monitor",
-        "rec_hitrate_temporal_holdout",
-        "community_modularity",
-        "nav_conditional_entropy",
-        "logrank_conversion_by_arm",
-        "dedup_threshold_sensitivity",
-        "isotonic_calibration_pava",
-        "clustering_coefficient_parts",
-        "markov_order2_gain",
-        "functional_dependency_audit",
-        "adamic_adar_link_prediction",
-        "silhouette_by_label",
-        "sorted_neighborhood_dup_pairs",
-        "psm_matched_lift",
-        "log_odds_distinctive_terms",
-        "demand_diversity_parts",
-        "rocchio_prf_expansion",
-        "segment_priority_association",
-        "audio_zcr_profile",
-        "moment_stats_by_type",
-    }
-)
-
-# Round-9 registrations sort AFTER the r08 backlog in tier 2 (the
-# long-waiting never-sampled queries outrank brand-new ones).
-_REGISTERED_R09 = frozenset(
-    {
-        "audio_stereo_channel_profile",
-        "jpeg_dimension_parse",
-    }
-)
-
-# Round-10 registrations: same rule — behind every older backlog.
-_REGISTERED_R10 = frozenset(
-    {
-        "gopher_ngram_repetition",
-        "bucketed_join_roundtrip",
-        "label_propagation_communities",
-        "embedding_topk_ivf_pq",
-        "golden_record_survivorship",
-        "incremental_rollup_merge",
-        "bucketed_agg_order_sizes",
-        "cross_device_sessionize",
-        "lsh_edit_verified_pairs",
-        "url_canonicalize_pages",
-        "streaming_dynamic_gap_sessions",
-        "dedup_best_quality_survivor",
-        "streaming_cross_device_sessionize",
-    }
-)
-
-# Round-11 registrations: behind every older backlog (tier key 6) —
-# the 36-query never-sampled tail from r01-r10 drains through the
-# 50-slot prefix before this round's additions consume slots.
-# (36 backlog + 14 here = 50: a zero-margin fit — and indeed r11
-# sampled exactly these 50 and the backlog fully drained.)
-_REGISTERED_R11 = frozenset(
-    {
-        "scd2_user_value_bands",
-        "locf_daily_user_value",
-        "reservoir_sample_per_type",
-        "cohens_kappa_labelers",
-        "kruskal_wallis_by_priority",
-        "cochran_armitage_trend",
-        "croston_intermittent_demand",
-        "pagerank_copurchase",
-        "pq_quantization_error_by_label",
-        "bm25_embedding_rerank",
-        "harmonic_centrality_seeds",
-        "data_contract_violations",
-        "k_anon_generalize_step",
-        "cramer_von_mises_two_sample",
-    }
-)
-
-# Round-12 registrations: behind every older backlog (tier key 7).
-# The r01-r11 never-sampled backlog is EMPTY (cumulative distinct ==
-# registry size after r11), so tier 1 this round is exactly this
-# batch and the remaining prefix slots rotate the stalest tier-3
-# passes (r01-era TPC-H rows first).
-_REGISTERED_R12 = frozenset(
-    {
-        "streaming_tws_user_lifetime",
-        "mp4_container_meta",
-        "scc_nav_graph",
-        "jonckheere_trend_priority",
-        "friedman_daily_type_ranks",
-        "html_boilerplate_extract",
-        "runs_test_daily_revenue",
-        "pages_l_trend_monthly_priority",
-        "streaming_tws_type_rollup",
-    }
-)
-
-# Round-13 registrations: behind the r12 batch (tier key 8).
-_REGISTERED_R13 = frozenset(
-    {
-        "exif_tiff_meta",
-        "winnowing_candidate_pairs",
-        "hampel_outlier_daily_revenue",
-        "sax_shape_clusters",
-        "dtw_similar_user_pairs",
-        "mrr_at_10_ann",
-    }
-)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry ordered for the driver's 50-query-prefix sample:
     (1) queries genuinely failing in the LATEST driver round — a
     regression fix needs a fresh hard signal the round after;
     (2) queries NEVER driver-verified (never sampled, or sampled only
     before their oracle existed) — converts local-only signals into
-    driver-hash rows; the long-waiting backlog outranks this round's
-    brand-new registrations (tier key: registration round);
+    driver-hash rows;
     (3) everything already verified, stalest pass first — so hard
-    signals keep rotating across the whole registry. Self-maintaining:
-    any future regression automatically re-enters tier 1."""
+    signals keep rotating across the whole registry.
+    Ties keep registry order. Self-maintaining: any future regression
+    automatically re-enters tier 1."""
     last_pass, latest_bad = _sampling_history()
 
     def prio(name: str) -> tuple[int, int]:
         if name in latest_bad:
             return (0, 0)
         if name not in last_pass:
-            if name in _REGISTERED_R13:
-                return (1, 8)
-            if name in _REGISTERED_R12:
-                return (1, 7)
-            if name in _REGISTERED_R11:
-                return (1, 6)
-            if name in _REGISTERED_R10:
-                return (1, 5)
-            if name in _REGISTERED_R09:
-                return (1, 4)
-            if name in _REGISTERED_R08:
-                return (1, 3)
-            if name in _REGISTERED_R07:
-                return (1, 2)
-            return (1, 1 if name in _REGISTERED_R06 else 0)
+            return (1, 0)
         return (2, last_pass[name])
 
     ordered = sorted(QUERIES, key=prio)  # stable: registry order within ties

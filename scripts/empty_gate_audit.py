@@ -16,9 +16,10 @@ carry a planted pytest plus a triage entry below.
 Usage: python scripts/empty_gate_audit.py [sf_dir ...]
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -1,11 +1,14 @@
 """Driver-contract verification sweep: drive ``__spark_entry__`` with
 a vanilla SparkSession exactly like the external driver and compare
 every ``queries()`` entry against its ``oracle_sql()`` in DuckDB at
-sf0.01 (columns sorted by name, rows sorted by all columns, floats
-rtol 1e-9; rows-only queries just executed).
+sf0.01 with the pytest gates' comparator (``tests.oracle_utils.
+assert_matches_oracle``: columns sorted by name, rows sorted by all
+columns, floats within 1e-9 relative with a unit floor, other columns
+by value and string form, int-vs-float and HUGEINT/DECIMAL guards).
+Every registry query has an oracle; a query without one fails.
 
 Usage:
-    python scripts/verify_sweep.py              # full registry (~4 min)
+    python scripts/verify_sweep.py              # full registry (~10 min, 4 cores)
     python scripts/verify_sweep.py q1 q2 ...    # only the named queries
     python scripts/verify_sweep.py --json PATH  # also write per-query
                                                 # verdicts (SWEEP_rN.json
@@ -17,9 +20,10 @@ Usage:
 """
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 json_path = None
 if "--json" in sys.argv:
@@ -27,9 +31,6 @@ if "--json" in sys.argv:
     json_path = sys.argv[i + 1]
     del sys.argv[i : i + 2]
 
-import duckdb
-import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
 
 spark = (
@@ -39,6 +40,7 @@ spark = (
     .getOrCreate()
 )
 import __spark_entry__ as e  # noqa: E402
+from tests.oracle_utils import assert_matches_oracle  # noqa: E402
 
 rows = e.entry(spark).collect()
 assert len(rows) > 0
@@ -48,70 +50,13 @@ if len(sys.argv) > 1:
     qs = {n: qs[n] for n in sys.argv[1:]}
 
 sf = "/root/testdata/sf0.01"
-con = duckdb.connect()
-for t in [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]:
-    con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
-
-
-def norm(df):
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].astype("datetime64[us]").astype("int64")
-        elif df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
-
-
 fails, done = [], 0
 verdicts = {}
 for name, fn in qs.items():
     try:
-        mine = fn(spark, sf)
-        if name not in osql:
-            n = mine.count()
-            assert n >= 0
-            done += 1
-            verdicts[name] = {"status": "rows_only", "rows": int(n)}
-            print(f"rows-only {name}: {n}", flush=True)
-            continue
-        rel = con.sql(osql[name])
-        # Driver-exactness guard: DuckDB HUGEINT/DECIMAL aggregates land
-        # in pandas as float64 while Spark returns bigint, which passes
-        # a tolerance compare but fails the driver's exact hash (the
-        # entire r02 red set was this). Catch it at the type level,
-        # before pandas erases the distinction.
-        hug = [
-            (c, str(t))
-            for c, t in zip(rel.columns, rel.types)
-            if "HUGEINT" in str(t).upper() or "DECIMAL" in str(t).upper()
-        ]
-        assert not hug, f"oracle emits HUGEINT/DECIMAL (cast ::BIGINT): {hug}"
-        mine = norm(mine.toPandas())
-        oracle = norm(rel.df())
-        assert list(mine.columns) == list(oracle.columns), "columns"
-        assert len(mine) == len(oracle), f"rows {len(mine)} vs {len(oracle)}"
-        for c in mine.columns:
-            a, b = mine[c], oracle[c]
-            a_num = pd.api.types.is_integer_dtype(a) or pd.api.types.is_float_dtype(a)
-            b_num = pd.api.types.is_integer_dtype(b) or pd.api.types.is_float_dtype(b)
-            if a_num and b_num:
-                # int-vs-float dtype drift hashes differently (6 vs 6.0)
-                # even when values agree — fail it like the driver would.
-                assert pd.api.types.is_float_dtype(a) == pd.api.types.is_float_dtype(
-                    b
-                ), f"col {c} dtype {a.dtype} vs {b.dtype}"
-            if pd.api.types.is_float_dtype(a) or pd.api.types.is_float_dtype(b):
-                assert np.allclose(
-                    a.astype(float), b.astype(float), rtol=1e-9, equal_nan=True
-                ), f"col {c}"
-            else:
-                assert (a.astype(str) == b.astype(str)).all(), f"col {c}"
+        n = assert_matches_oracle(fn(spark, sf), osql[name], sf, float_tol=1e-9)
         done += 1
-        verdicts[name] = {"status": "match", "rows": int(len(mine))}
+        verdicts[name] = {"status": "match", "rows": int(n)}
         print(f"match {name}", flush=True)
     except Exception as ex:
         fails.append(name)

@@ -1,6 +1,8 @@
 """Local replica of the driver's Spark-vs-DuckDB comparison: row count,
 column names, and order-insensitive values (columns sorted by name,
-rows sorted by all columns, floats compared with tolerance)."""
+rows sorted by all columns, floats compared with tolerance). The
+pytest gates and ``scripts/verify_sweep.py`` share this one
+comparator."""
 
 from __future__ import annotations
 
@@ -40,9 +42,28 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
-def assert_matches_oracle(spark_df, sql: str, sf_dir: str, float_tol: float = 1e-6):
-    con = duckdb_con(sf_dir)
-    oracle = con.sql(sql).df()
+def wide_columns(rel: duckdb.DuckDBPyRelation) -> list[tuple[str, str]]:
+    """Oracle output columns typed HUGEINT or DECIMAL. pandas has no
+    128-bit integer, so these land as float64 while Spark returns
+    bigint: a tolerance compare passes, the driver's exact hash does
+    not (``6.0`` vs ``6`` — the entire round-2 red set). Checked on the
+    DuckDB types, before pandas erases the distinction; the fix is an
+    explicit ``::BIGINT`` cast in the oracle."""
+    return [
+        (c, str(t).upper())
+        for c, t in zip(rel.columns, rel.types)
+        if "HUGEINT" in str(t).upper() or "DECIMAL" in str(t).upper()
+    ]
+
+
+def assert_matches_oracle(
+    spark_df, sql: str, sf_dir: str, float_tol: float = 1e-6
+) -> int:
+    """Raise ``AssertionError`` unless ``spark_df`` equals the DuckDB
+    result of ``sql`` over ``sf_dir``; return the row count compared."""
+    con = duckdb_con(sf_dir)  # a relation does not keep its connection open
+    rel = con.sql(sql)
+    oracle = rel.df()
     mine = spark_df.toPandas()
 
     assert sorted(mine.columns) == sorted(oracle.columns), (
@@ -76,8 +97,17 @@ def assert_matches_oracle(spark_df, sql: str, sf_dir: str, float_tol: float = 1e
                 )
             ]
         else:
-            bad = [i for i, (x, y) in enumerate(zip(av, bv)) if x != y]
+            # both the value and its string form must agree: ``!=``
+            # alone accepts True == 1, the string form alone "1" == 1
+            bad = [
+                i
+                for i, (x, y) in enumerate(zip(av, bv))
+                if x != y or str(x) != str(y)
+            ]
         assert not bad, (
             f"value mismatch in column {c!r} at sorted rows {bad[:5]}: "
             f"spark={[av[i] for i in bad[:5]]} oracle={[bv[i] for i in bad[:5]]}"
         )
+    wide = wide_columns(rel)
+    assert not wide, f"oracle emits HUGEINT/DECIMAL (cast ::BIGINT): {wide}"
+    return len(mine)

@@ -52,56 +52,41 @@ def test_headline_names_are_registry_names():
     assert len(set(HEADLINE)) == len(HEADLINE)  # no duplicate entries
 
 
-def test_every_never_sampled_query_has_a_rotation_tier():
-    """The driver-verification rotation orders the never-sampled
-    backlog by REGISTRATION ROUND via hand-maintained _REGISTERED_R0x
-    sets — a new query missing from its round's set silently jumps
-    the oldest backlog (the ordering the r7 verdict ordered preserved).
-    This pins: every registry query either has a driver record in
-    some CORRECTNESS artifact or belongs to exactly one tier set."""
-    import glob
-    import json
+def test_queries_orders_bad_then_never_sampled_then_stalest(monkeypatch):
+    """The driver samples a prefix of ``queries()``: latest-round
+    failures first, then never-verified names, then verified names
+    with the stalest pass first. Every registry name appears once,
+    and ties keep registry order — the order ``oracle_sql()`` follows
+    too."""
     import os
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
     import __spark_entry__ as e
-
-    sampled = set()
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as fh:
-                payload = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        rows = payload.get("queries", payload)
-        if isinstance(rows, dict):
-            sampled.update(rows)
-    tiers = [
-        e._REGISTERED_R06, e._REGISTERED_R07, e._REGISTERED_R08,
-        e._REGISTERED_R09, e._REGISTERED_R10, e._REGISTERED_R11,
-        e._REGISTERED_R12, e._REGISTERED_R13,
-    ]
-    tiered = set().union(*tiers)
     from web_analytics_visits_re_processing_spark.plans import QUERIES
 
-    orphans = [
-        n for n in QUERIES if n not in sampled and n not in tiered
-    ]
-    assert not orphans, (
-        f"queries with no driver record and no _REGISTERED_R0x tier "
-        f"(they would jump the rotation backlog): {orphans}"
-    )
-    # every tier name must exist in the registry — a typo in a
-    # hand-maintained set would silently misorder the prefix
-    ghosts = sorted(tiered - set(QUERIES))
-    assert not ghosts, f"tier entries not in the registry: {ghosts}"
-    # and no query sits in two tiers
-    import itertools
+    names = list(QUERIES)
+    bad = {names[7], names[3]}
+    never = {names[0], names[5], names[9]}
+    last_pass = {
+        n: (12 if i % 2 else 14)
+        for i, n in enumerate(names)
+        if n not in never
+    }
+    monkeypatch.setattr(e, "_sampling_history", lambda: (last_pass, bad))
 
-    for a, b in itertools.combinations(tiers, 2):
-        assert not (a & b)
+    order = list(e.queries())
+    assert len(order) == len(set(order)) == len(names)
+    expected = (
+        [n for n in names if n in bad]
+        + [n for n in names if n in never]
+        + [n for n in names if n not in bad | never and last_pass[n] == 12]
+        + [n for n in names if n not in bad | never and last_pass[n] == 14]
+    )
+    assert order == expected
+    assert order[:5] == [names[3], names[7], names[0], names[5], names[9]]
+    assert [n for n in e.oracle_sql()] == [n for n in order if n in e.ORACLES]
 
 
 def test_summary_line_carries_anchor():

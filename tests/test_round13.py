@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from web_analytics_visits_re_processing_spark.operators.graph import (
@@ -288,66 +289,6 @@ def test_tiff_chain_and_exif_descend(spark):
     assert r["width"] == 31  # IFD0's, not overwritten by chained IFDs
 
 
-# --- combined tws stream: equivalence with the standalone operators -----------
-
-import pytest
-
-from web_analytics_visits_re_processing_spark.streaming.tws import (
-    transform_with_state_available,
-)
-
-
-@pytest.mark.skipif(
-    not transform_with_state_available(), reason="no protobuf runtime"
-)
-def test_tws_combined_matches_standalone_replays(spark, sf_dir):
-    """The r13 combined stream (both gates' source) must emit exactly
-    the standalone processors' outputs: its 'lifetime' projection ==
-    user_lifetime_replay, its 'type' projection ==
-    user_type_rollup_replay — the gates changed PLUMBING (one stream,
-    staged result), never values."""
-    from web_analytics_visits_re_processing_spark.streaming.tws import (
-        combined_replay,
-        user_lifetime_replay,
-        user_type_rollup_replay,
-    )
-
-    combined = combined_replay(spark, sf_dir).collect()
-    life = {
-        (r["user_id"]): (
-            r["first_ts_us"], r["last_ts_us"], r["n_events"], r["value_cents"]
-        )
-        for r in combined
-        if r["row_kind"] == "lifetime"
-    }
-    types = {
-        (r["user_id"], r["event_type"]): (
-            r["n_events"], r["value_cents"], r["log_total"]
-        )
-        for r in combined
-        if r["row_kind"] == "type"
-    }
-    standalone_life = {
-        r["user_id"]: (
-            r["first_ts_us"], r["last_ts_us"], r["n_events"], r["value_cents"]
-        )
-        for r in user_lifetime_replay(spark, sf_dir).collect()
-    }
-    standalone_types = {
-        (r["user_id"], r["event_type"]): (
-            r["n_events"], r["value_cents"], r["log_total"]
-        )
-        for r in user_type_rollup_replay(spark, sf_dir).collect()
-    }
-    assert life == standalone_life
-    assert types == standalone_types
-    # determinism: a second call RE-RUNS the replay (the r13
-    # optimization round removed the staged-result cache — results
-    # must recompute per invocation) and must emit identical rows
-    again = combined_replay(spark, sf_dir).collect()
-    assert sorted(map(tuple, again)) == sorted(map(tuple, combined))
-
-
 # --- full-sweep artifact contract (r12 verdict item 5) ------------------------
 
 
@@ -360,8 +301,10 @@ def test_sweep_artifact_matches_registry_and_is_green():
     round, before close-out)."""
     import glob
     import json as _json
+    import os
 
-    arts = sorted(glob.glob("/root/repo/SWEEP_r*.json"))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    arts = sorted(glob.glob(os.path.join(repo, "SWEEP_r*.json")))
     if not arts:
         pytest.skip("no sweep artifact yet this round")
     with open(arts[-1]) as f:
@@ -664,48 +607,43 @@ def test_winnowing_posting_equivalence_other_params(spark):
         assert rel_form == col_form, (ngram, window)
 
 
-def test_tws_combined_cache_invalidates_on_fixture_change(spark, tmp_path):
-    """combined_replay must compute from the CURRENT fixture bytes on
-    every call (the r13 optimization round removed the staged-result
-    cache — no result may be served across invocations): repeated
-    calls on an unchanged fixture agree, and a changed fixture is
-    reflected immediately — never a stale stage."""
+def test_tws_lifetime_replay_recomputes_on_fixture_change(spark, sf_dir, tmp_path):
+    """user_lifetime_replay must compute from the CURRENT fixture bytes
+    on every call (no result may be served across invocations):
+    repeated calls on an unchanged fixture agree, and a changed
+    fixture is reflected immediately — never a stale stage."""
+    import os
     import shutil as _sh
     import time as _time
 
     from web_analytics_visits_re_processing_spark.streaming.tws import (
-        combined_replay,
         transform_with_state_available,
+        user_lifetime_replay,
     )
 
     if not transform_with_state_available():
         pytest.skip("no protobuf runtime")
 
-    import pyspark.sql.functions as SF
-
     d = tmp_path / "twscache"
     d.mkdir()
     _sh.copyfile(
-        "/root/testdata/sf0.001/events.parquet", str(d / "events.parquet")
+        os.path.join(sf_dir, "events.parquet"), str(d / "events.parquet")
     )
 
     def lifetime_events(df):
-        return df.where(SF.col("row_kind") == "lifetime").agg(
-            SF.sum("n_events")
-        ).collect()[0][0]
+        return df.agg(F.sum("n_events")).collect()[0][0]
 
-    first_df = combined_replay(spark, str(d))
-    first = lifetime_events(first_df)
+    first = lifetime_events(user_lifetime_replay(spark, str(d)))
     assert first > 0
-    # serve-from-stage on an unchanged fixture
-    assert lifetime_events(combined_replay(spark, str(d))) == first
-    # halve the fixture -> same users, half the events, new mtime/size
+    # an unchanged fixture gives the same count
+    assert lifetime_events(user_lifetime_replay(spark, str(d))) == first
+    # halve the fixture -> half the events, new mtime/size
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(str(d / "events.parquet"))
     _time.sleep(0.01)
     pq.write_table(tbl.slice(0, tbl.num_rows // 2), str(d / "events.parquet"))
-    second = lifetime_events(combined_replay(spark, str(d)))
+    second = lifetime_events(user_lifetime_replay(spark, str(d)))
     assert 0 < second < first, (first, second)
 
 

@@ -114,41 +114,6 @@ def _pairs_from_assigned(
     )
 
 
-def semdedup_pairs(
-    emb: DataFrame,
-    k: int = 10,
-    n_updates: int = 1,
-    tau: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assign_via: str = "auto",
-) -> DataFrame:
-    """Within-cluster near-duplicate pairs → ``(id_a, id_b, cluster,
-    cos)`` with ``id_a < id_b`` and 4-dp cosine ≥ ``tau``.
-
-    ``tau`` is the paper's ``1 - eps`` knob; the default 0.35 is tuned
-    to the synthetic test embeddings (near-orthogonal random vectors —
-    real corpora run this at 0.95+).
-
-    Scale note: the N² is confined WITHIN clusters, so the knob that
-    keeps it bounded as the corpus grows is ``k`` — scale k ∝ corpus
-    size (SemDeDup's own protocol: ~N/1000 clusters) so mean cluster
-    size, and with it the per-cluster pair volume, stays constant. A
-    fixed k at 10× data means 10× clusters sizes and ~100×/k pair
-    candidates — the 10× probe (BASELINE.md) shows the onset of
-    exactly that curve."""
-    assigned = kmeans_assign(
-        emb,
-        k=k,
-        n_updates=n_updates,
-        id_col=id_col,
-        vec_col=vec_col,
-        assign_via=assign_via,
-        keep_cols=(vec_col,),
-    ).localCheckpoint(eager=True)
-    return _pairs_from_assigned(assigned, tau, id_col, vec_col)
-
-
 def _hit_threshold(tau: float) -> float:
     """The smallest double ``v*`` with ``round(v*, 4) >= tau`` under
     Spark's ROUND semantics for doubles (BigDecimal.valueOf — i.e.

@@ -70,39 +70,37 @@ DEFAULT_GAP_SECONDS = 1800  # 30 min, the reference's main.py:207
 
 def sessionize_visits(
     df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     gap_seconds: int = DEFAULT_GAP_SECONDS,
     extra_aggs: list[Column] | None = None,
 ) -> DataFrame:
     """One row per (user, visit): the reference's ``visits`` output,
-    ``visit_key, user, visit_start, visit_end, n_hits`` and then
+    ``visit_key, user_id, visit_start, visit_end, n_hits`` and then
     ``extra_aggs``.
 
-    ``groupBy(user, session_window(ts, gap))`` over the non-null-``ts``
+    ``groupBy(user_id, session_window(ts, gap))`` over the non-null-``ts``
     rows: one hash shuffle on the user key, with partial aggregation.
     The same expression runs in batch and, over a ``withWatermark``
     input, in Structured Streaming. ``ts`` must be a timestamp.
     """
     aggs = [
-        F.min(ts_col).alias("visit_start"),
-        F.max(ts_col).alias("visit_end"),
+        F.min("ts").alias("visit_start"),
+        F.max("ts").alias("visit_end"),
         F.count(F.lit(1)).alias("n_hits"),
     ]
     if extra_aggs:
         aggs.extend(extra_aggs)
     out = (
-        df.where(F.col(ts_col).isNotNull())
-        .groupBy(F.col(user_col), F.session_window(F.col(ts_col), f"{int(gap_seconds)} seconds"))
+        df.where(F.col("ts").isNotNull())
+        .groupBy("user_id", F.session_window("ts", f"{int(gap_seconds)} seconds"))
         .agg(*aggs)
     )
     return out.select(
-        _visit_key(out, user_col).alias("visit_key"),
-        F.col(user_col),
+        _visit_key(out).alias("visit_key"),
+        "user_id",
         "visit_start",
         "visit_end",
         "n_hits",
-        *[c for c in out.columns if c not in (user_col, "session_window", "visit_start", "visit_end", "n_hits")],
+        *[c for c in out.columns if c not in ("user_id", "session_window", "visit_start", "visit_end", "n_hits")],
     )
 
 
@@ -120,8 +118,8 @@ def _epoch_int(df: DataFrame, col: str) -> tuple[Column, int]:
     )
 
 
-def _visit_key(df: DataFrame, user_col: str) -> Column:
-    """``visit_key = user || '_' || visit_start`` over ``df``'s
+def _visit_key(df: DataFrame) -> Column:
+    """``visit_key = user_id || '_' || visit_start`` over ``df``'s
     ``visit_start``, the start as ``_epoch_int`` gives it.
 
     The reference concatenates the raw epoch-seconds string
@@ -131,7 +129,7 @@ def _visit_key(df: DataFrame, user_col: str) -> Column:
     (``user_id || '_' || epoch_us(visit_start)``).
     """
     start, _ = _epoch_int(df, "visit_start")
-    return F.concat_ws("_", F.col(user_col).cast("string"), start)
+    return F.concat_ws("_", F.col("user_id").cast("string"), start)
 
 
 def _opens_visit(df: DataFrame, start_col: str, end_col: str, w: Window, gap_seconds: int) -> Column:
@@ -153,33 +151,32 @@ def _visit_seq(new_visit: Column, w: Window) -> Column:
 
 def with_session_columns(
     df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     gap_seconds: int = DEFAULT_GAP_SECONDS,
     order_cols: list[str] | None = None,
 ) -> DataFrame:
     """Stamp ``session_seq`` / ``visit_start`` / ``visit_key`` onto
-    every hit (the reference's R7+R10 without collect/explode) by the
-    module's rule, ``order_cols`` breaking ``ts`` ties: ``session_seq``
+    every hit (columns ``user_id`` and ``ts``, a timestamp or integral
+    epoch seconds; the reference's R7+R10 without collect/explode) by
+    the module's rule, ``order_cols`` breaking ``ts`` ties: ``session_seq``
     is the hit's visit number within its user, from 0.
 
     One user-ordered pass: a ``lag`` window finds the boundaries, then
     one window holds the running sum that numbers the visits and the
     running max of the visit-start ``ts`` (rows are in ``ts`` order, so
-    the latest start seen is the row's own visit's). One ``user_col``
+    the latest start seen is the row's own visit's). One ``user_id``
     exchange and one sort, no Python, which any later window or
-    ``groupBy`` keyed by ``(user_col, session_seq)`` reuses; columns a
+    ``groupBy`` keyed by ``(user_id, session_seq)`` reuses; columns a
     caller never reads are pruned from the plan. Unlike the reference's
     collect-then-explode (``main.py:115-146``), no session must fit in
     one worker's memory. A null ``ts`` gives null session columns and
     does not shift the numbering. A visit's end is an aggregate, not a
     per-hit column: ``visits_from_hits`` takes it.
     """
-    w_user = Window.partitionBy(user_col).orderBy(ts_col, *(order_cols or []))
+    w_user = Window.partitionBy("user_id").orderBy("ts", *(order_cols or []))
     w_run = w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ts, new = F.col(ts_col), F.col("_new_visit")
+    ts, new = F.col("ts"), F.col("_new_visit")
     framed = (
-        df.withColumn("_new_visit", _opens_visit(df, ts_col, ts_col, w_user, gap_seconds))
+        df.withColumn("_new_visit", _opens_visit(df, "ts", "ts", w_user, gap_seconds))
         .withColumns(
             {
                 "session_seq": F.when(ts.isNotNull(), _visit_seq(new, w_user)),
@@ -188,7 +185,7 @@ def with_session_columns(
         )
         .drop("_new_visit")
     )
-    return framed.withColumn("visit_key", F.when(ts.isNotNull(), _visit_key(framed, user_col)))
+    return framed.withColumn("visit_key", F.when(ts.isNotNull(), _visit_key(framed)))
 
 
 def visits_from_hits(hits_with_keys: DataFrame) -> DataFrame:
@@ -218,7 +215,6 @@ def visits_from_hits(hits_with_keys: DataFrame) -> DataFrame:
 def merge_incremental_visits(
     prior: DataFrame,
     new: DataFrame,
-    user_col: str = "user_id",
     gap_seconds: int = DEFAULT_GAP_SECONDS,
 ) -> DataFrame:
     """Merge the visits of a NEW batch (all hits at or after a time
@@ -235,16 +231,16 @@ def merge_incremental_visits(
     split the visits of each side are disjoint and ordered, so only a
     user's last prior and first new visit can join. One user-keyed
     window over the union, no join. Inputs are ``sessionize_visits`` or
-    ``visits_from_hits`` outputs (``visit_key``, ``user_col``,
+    ``visits_from_hits`` outputs (``visit_key``, ``user_id``,
     ``visit_start``, ``visit_end``, ``n_hits``), with timestamps or
     integral epoch seconds.
     """
     visits = prior.unionByName(new)
-    w_user = Window.partitionBy(user_col).orderBy("visit_start")
+    w_user = Window.partitionBy("user_id").orderBy("visit_start")
     grouped = (
         visits.withColumn("_new_visit", _opens_visit(visits, "visit_start", "visit_end", w_user, gap_seconds))
         .withColumn("_visit", _visit_seq(F.col("_new_visit"), w_user))
-        .groupBy(user_col, "_visit")
+        .groupBy("user_id", "_visit")
         .agg(
             F.min("visit_start").alias("visit_start"),
             F.max("visit_end").alias("visit_end"),
@@ -252,5 +248,5 @@ def merge_incremental_visits(
         )
     )
     return grouped.select(
-        _visit_key(grouped, user_col).alias("visit_key"), user_col, "visit_start", "visit_end", "n_hits"
+        _visit_key(grouped).alias("visit_key"), "user_id", "visit_start", "visit_end", "n_hits"
     )

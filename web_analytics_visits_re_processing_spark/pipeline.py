@@ -89,7 +89,7 @@ def build_visits_pipeline(
     persisted sessionized frame.
     """
     stamped = with_session_columns(
-        parsed_hits, user_col="user_id", ts_col="ts", gap_seconds=gap_seconds
+        parsed_hits, gap_seconds=gap_seconds
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
     hits = stamped.where(F.col("visit_key").isNotNull()).select(*HITS_COLUMNS)

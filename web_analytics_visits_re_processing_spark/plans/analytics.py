@@ -61,8 +61,6 @@ def q_sessionize_visits(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     visits = sessionize_visits(
         events,
-        user_col="user_id",
-        ts_col="ts",
         gap_seconds=1800,
         extra_aggs=[F.round(F.sum("value"), 2).alias("total_value")],
     )
@@ -96,7 +94,7 @@ def q_sessionize_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "value"
     )
-    hits = with_session_columns(events, "user_id", "ts", 1800)
+    hits = with_session_columns(events, gap_seconds=1800)
     return hits.select(
         "visit_key",
         "user_id",
@@ -405,14 +403,8 @@ def q_incremental_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    prior = sessionize_visits(
-        events.where(F.col("ts") < cutoff), user_col="user_id", ts_col="ts",
-        gap_seconds=1800,
-    )
-    new = sessionize_visits(
-        events.where(F.col("ts") >= cutoff), user_col="user_id", ts_col="ts",
-        gap_seconds=1800,
-    )
+    prior = sessionize_visits(events.where(F.col("ts") < cutoff), gap_seconds=1800)
+    new = sessionize_visits(events.where(F.col("ts") >= cutoff), gap_seconds=1800)
     merged = merge_incremental_visits(prior, new, gap_seconds=1800)
     return merged.select(
         "visit_key",

@@ -223,7 +223,7 @@ def q_hitlog_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``user_id_<epoch-seconds>`` visit keys (``main.py:122``)."""
     path = materialize_hitlog_tsv(spark, sf_dir)
     hits = read_hitlog(spark, path)
-    stamped = with_session_columns(hits, user_col="user_id", ts_col="ts", gap_seconds=1800)
+    stamped = with_session_columns(hits, gap_seconds=1800)
     return visits_from_hits(stamped).select(
         "visit_key", "user_id", "visit_start", "visit_end", "n_hits"
     )

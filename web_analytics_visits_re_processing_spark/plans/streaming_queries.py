@@ -595,17 +595,10 @@ GROUP BY user_id
         (ValueState merge + re-armed event-time timer, emitted exactly
         once per user when the watermark passes last_event + gap — see
         ``streaming.tws``), replayed append-mode with the sentinel
-        flushing every timer. r13 optimization: back on its OWN
-        minimal stream (``user_lifetime_replay``). The round briefly
-        pointed both tws gates at one combined ValueState+MapState+
-        ListState stream whose RESULT was staged — but with result
-        staging removed (caching results across invocations is
-        gaming, not optimization) the combined topology made every
-        call pay for BOTH gates' state machinery and discard half
-        the rows; the standalone processor does strictly less state-
-        server work per call (ValueState + timers only; per-call
-        numbers in OPTIMIZATION_r13.md). The combined processor and
-        its pytests remain the cross-state consistency surface."""
+        flushing every timer. Runs its OWN minimal stream
+        (``user_lifetime_replay``: ValueState + timers only), so each
+        call pays for this gate's state machinery alone (per-call
+        numbers in OPTIMIZATION_r13.md)."""
         from web_analytics_visits_re_processing_spark.streaming.tws import (
             user_lifetime_replay,
         )
@@ -640,11 +633,9 @@ FROM t JOIN u USING (user_id)
         emitted set equals the batch ``groupBy(user, type)`` verbatim,
         and ``log_total`` (ListState-derived) must equal the per-user
         batch count — a cross-state consistency the oracle checks for
-        free. r13 optimization: back on its OWN minimal stream
-        (``user_type_rollup_replay`` — MapState/ListState only; see
-        ``streaming_tws_user_lifetime`` for why the shared combined
-        stream was reverted once its result stage was removed). The
-        pagination pytests on the standalone replay are untouched."""
+        free. Runs its OWN minimal stream (``user_type_rollup_replay``
+        — MapState/ListState only); the pagination pytests drive the
+        same replay."""
         from web_analytics_visits_re_processing_spark.streaming.tws import (
             user_type_rollup_replay,
         )

@@ -244,7 +244,7 @@ def q_session_path_3grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct paths at 5 event types)."""
     ev = _events(spark, sf_dir).select("user_id", "ts", "event_id", "event_type")
     hits = with_session_columns(
-        ev, "user_id", "ts", 1800, order_cols=["event_id"]
+        ev, gap_seconds=1800, order_cols=["event_id"]
     )
     from pyspark.sql import Window
 
@@ -294,9 +294,7 @@ def q_bounce_rate_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     session start — the classic health metric over the sessionizer's
     output. Reuses ``sessionize_visits`` verbatim: one user-keyed
     exchange for sessions, then a tiny per-week hash agg."""
-    visits = sessionize_visits(
-        _events(spark, sf_dir), user_col="user_id", ts_col="ts", gap_seconds=1800
-    )
+    visits = sessionize_visits(_events(spark, sf_dir), gap_seconds=1800)
     bounce = F.sum(F.when(F.col("n_hits") == 1, 1).otherwise(0))
     return (
         visits.groupBy(
@@ -476,7 +474,7 @@ def q_session_entry_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. Endpoints are ordered by (ts, event_id) — deterministic
     under timestamp ties."""
     ev = _events(spark, sf_dir).select("user_id", "ts", "event_id", "event_type")
-    hits = with_session_columns(ev, "user_id", "ts", 1800, order_cols=["event_id"])
+    hits = with_session_columns(ev, gap_seconds=1800, order_cols=["event_id"])
     order_key = F.struct("ts", "event_id")
     ends = hits.groupBy("user_id", "session_seq").agg(
         F.min_by("event_type", order_key).alias("entry_type"),
@@ -2078,7 +2076,7 @@ def q_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
             "is_conv"
         ),
     )
-    sess = with_session_columns(ev, "user_id", "ts", 1800, order_cols=["event_id"])
+    sess = with_session_columns(ev, gap_seconds=1800, order_cols=["event_id"])
     ws = Window.partitionBy("user_id", "session_seq").orderBy(
         "ts", "event_id"
     )
@@ -2358,7 +2356,7 @@ def q_session_conversion_by_entry(
     window pass and no join back — and everything to that point rides
     ONE user-keyed exchange; the final rollup is ≤ |types| rows."""
     sess = with_session_columns(
-        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
+        _events(spark, sf_dir), gap_seconds=1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(
         F.min(
@@ -2588,7 +2586,7 @@ def q_peak_concurrent_sessions(
     their start day end-to-end (documented choice, replayed in the
     oracle)."""
     sess = with_session_columns(
-        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
+        _events(spark, sf_dir), gap_seconds=1800, order_cols=["event_id"]
     )
     spans = sess.groupBy("user_id", "session_seq").agg(
         F.date_format(F.to_date(F.min("ts")), "yyyy-MM-dd").alias("day"),
@@ -2829,7 +2827,7 @@ def q_skip_bigram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Level-k patterns iterate this same join, exactly like the Apriori
     escalation note on `association_rules_pairs`."""
     sess = with_session_columns(
-        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
+        _events(spark, sf_dir), gap_seconds=1800, order_cols=["event_id"]
     )
     firsts = sess.groupBy("user_id", "session_seq", "event_type").agg(
         F.min(F.unix_micros("ts")).alias("first_us")
@@ -3424,7 +3422,7 @@ def q_session_length_percentiles(
     (len, count) histogram map-side, so the percentile windows walk
     the length domain, never sessions."""
     sess = with_session_columns(
-        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
+        _events(spark, sf_dir), gap_seconds=1800, order_cols=["event_id"]
     )
     lens = sess.groupBy("user_id", "session_seq").agg(
         F.count(F.lit(1)).alias("len")
@@ -4196,7 +4194,7 @@ def q_bounce_by_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     with `session_conversion_by_entry` (same per-session collapse:
     struct-min entry + count, one user exchange)."""
     sess = with_session_columns(
-        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
+        _events(spark, sf_dir), gap_seconds=1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(
         F.min(F.struct("ts", "event_id", "event_type"))["event_type"].alias(
@@ -5141,7 +5139,7 @@ def q_wilson_ranked_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     via a decimal string while DuckDB rounds the binary value, so a
     gated-and-RANKED scalar must never pass through round)."""
     sess = with_session_columns(
-        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
+        _events(spark, sf_dir), gap_seconds=1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(
         F.min(F.struct("ts", "event_id", "event_type"))["event_type"].alias(
@@ -5687,7 +5685,7 @@ def q_session_duration_by_outcome(
     cumulative rank rule — the histogram-quantile design keyed by
     outcome."""
     sess = with_session_columns(
-        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
+        _events(spark, sf_dir), gap_seconds=1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(
         F.expr(

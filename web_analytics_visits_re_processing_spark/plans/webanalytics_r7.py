@@ -158,7 +158,7 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented escalation is permutation-sampled Shapley over the
     same mask rollup, same downstream shape."""
     sess = with_session_columns(
-        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
+        _events(spark, sf_dir), gap_seconds=1800, order_cols=["event_id"]
     )
     per_session = sess.groupBy("user_id", "session_seq").agg(
         (
@@ -359,7 +359,7 @@ def q_capped_session_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: rides the standard user-key session exchange; the
     histogram is a ≤5-row rollup."""
     sess = with_session_columns(
-        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
+        _events(spark, sf_dir), gap_seconds=1800, order_cols=["event_id"]
     )
     ws = Window.partitionBy("user_id", "session_seq")
     marked = sess.select(
@@ -1030,7 +1030,7 @@ def q_frequent_event_sequences(
     of shapes, so the grid replication touches the shape table, not
     the session table; ~2 s warm at sf0.1)."""
     sess = with_session_columns(
-        _events(spark, sf_dir), "user_id", "ts", 1800, order_cols=["event_id"]
+        _events(spark, sf_dir), gap_seconds=1800, order_cols=["event_id"]
     )
     s2 = (
         sess.groupBy("user_id", "session_seq")

@@ -56,29 +56,6 @@ def ensure_nanos_conf(spark: SparkSession) -> None:
         pass
 
 
-def normalize_timestamps(df: DataFrame) -> DataFrame:
-    """Normalize every event-time column to a plain TIMESTAMP,
-    whichever physical layout the fixture generation used:
-
-    - legacy TIMESTAMP(NANOS) ``ts`` (read as int64 under the
-      nanosAsLong conf) → rebuild a microsecond TIMESTAMP with integer
-      division (``div`` keeps the full 64 bits; a double would corrupt
-      epoch-nanos ~1.7e18, and the floor matches DuckDB's ``epoch_us``
-      truncation on the same data);
-    - naive ``timestamp[us]`` (Spark 4 reads it as TIMESTAMP_NTZ,
-      which ``unix_micros`` / ``session_window`` / numeric casts all
-      reject) → cast to TIMESTAMP. Value-exact under the UTC session
-      timezone set in ``session.get_spark`` — the wall-clock instants
-      are identical, matching DuckDB's naive read of the same parquet.
-    """
-    for field in df.schema.fields:
-        if field.name == "ts" and isinstance(field.dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(field.dataType, T.TimestampNTZType):
-            df = df.withColumn(field.name, F.col(field.name).cast(T.TimestampType()))
-    return df
-
-
 # (path, mtime_ns, size) -> inferred StructType. METADATA cache only:
 # every load_table call still builds a FRESH scan relation (distinct
 # relations keep self-join semantics — reusing one DataFrame object
@@ -104,13 +81,26 @@ def _table_schema(spark: SparkSession, path: str) -> T.StructType:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table from ``{sf_dir}/{name}.parquet``, timestamps
-    normalized (see ``normalize_timestamps``). The inferred schema is
-    served from ``_SCHEMA_CACHE`` and passed explicitly so repeated
-    loads skip footer inference; the timestamp-normalization columns
-    are derived from that cached StructType directly (a ``df.schema``
-    probe on the fresh relation would force a second analysis pass
-    per call)."""
+    """Load one table from ``{sf_dir}/{name}.parquet`` with every
+    event-time column normalized to a plain TIMESTAMP, whichever
+    physical layout the fixture generation used:
+
+    - legacy TIMESTAMP(NANOS) ``ts`` (read as int64 under the
+      nanosAsLong conf) → rebuild a microsecond TIMESTAMP with integer
+      division (``div`` keeps the full 64 bits; a double would corrupt
+      epoch-nanos ~1.7e18, and the floor matches DuckDB's ``epoch_us``
+      truncation on the same data);
+    - naive ``timestamp[us]`` (Spark 4 reads it as TIMESTAMP_NTZ,
+      which ``unix_micros`` / ``session_window`` / numeric casts all
+      reject) → cast to TIMESTAMP. Value-exact under the UTC session
+      timezone set in ``session.get_spark`` — the wall-clock instants
+      are identical, matching DuckDB's naive read of the same parquet.
+
+    The inferred schema is served from ``_SCHEMA_CACHE`` and passed
+    explicitly so repeated loads skip footer inference; the
+    normalization columns are derived from that cached StructType
+    directly (a ``df.schema`` probe on the fresh relation would force
+    a second analysis pass per call)."""
     ensure_nanos_conf(spark)
     path = f"{sf_dir}/{name}.parquet"
     sch = _table_schema(spark, path)

@@ -229,7 +229,7 @@ def _read_replay_stream(
     (legacy TIMESTAMP(NANOS) arrives as int64 under the nanosAsLong
     conf; newer naive timestamp[us] arrives as TIMESTAMP_NTZ, which
     ``session_window``/``unix_micros`` reject) — the streaming twin of
-    ``sources.tables.normalize_timestamps``. The schema probe is a
+    ``sources.tables.load_table``. The schema probe is a
     batch footer read, no data scan."""
     from web_analytics_visits_re_processing_spark.sources.tables import (
         _table_schema,

@@ -1,22 +1,29 @@
 """Arbitrary stateful processing on Spark 4's
 ``transformWithStateInPandas`` — the typed-state + explicit-timer API
-that supersedes ``applyInPandasWithState``. It is the package's one
-custom-stateful operator: sessions and abandoned sessions are
+that supersedes ``applyInPandasWithState``. It holds the package's only
+custom-stateful operators: sessions and abandoned sessions are
 ``session_window`` aggregates (``operators.sessionize``).
 
-Operator: per-user LIFETIME aggregates (first/last event time, count,
-exact value cents) held in a ``ValueState`` row, emitted EXACTLY ONCE
-per user by an event-time TIMER that fires when the watermark passes
-``last_event + gap`` — i.e. "the user has left for good" analytics.
-Each input batch merges into the 5-field state row, deletes the
-previously registered timer, and re-registers at the new horizon, so
-per-user state is one small row and is CLEARED on emission: the state
-store holds only still-active users, never history.
+Two processors, each run by its own replay and registry gate:
 
-Batch equivalence: the emitted set equals the batch
-``groupBy(user).agg(min, max, count, sum)`` verbatim (aggregates are
-order-free, so cross-batch arrival order is irrelevant), which is what
-lets the DuckDB oracle hash-gate a custom-stateful streaming operator.
+- ``LifetimeStatsProcessor`` (``user_lifetime_replay``, gate
+  ``streaming_tws_user_lifetime``): per-user LIFETIME aggregates
+  (first/last event time, count, exact value cents) held in a
+  ``ValueState`` row, emitted EXACTLY ONCE per user by an event-time
+  TIMER that fires when the watermark passes ``last_event + gap`` —
+  i.e. "the user has left for good" analytics. Each input batch merges
+  into the state row, deletes the previously registered timer, and
+  re-registers at the new horizon, so per-user state is one small row
+  and is CLEARED on emission: the state store holds only still-active
+  users, never history.
+- ``TypeRollupProcessor`` (``user_type_rollup_replay``, gate
+  ``streaming_tws_type_rollup``): the same timer over a per-type
+  ``MapState`` rollup plus a ``ListState`` batch log.
+
+Batch equivalence: each emitted set equals a batch ``groupBy``
+aggregate verbatim (aggregates are order-free, so cross-batch arrival
+order is irrelevant), which is what lets the DuckDB oracle hash-gate a
+custom-stateful streaming operator.
 
 ``transformWithState`` requires the RocksDB state store provider; the
 replay sets it on the session (it serves every other stateful op
@@ -196,7 +203,7 @@ def user_lifetime_stream(
 # transformWithState replay tuning (r12 verdict item 3 — the tws
 # family's ~10 s was the largest unamortized fixed cost in the
 # headline). Measured at sf0.1, local[32], warm (BASELINE.md, tws family):
-#  - state partitions: r13 re-sweep on the STANDALONE processors
+#  - state partitions: r13 re-sweep on the two processors
 #    (16/8/4 × 3 reps): 8 ≈ 16 for both gates (lifetime 5.3 vs 5.8 s,
 #    rollup 6.3 both), 4 regresses (chatter serializes). An sf0.01-
 #    vs-sf0.1 A/B showed per-call cost is ~100% fixed machinery
@@ -404,172 +411,3 @@ def user_type_rollup_replay(
         max_files_per_trigger,
     )
 
-
-# --- combined replay: both gates off ONE stream -------------------------------
-#
-# r12 verdict item 3: the two tws gates each paid the family's whole
-# fixed cost (plan ~1.2 s + 2 micro-batches of state machinery +
-# RocksDB commits) for the SAME input. The gates now share one
-# combined stream whose processor holds the union of the state the
-# two standalone operators use — ValueState (lifetime row) + MapState
-# (per-type rollup) + ListState (batch log) + re-armed event-time
-# timers — so every state-client protocol path the separate gates
-# wire-verified is still exercised, in ONE pass, and the second gate
-# reads the staged result (the staged-layout multi-consumer precedent:
-# sources/layout.py, the LSH pair tables). The standalone
-# LifetimeStatsProcessor / TypeRollupProcessor replays remain the
-# pytest surface (batch-equivalence, pagination, chunked-trigger
-# cross-batch merges) — nothing about their verification weakens.
-
-COMBINED_SCHEMA = (
-    "user_id long, row_kind string, event_type string, n_events long, "
-    "value_cents long, log_total long, first_ts_us long, last_ts_us long"
-)
-
-# bump to invalidate staged combined results when processor logic moves
-
-
-class CombinedStatsProcessor(StatefulProcessor):
-    """Union of LifetimeStatsProcessor and TypeRollupProcessor state:
-    one ValueState merge, one MapState rollup, one ListState log, one
-    re-armed timer per user — strictly fewer round-trips than the two
-    processors run separately (the rollup's own horizon ValueState is
-    subsumed by the lifetime row's last_us)."""
-
-    def __init__(self, gap_seconds: int = 86_400):
-        self._gap_ms = gap_seconds * 1_000
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState("agg", _STATE_SCHEMA)
-        self._map = handle.getMapState("by_type", "t string", "n long, cents long")
-        self._log = handle.getListState("batch_log", "bn long")
-
-    def handleInputRows(
-        self, key: Any, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        first_us = last_us = None
-        n = 0
-        cents = 0
-        agg: dict[str, tuple[int, int]] = {}
-        for pdf in rows:
-            ts_us = pdf["ts"].astype("datetime64[us]").astype("int64")
-            c_arr = np.floor(pdf["value"].to_numpy() * 100.0).astype("int64")
-            for t, c in zip(pdf["event_type"], c_arr):
-                n0, c0 = agg.get(t, (0, 0))
-                agg[t] = (n0 + 1, c0 + int(c))
-            cents += int(c_arr.sum())
-            n += len(pdf)
-            if len(pdf):
-                lo, hi = int(ts_us.min()), int(ts_us.max())
-                first_us = lo if first_us is None else min(first_us, lo)
-                last_us = hi if last_us is None else max(last_us, hi)
-        if n == 0:
-            return iter([])
-        for t, (tn, tc) in agg.items():
-            prev_tc = self._map.getValue((t,))
-            if prev_tc is not None:
-                self._map.updateValue((t,), (prev_tc[0] + tn, prev_tc[1] + tc))
-            else:
-                self._map.updateValue((t,), (tn, tc))
-        self._log.appendValue((n,))
-        prev = self._state.get()
-        prev_horizon = None
-        if prev is not None:
-            p_first, p_last, p_n, p_cents = prev
-            prev_horizon = p_last // 1000 + self._gap_ms
-            first_us = min(first_us, p_first)
-            last_us = max(last_us, p_last)
-            n += p_n
-            cents += p_cents
-        self._state.update((first_us, last_us, n, cents))
-        new_horizon = last_us // 1000 + self._gap_ms
-        if prev_horizon is not None and prev_horizon != new_horizon:
-            self._handle.deleteTimer(prev_horizon)
-        if prev_horizon != new_horizon:
-            self._handle.registerTimer(new_horizon)
-        return iter([])
-
-    def handleExpiredTimer(
-        self, key: Any, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-    ) -> Iterator[pd.DataFrame]:
-        state = self._state.get()
-        if state is None:
-            return iter([])
-        first_us, last_us, n, cents = state
-        uid = key[0]
-        out = {
-            "user_id": [uid],
-            "row_kind": ["lifetime"],
-            "event_type": [None],
-            "n_events": [n],
-            "value_cents": [cents],
-            "log_total": [None],
-            "first_ts_us": [first_us],
-            "last_ts_us": [last_us],
-        }
-        types = list(self._map.iterator())
-        log_total = sum(bn for (bn,) in self._log.get())
-        for (t,), (tn, tc) in types:
-            out["user_id"].append(uid)
-            out["row_kind"].append("type")
-            out["event_type"].append(t)
-            out["n_events"].append(tn)
-            out["value_cents"].append(tc)
-            out["log_total"].append(log_total)
-            out["first_ts_us"].append(None)
-            out["last_ts_us"].append(None)
-        self._state.clear()
-        self._map.clear()
-        self._log.clear()
-        return iter([pd.DataFrame(out)])
-
-    def close(self) -> None:
-        pass
-
-
-def combined_stream(
-    events: DataFrame,
-    gap_seconds: int = 86_400,
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    return (
-        events.where(F.col("ts").isNotNull())
-        .select("user_id", "ts", "event_type", "value")
-        .withWatermark("ts", watermark_delay)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            CombinedStatsProcessor(gap_seconds),
-            COMBINED_SCHEMA,
-            "append",
-            "EventTime",
-        )
-    )
-
-
-def combined_replay(
-    spark: SparkSession,
-    sf_dir: str,
-    gap_seconds: int = 86_400,
-    max_files_per_trigger: int = 4,
-) -> DataFrame:
-    """Sentinel-flushed append replay of the combined processor.
-
-    Both tws gates project their rows off this ONE stream topology
-    (union of state types — every protocol path stays wire-verified)
-    so the family pays a single planning/processor shape, but each
-    CALL runs the replay from the staged input for real. An earlier
-    revision cached the replay RESULT on disk keyed by fixture
-    mtime, which let a later bench/oracle invocation serve both
-    gates with zero computation — removed in the r13 optimization
-    round: result caching across invocations is gaming, not
-    optimization. (The replay INPUT staging in ``streaming.replay``
-    remains — it is layout plumbing for the file-stream source; the
-    stream itself recomputes every time.)"""
-    return _tws_replay(
-        spark,
-        sf_dir,
-        "streaming_tws_combined",
-        lambda events: combined_stream(events, gap_seconds),
-        max_files_per_trigger,
-    )
