@@ -7,13 +7,15 @@ populated from ``web_analytics_visits_re_processing_spark.plans``.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Make the package importable no matter the driver's cwd.
+# Make the package importable no matter the driver's cwd: here, and in
+# the session's Python workers (``_ship``).
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
@@ -21,8 +23,33 @@ if _REPO not in sys.path:
 from web_analytics_visits_re_processing_spark.plans import ORACLES, QUERIES  # noqa: E402
 
 
+def _ship(spark: SparkSession) -> None:
+    """Put this checkout on the PYTHONPATH of ``spark``'s Python
+    workers. A worker imports the package when it unpickles a UDF, a
+    data source or a stateful processor, and it starts in the JVM's
+    working directory, not here. ``sc.environment`` is copied into every
+    Python function wrapped after this call, so it reaches task workers
+    and the transformWithState driver worker alike."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _REPO not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_REPO, *paths])
+
+
+def _shipped(
+    fn: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _ship(spark)
+        return fn(spark, sf_dir)
+
+    return run
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: sessionize the sf0.001 events stream into visits."""
+    _ship(spark)
     return QUERIES["sessionize_visits"](spark, "/root/testdata/sf0.001")
 
 
@@ -104,7 +131,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return (2, last_pass[name])
 
     ordered = sorted(QUERIES, key=prio)  # stable: registry order within ties
-    return {name: QUERIES[name] for name in ordered}
+    return {name: _shipped(QUERIES[name]) for name in ordered}
 
 
 def oracle_sql() -> dict[str, str]:

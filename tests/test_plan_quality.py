@@ -836,15 +836,8 @@ _UNPARTITIONED_WINDOW_WHITELIST: dict[str, frozenset] = {
     "runs_test_daily_revenue": frozenset({"cents", "day", "<unordered>"}),
     "max_drawdown_daily": frozenset({"day"}),
     "local_extrema_days": frozenset({"day"}),
-    "ewma_daily_revenue": frozenset({"d"}),
     "acf_daily_revenue": frozenset({"d"}),
-    # Croston stages the single-part demand-occurrence sequence —
-    # calendar-bounded (≤ one row per ship day of ONE part), the
-    # _daily_seq carve-out
-    "croston_intermittent_demand": frozenset({"d"}),
     "theil_sen_daily_trend": frozenset({"d", "s", "<unordered>"}),
-    "holt_linear_backtest": frozenset({"d"}),
-    "holt_winters_dow_backtest": frozenset({"d"}),
     "dow_naive_forecast_backtest": frozenset({"<unordered>"}),
     "streaming_activity_heatmap": frozenset({"<unordered>"}),
     "activity_heatmap_dow_hour": frozenset({"<unordered>"}),

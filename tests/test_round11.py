@@ -175,12 +175,7 @@ def test_rfm_hist_arm_matches_duckdb_replay(spark):
         _rfm_hist_arm,
         _rfm_oracle,
     )
-    from web_analytics_visits_re_processing_spark.plans.llmdata import (
-        _count_cached,
-    )
-    from web_analytics_visits_re_processing_spark.plans.webanalytics import (
-        _lp_cached,
-    )
+    from web_analytics_visits_re_processing_spark.sources.layout import staged
 
     full = _rfm_oracle()
     head, tail = full.rsplit("arms AS (", 1)
@@ -189,7 +184,7 @@ def test_rfm_hist_arm_matches_duckdb_replay(spark):
     # the staged rollup builder is the query's own (registered) one —
     # run the registered query once to stage it, then rescore
     QUERIES["rfm_segments"](spark, SF_DIR).collect()
-    rfm = _lp_cached("rfm_user_rollup", spark, SF_DIR, lambda: None)
+    rfm = staged("rfm_user_rollup", spark, SF_DIR, lambda: None)
     scored = _rfm_hist_arm(rfm).select(
         "user_id",
         "recency_days",

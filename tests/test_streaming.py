@@ -293,7 +293,7 @@ def test_stateful_abandonment_across_batches(spark, tmp_path):
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(src))
     )
-    result = abandoned_sessions_stream(stream, gap_seconds=1800)
+    result = abandoned_sessions_stream(stream)
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     q = (
         result.writeStream.format("parquet")
@@ -341,7 +341,7 @@ def test_abandonment_late_click_inside_watermark_opens_its_own_visit(spark, tmp_
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(src))
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     q = (
-        abandoned_sessions_stream(stream, gap_seconds=1800)
+        abandoned_sessions_stream(stream)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt)
@@ -363,7 +363,7 @@ def test_abandonment_late_click_inside_watermark_opens_its_own_visit(spark, tmp_
     assert dropped == 0
     assert got == [(1, late, late, 1, 1), (1, first, first, 1, 1)]
     batch = abandoned_sessions_stream(
-        spark.createDataFrame([r for rows in batches for r in rows], schema), gap_seconds=1800
+        spark.createDataFrame([r for rows in batches for r in rows], schema)
     )
     assert got == sorted(map(tuple, batch.collect()))
 

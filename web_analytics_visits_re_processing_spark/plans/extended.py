@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from web_analytics_visits_re_processing_spark.plans.registry import query
+from web_analytics_visits_re_processing_spark.sources.layout import memo, staged
 from web_analytics_visits_re_processing_spark.sources.tables import load_table
 from web_analytics_visits_re_processing_spark.streaming.replay import replay_workdir
 
@@ -1935,12 +1936,9 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from web_analytics_visits_re_processing_spark.operators.sketch import (
         profile_distinct_mode,
     )
-    from web_analytics_visits_re_processing_spark.plans.llmdata import (
-        _count_cached,
-    )
 
     o = load_table(spark, sf_dir, "orders")
-    n = _count_cached("orders_n", spark, sf_dir, o.count)
+    n = memo("orders_n", sf_dir, o.count)
     if profile_distinct_mode(n) == "exact":
         return _profile_exact_arm(o)
     return _profile_hll_arm(o)
@@ -2390,12 +2388,9 @@ def q_equal_freq_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     from web_analytics_visits_re_processing_spark.operators.ranks import (
         ntile_mode,
     )
-    from web_analytics_visits_re_processing_spark.plans.llmdata import (
-        _count_cached,
-    )
 
     ev = load_table(spark, sf_dir, "events")
-    n = _count_cached("events_n", spark, sf_dir, ev.count)
+    n = memo("events_n", sf_dir, ev.count)
     if ntile_mode(n) == "histogram":
         return _equal_freq_hist_arm(ev)
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
@@ -2665,12 +2660,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_ntile,
         ntile_mode,
     )
-    from web_analytics_visits_re_processing_spark.plans.llmdata import (
-        _count_cached,
-    )
-    from web_analytics_visits_re_processing_spark.plans.webanalytics import (
-        _lp_cached,
-    )
 
     def build() -> DataFrame:
         ev = load_table(spark, sf_dir, "events")
@@ -2696,8 +2685,8 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    rfm = _lp_cached("rfm_user_rollup", spark, sf_dir, build)
-    n_users = _count_cached("rfm_users_n", spark, sf_dir, rfm.count)
+    rfm = staged("rfm_user_rollup", spark, sf_dir, build)
+    n_users = memo("rfm_users_n", sf_dir, rfm.count)
     if ntile_mode(n_users) == "histogram":
         scored = _rfm_hist_arm(rfm)
     else:

@@ -44,6 +44,7 @@ from web_analytics_visits_re_processing_spark.operators.similarity import (
     l2_norm,
 )
 from web_analytics_visits_re_processing_spark.plans.registry import query
+from web_analytics_visits_re_processing_spark.sources.layout import memo, staged
 from web_analytics_visits_re_processing_spark.sources.tables import load_table
 
 
@@ -53,21 +54,6 @@ def _docs(spark, sf_dir):
 
 def _emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings")
-
-
-# Corpus-band selectors (lsh_planes_for / simhash_bits_for) need ONE
-# bounded count job; plan-only consumers (plan audits, plan-quality
-# pytests, sweeps) would otherwise re-pay that job on every
-# DataFrame construction, so the scalar is memoized per
-# (tag, session, sf).
-_COUNT_CACHE: dict[tuple[str, int, str], int] = {}
-
-
-def _count_cached(tag: str, spark, sf_dir: str, count_fn) -> int:
-    k = (tag, id(spark), sf_dir)
-    if k not in _COUNT_CACHE:
-        _COUNT_CACHE[k] = count_fn()
-    return _COUNT_CACHE[k]
 
 
 # --- text analysis -----------------------------------------------------------
@@ -373,17 +359,14 @@ def _lsh_pairs_05(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself, the CC closure, the leakage-safe split and the
     cluster-size histogram); before this table each re-ran
     shingling, signature aggregation, banding and verify from the
-    raw documents. Materialized once per (session, sf) via
-    ``_lp_cached`` — a parquet leaf downstream, and the double
+    raw documents. Materialized once per (session, fixture) via
+    ``layout.staged`` — a parquet leaf downstream, and the double
     ``jaccard`` column round-trips bit-exactly."""
-    from web_analytics_visits_re_processing_spark.plans.webanalytics import (
-        _lp_cached,
-    )
 
     def build() -> DataFrame:
         return minhash_lsh_near_dups(_docs(spark, sf_dir), threshold=0.5)
 
-    return _lp_cached("lsh_pairs_05", spark, sf_dir, build)
+    return staged("lsh_pairs_05", spark, sf_dir, build)
 
 
 def _lsh_cand_64_16(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -396,16 +379,13 @@ def _lsh_cand_64_16(spark: SparkSession, sf_dir: str) -> DataFrame:
     from web_analytics_visits_re_processing_spark.operators.dedup import (
         minhash_lsh_candidates,
     )
-    from web_analytics_visits_re_processing_spark.plans.webanalytics import (
-        _lp_cached,
-    )
 
     def build() -> DataFrame:
         return minhash_lsh_candidates(
             _docs(spark, sf_dir), num_hashes=64, bands=16, ngram=3
         )
 
-    return _lp_cached("lsh_cand_64_16", spark, sf_dir, build)
+    return staged("lsh_cand_64_16", spark, sf_dir, build)
 
 
 def _dedup_components_05(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -416,16 +396,13 @@ def _dedup_components_05(spark: SparkSession, sf_dir: str) -> DataFrame:
     from web_analytics_visits_re_processing_spark.operators.graph import (
         dedup_components,
     )
-    from web_analytics_visits_re_processing_spark.plans.webanalytics import (
-        _lp_cached,
-    )
 
     def build() -> DataFrame:
         docs = _docs(spark, sf_dir)
         pairs = _lsh_pairs_05(spark, sf_dir).select("id_a", "id_b")
         return dedup_components(docs, pairs)
 
-    return _lp_cached("dedup_comp_05", spark, sf_dir, build)
+    return staged("dedup_comp_05", spark, sf_dir, build)
 
 
 # LSH banding in SQL (mirror of operators.dedup.minhash_bands with
@@ -654,7 +631,7 @@ def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs(spark, sf_dir)
-    n = _count_cached("docs_n", spark, sf_dir, docs.count)
+    n = memo("docs_n", sf_dir, docs.count)
     return simhash_near_dup_pairs(
         docs,
         max_hamming=3,
@@ -755,9 +732,8 @@ def q_simhash_rep_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs(spark, sf_dir)
-    n = _count_cached(
+    n = memo(
         "docs_reps_n",
-        spark,
         sf_dir,
         lambda: docs.select(exact_fingerprint("text")).distinct().count(),
     )
@@ -966,30 +942,17 @@ SELECT query_id, vec_id, cos, rk FROM (
 """
 
 
-# Centroid samples are MODEL PARAMETERS (64 rows) — memoized per
-# (session, sf, fixture fingerprint) like the corpus-band counts so
-# the staged-cells consumers don't re-run the TakeOrdered collect per
-# invocation. The fingerprint keeps a fixture regenerated MID-SESSION
-# from serving stale centroids while the DuckDB oracle reads the new
-# files (the layout._BUCKETED_CACHE hazard class); superseded entries
-# for the same (session, sf) are evicted on refresh.
-_IVF_CENTS_CACHE: dict = {}
-
-
 def _ivf_cents_64(spark: SparkSession, sf_dir: str) -> list:
+    """The 64 IVF centroid samples — MODEL PARAMETERS, memoized per
+    fixture state (``layout.memo``) so the staged-cells consumers don't
+    re-run the TakeOrdered collect per invocation."""
     from web_analytics_visits_re_processing_spark.operators.similarity import (
         ivf_centroids,
     )
-    from web_analytics_visits_re_processing_spark.sources.layout import (
-        _fixture_fingerprint,
-    )
 
-    k = (id(spark), sf_dir, _fixture_fingerprint(sf_dir))
-    if k not in _IVF_CENTS_CACHE:
-        for stale in [o for o in _IVF_CENTS_CACHE if o[:2] == k[:2]]:
-            del _IVF_CENTS_CACHE[stale]
-        _IVF_CENTS_CACHE[k] = ivf_centroids(_emb(spark, sf_dir), 64)
-    return _IVF_CENTS_CACHE[k]
+    return memo(
+        "ivf_cents_64", sf_dir, lambda: ivf_centroids(_emb(spark, sf_dir), 64)
+    )
 
 
 def _ivf_cells_64(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1000,7 +963,7 @@ def _ivf_cells_64(spark: SparkSession, sf_dir: str) -> DataFrame:
     every literal-path IVF query, and both ``embedding_cosine_topk_
     ivf`` (exact rescore) and ``embedding_topk_ivf_pq`` (ADC rescore)
     need the bit-identical assignment. Materialized once per
-    (session, sf) via ``_lp_cached``: consumers bottom out at a
+    (session, fixture) via ``layout.staged``: consumers bottom out at a
     parquet leaf scan with ``_cell`` ready for the probe equi-join.
     At 100 TB this IS the IVF index build — assignment runs at ingest
     and every search reads the posting-list layout, never re-derives
@@ -1010,16 +973,13 @@ def _ivf_cells_64(spark: SparkSession, sf_dir: str) -> DataFrame:
     from web_analytics_visits_re_processing_spark.operators.similarity import (
         ivf_corpus_cells,
     )
-    from web_analytics_visits_re_processing_spark.plans.webanalytics import (
-        _lp_cached,
-    )
 
     def build() -> DataFrame:
         return ivf_corpus_cells(
             _emb(spark, sf_dir), _ivf_cents_64(spark, sf_dir)
         )
 
-    return _lp_cached("ivf_cells_64", spark, sf_dir, build)
+    return staged("ivf_cells_64", spark, sf_dir, build)
 
 
 @query("embedding_cosine_topk_ivf", oracle=_IVF_ORACLE)
@@ -1109,7 +1069,7 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _emb(spark, sf_dir)
-    planes = lsh_planes_for(_count_cached("emb_n", spark, sf_dir, emb.count))
+    planes = lsh_planes_for(memo("emb_n", sf_dir, emb.count))
     # r13 INHERITED-BUG fix: building both join legs from ONE
     # DataFrame object made this a same-relation self-join whose
     # DeduplicateRelations rewrite loses the attribute references
@@ -2283,7 +2243,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _emb(spark, sf_dir)
-    k = max(10, _count_cached("emb_n", spark, sf_dir, emb.count) // 600)
+    k = max(10, memo("emb_n", sf_dir, emb.count) // 600)
     return semdedup_verdicts(emb, k=k, n_updates=1, tau=0.35)
 
 
@@ -2706,23 +2666,20 @@ def _persisted_band_table(spark: SparkSession, sf_dir: str, corpus: DataFrame) -
     lineage. In production this is the artifact written bucketed by
     band_key at corpus freeze.
 
-    r14 (verdict item 4): staging is PER-PROCESS (``_lp_cached``:
+    r14 (verdict item 4): staging is PER-PROCESS (``layout.staged``:
     tempdir, atexit-removed, session+fingerprint keyed) instead of the
     old cross-run ``.tmp`` dir keyed on the fixture's mtime. The old
     form let every bench/oracle invocation after the first PROCESS
     skip the index build entirely while the DuckDB oracle rebuilt it
     from scratch each run — an undisclosed cross-run amortization.
     Now the first consumer in each interpreter pays the build inside
-    its own timed region (exactly the ``_lp_cached`` contract the
+    its own timed region (exactly the ``layout.staged`` contract the
     basket/LSH staging tables already follow)."""
     from web_analytics_visits_re_processing_spark.operators.dedup import (
         minhash_band_table,
     )
-    from web_analytics_visits_re_processing_spark.plans.webanalytics import (
-        _lp_cached,
-    )
 
-    return _lp_cached(
+    return staged(
         "minhash_index_bands", spark, sf_dir, lambda: minhash_band_table(corpus)
     )
 

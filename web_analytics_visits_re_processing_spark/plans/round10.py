@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from web_analytics_visits_re_processing_spark.plans.registry import query
+from web_analytics_visits_re_processing_spark.sources.layout import memo, staged
 from web_analytics_visits_re_processing_spark.sources.tables import load_table
 
 # --- Gopher top-n-gram repetition signals --------------------------------------
@@ -560,8 +561,8 @@ comp AS (
 
 def _stitched_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, visitor) — the stitched cluster map every MDM-family
-    consumer joins on, MATERIALIZED once per (session, sf) via
-    ``_lp_cached`` (the basket_pairs pattern): the stitch is a
+    consumer joins on, MATERIALIZED once per (session, fixture) via
+    ``layout.staged`` (the basket_pairs pattern): the stitch is a
     driver-iterative connected-components loop (localCheckpoint + a
     convergence action per round), the family's most expensive
     subplan, and three consumers (golden record, batch + streaming
@@ -570,9 +571,6 @@ def _stitched_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays it as ``_STITCH_CTES``)."""
     from web_analytics_visits_re_processing_spark.operators.identity import (
         stitch_identities,
-    )
-    from web_analytics_visits_re_processing_spark.plans.webanalytics import (
-        _lp_cached,
     )
 
     def build() -> DataFrame:
@@ -597,10 +595,7 @@ def _stitched_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", F.col("canonical_visitor").alias("visitor")
         )
 
-    return _lp_cached("stitched_clusters", spark, sf_dir, build)
-
-
-_XDEV_MAXSZ: dict = {}
+    return staged("stitched_clusters", spark, sf_dir, build)
 
 
 def _stitched_clusters_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -610,9 +605,6 @@ def _stitched_clusters_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     replan reads a parquet leaf instead of re-running the window.
     Feeds the bitmask device count in
     ``plans/streaming_queries.streaming_cross_device_append``."""
-    from web_analytics_visits_re_processing_spark.plans.webanalytics import (
-        _lp_cached,
-    )
 
     def build() -> DataFrame:
         w = Window.partitionBy("visitor").orderBy("user_id")
@@ -622,32 +614,23 @@ def _stitched_clusters_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.row_number().over(w) - 1).cast("int").alias("_didx"),
         )
 
-    return _lp_cached("stitched_clusters_didx", spark, sf_dir, build)
+    return staged("stitched_clusters_didx", spark, sf_dir, build)
 
 
 def _stitched_max_cluster_size(spark: SparkSession, sf_dir: str) -> int:
     """Largest stitched cluster (device count per visitor), computed
-    ONCE per (session, fixture) from the staged indexed map — the
-    count-banded arm pick for the bitmask device count (≤64 devices →
-    one long of agg state; beyond → the exact collect_set arm)."""
-    import os as _os
-
-    from web_analytics_visits_re_processing_spark.sources.layout import (
-        _fixture_fingerprint,
+    ONCE per fixture state (``layout.memo``) from the staged indexed
+    map — the count-banded arm pick for the bitmask device count (≤64
+    devices → one long of agg state; beyond → the exact collect_set
+    arm)."""
+    return memo(
+        "stitched_max_cluster_size",
+        sf_dir,
+        lambda: _stitched_clusters_indexed(spark, sf_dir)
+        .agg(F.max("_didx"))
+        .first()[0]
+        + 1,
     )
-
-    fp = _fixture_fingerprint(sf_dir) if _os.path.isdir(sf_dir) else None
-    key = (id(spark), sf_dir, fp)
-    hit = _XDEV_MAXSZ.get(key)
-    if hit is None:
-        hit = (
-            _stitched_clusters_indexed(spark, sf_dir)
-            .agg(F.max("_didx"))
-            .first()[0]
-            + 1
-        )
-        _XDEV_MAXSZ[key] = hit
-    return hit
 
 
 _GOLDEN_ORACLE = f"""

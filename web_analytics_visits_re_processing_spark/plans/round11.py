@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from web_analytics_visits_re_processing_spark.plans.registry import query
+from web_analytics_visits_re_processing_spark.sources.layout import staged
 from web_analytics_visits_re_processing_spark.sources.tables import load_table
 
 # --- SCD Type-2 dimension build -------------------------------------------------
@@ -567,40 +568,31 @@ def q_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Croston intermittent-demand forecast ----------------------------------------
 
-# Single-slot staged occurrence sequence (the _daily_seq convention:
-# persist once per (session, sf), unpersist evicted entries — the
-# recursion re-evaluates its referenced relation per step, and
-# re-staging per invocation both re-scans lineitem and LEAKS a
-# persisted frame each call).
-_CROSTON_SEQ_CACHE: dict = {}
-
-
 def _croston_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    hit = _CROSTON_SEQ_CACHE.get(key)
-    if hit is not None:
-        return hit
-    li = load_table(spark, sf_dir, "lineitem")
-    pk = li.agg(F.min("l_partkey")).first()[0]
-    occ = (
-        li.where(F.col("l_partkey") == pk)
-        .groupBy(F.to_date("l_shipdate").alias("d"))
-        .agg(F.sum("l_quantity").cast("long").alias("qty"))
-    )
-    wd = Window.orderBy("d")
-    seq = occ.select(
-        "d",
-        "qty",
-        F.row_number().over(wd).alias("n"),
-        F.coalesce(F.datediff(F.col("d"), F.lag("d").over(wd)), F.lit(1))
-        .cast("long")
-        .alias("gap_days"),
-    ).persist()
-    seq.count()
-    for k in list(_CROSTON_SEQ_CACHE):
-        _CROSTON_SEQ_CACHE.pop(k).unpersist(blocking=False)
-    _CROSTON_SEQ_CACHE[key] = seq
-    return seq
+    """(d, qty, n, gap_days): the minimum part's daily shipped quantity
+    on its demand days, STAGED once per session and fixture (the
+    ``_daily_seq`` convention) so the fold re-reads a small file, not
+    lineitem."""
+
+    def build() -> DataFrame:
+        li = load_table(spark, sf_dir, "lineitem")
+        pk = li.agg(F.min("l_partkey")).first()[0]
+        occ = (
+            li.where(F.col("l_partkey") == pk)
+            .groupBy(F.to_date("l_shipdate").alias("d"))
+            .agg(F.sum("l_quantity").cast("long").alias("qty"))
+        )
+        wd = Window.orderBy("d")
+        return occ.select(
+            "d",
+            "qty",
+            F.row_number().over(wd).alias("n"),
+            F.coalesce(F.datediff(F.col("d"), F.lag("d").over(wd)), F.lit(1))
+            .cast("long")
+            .alias("gap_days"),
+        )
+
+    return staged("croston_seq", spark, sf_dir, build)
 
 
 _CROSTON_ORACLE = """
@@ -650,9 +642,9 @@ def q_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs as ONE ``aggregate()`` array fold over the collected
     sequence — per-step arithmetic identical to the recursive CTE
     the oracle replays, O(1) plan size instead of depth-many
-    iterated plans. The single-partition window in the staging view
-    ranks that tiny occurrence table — the daily-spine carve-out,
-    identical to ``_daily_seq``."""
+    iterated plans. The single-partition window that ranks that tiny
+    occurrence table runs once, in the staged build of
+    ``_croston_seq`` — the daily-spine carve-out of ``_daily_seq``."""
     seq = _croston_seq(spark, sf_dir)
     folded = seq.agg(
         F.sort_array(

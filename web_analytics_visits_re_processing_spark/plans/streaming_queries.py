@@ -21,10 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from web_analytics_visits_re_processing_spark.operators.sessionize import (
-    DEFAULT_GAP_SECONDS,
-    sessionize_visits,
-)
+from web_analytics_visits_re_processing_spark.operators.sessionize import sessionize_visits
 from web_analytics_visits_re_processing_spark.plans.analytics import _SESSION_CTE
 from web_analytics_visits_re_processing_spark.plans.registry import query
 from web_analytics_visits_re_processing_spark.streaming.replay import (
@@ -53,12 +50,7 @@ FROM sess
 GROUP BY user_id, session_seq
 """,
 )
-def streaming_visits_append(
-    spark: SparkSession,
-    sf_dir: str,
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
+def streaming_visits_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The paper's stream (``sessionize_stream``) replayed through the
     production topology: file source → watermark → session_window agg
     → APPEND mode → parquet sink. Result equals the batch sessionizer
@@ -68,7 +60,7 @@ def streaming_visits_append(
         spark,
         sf_dir,
         "streaming_sessionize_visits",
-        lambda events: sessionize_stream(events, gap_seconds, watermark_delay),
+        sessionize_stream,
     )
     return visits.where(F.col("user_id") != SENTINEL_USER_ID).select(
         "visit_key",
@@ -174,11 +166,7 @@ TRIGGER_EVENT = "click"
 CONVERT_EVENT = "purchase"
 
 
-def abandoned_sessions_stream(
-    events: DataFrame,
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
+def abandoned_sessions_stream(events: DataFrame) -> DataFrame:
     """Abandoned sessions: the visits of ``sessionize_visits`` over the
     watermarked ``events``, with per-visit trigger and convert counts,
     kept where a trigger came and no conversion did. Columns
@@ -194,8 +182,7 @@ def abandoned_sessions_stream(
         return F.sum(F.when(F.col("event_type") == event_type, 1).otherwise(0))
 
     visits = sessionize_visits(
-        events.withWatermark("ts", watermark_delay),
-        gap_seconds=gap_seconds,
+        events.withWatermark("ts", "1 hour"),
         extra_aggs=[
             count_of(TRIGGER_EVENT).alias("n_trigger"),
             count_of(CONVERT_EVENT).alias("n_convert"),
@@ -246,9 +233,7 @@ SELECT DISTINCT user_id, event_type,
 FROM events
 """,
 )
-def streaming_dedup_append(
-    spark: SparkSession, sf_dir: str, watermark_delay: str = "1 hour"
-) -> DataFrame:
+def streaming_dedup_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DEDUPLICATION under a watermark: ``dropDuplicates``
     keyed on (user_id, event_type, minute-truncated event time) via
     the append-mode file-sink topology ≡ batch DISTINCT.
@@ -263,7 +248,7 @@ def streaming_dedup_append(
     def build(events: DataFrame) -> DataFrame:
         return (
             events.withColumn("ts_min", F.date_trunc("minute", F.col("ts")))
-            .withWatermark("ts_min", watermark_delay)
+            .withWatermark("ts_min", "1 hour")
             .dropDuplicates(["user_id", "event_type", "ts_min"])
             .select(
                 "user_id",
@@ -295,12 +280,10 @@ WHERE c.event_type = 'click' AND p.event_type = 'purchase'
 def streaming_interval_join_append(
     spark: SparkSession,
     sf_dir: str,
-    max_gap_minutes: int = 30,
-    watermark_delay: str = "1 hour",
     how: str = "inner",
 ) -> DataFrame:
     """STREAM-STREAM join with an event-time interval bound: purchases
-    joined to same-user clicks at most ``max_gap_minutes`` earlier,
+    joined to same-user clicks at most 30 minutes earlier,
     append-mode through the file-sink topology ≡ the batch
     time-bounded self-join oracle.
 
@@ -323,7 +306,7 @@ def streaming_interval_join_append(
             # unmatched rows never flushing in the outer-join variant.
             # The sentinel has user_id = -1 and so matches nothing; it
             # is dropped from the read-back instead.
-            return events.withWatermark("ts", watermark_delay).where(
+            return events.withWatermark("ts", "1 hour").where(
                 (F.col("event_type") == etype)
                 | (F.col("user_id") == SENTINEL_USER_ID)
             )
@@ -341,10 +324,10 @@ def streaming_interval_join_append(
         return clicks.join(
             purchases,
             F.expr(
-                f"""
+                """
                 click_user_id = purchase_user_id
                 AND purchase_ts >= click_ts
-                AND purchase_ts <= click_ts + INTERVAL {max_gap_minutes} MINUTES
+                AND purchase_ts <= click_ts + INTERVAL 30 MINUTES
                 """
             ),
             how,
@@ -1248,11 +1231,7 @@ def _dyngap_oracle() -> str:
 
 
 @query("streaming_dynamic_gap_sessions", oracle=_dyngap_oracle())
-def streaming_dynamic_gap_append(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
+def streaming_dynamic_gap_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sessionization with a per-event-type DYNAMIC gap
     expression (clicks 5 min, purchases 10, rest 30) — the streaming
     twin of ``sessionize_dynamic_gap``, SAME oracle text: per-row
@@ -1271,7 +1250,7 @@ def streaming_dynamic_gap_append(
     def build(events: DataFrame) -> DataFrame:
         return (
             events.where(F.col("ts").isNotNull())
-            .withWatermark("ts", watermark_delay)
+            .withWatermark("ts", "1 hour")
             .groupBy(F.col("user_id"), F.session_window(F.col("ts"), gap))
             .agg(
                 F.min("ts").alias("_start"),
@@ -1299,11 +1278,7 @@ def _cross_device_oracle() -> str:
 
 
 @query("streaming_cross_device_sessionize", oracle=_cross_device_oracle())
-def streaming_cross_device_append(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
+def streaming_cross_device_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ENRICH-THEN-SESSIONIZE: the event stream joins the
     batch-computed stitched-visitor map (stream⋈static on user_id),
     then sessionizes at the VISITOR grain under a watermark — the
@@ -1346,7 +1321,7 @@ def streaming_cross_device_append(
     def build(events: DataFrame) -> DataFrame:
         return (
             events.where(F.col("ts").isNotNull())
-            .withWatermark("ts", watermark_delay)
+            .withWatermark("ts", "1 hour")
             .join(clusters, "user_id")
             .groupBy(F.col("visitor"), F.session_window(F.col("ts"), "30 minutes"))
             .agg(

@@ -16,8 +16,6 @@ final small aggregates arriving via map-side partial aggregation.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -27,6 +25,7 @@ from web_analytics_visits_re_processing_spark.operators.sessionize import (
 )
 from web_analytics_visits_re_processing_spark.plans.analytics import _SESSION_CTE
 from web_analytics_visits_re_processing_spark.plans.registry import query
+from web_analytics_visits_re_processing_spark.sources.layout import staged
 from web_analytics_visits_re_processing_spark.sources.tables import load_table
 
 GAP_US = 1800 * 1_000_000
@@ -5771,71 +5770,6 @@ _LP_KEEP_SQL = f"""sym AS (
 )"""
 
 
-# Single-slot STAGED-table cache for the link-prediction family's
-# shared intermediates, one slot per name keyed by (session, sf). The
-# edge set and the capped adjacency each feed BOTH gated queries
-# (common-neighbors and Adamic–Adar) inside one bench / driver run.
-#
-# Staging = write-parquet-once + read back, NOT persist(): a
-# DataFrame DAG prints (and analyzes) as a TREE, so with persist()
-# every InMemoryTableScan re-prints its full cached build plan and
-# the wedge queries' audited plans exploded to ~2000 exchange lines /
-# 3 MB of text (the r8 plan-tree-bloat finding — a compile-time and
-# optimizer-memory hazard even though the executed dataflow was
-# bounded). A parquet read-back truncates lineage for real: every
-# reference is a leaf file scan, the analyzed plan is shallow, and
-# the audited plan drops to tens of nodes. This is also the 100 TB
-# shape — a production pipeline materializes a many-consumer
-# intermediate as a staging table, it doesn't re-derive it per
-# consumer. localCheckpoint() is still avoided (its internal RDD
-# cannot be released by unpersist — the importance_scores lesson);
-# staged directories are deleted on slot eviction and at interpreter
-# exit, and hold only bounded derived tables (capped adjacency /
-# degree tables), never raw data.
-_LP_CACHE: dict = {}
-
-
-def _stage_dir() -> str:
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="wavrp_stage_")
-    import atexit
-    import shutil
-
-    atexit.register(shutil.rmtree, d, True)
-    return d
-
-
-def _lp_cached(name: str, spark: SparkSession, key: str, build) -> DataFrame:
-    import shutil
-
-    # ``key`` is the fixture dir at every call site: fold its file
-    # fingerprint into the cache key so a fixture regenerated
-    # MID-SESSION restages instead of serving stale bytes (the oracle
-    # reads the new files directly — a stale hit is a spurious gate
-    # failure). Same hazard class as layout._BUCKETED_CACHE.
-    from web_analytics_visits_re_processing_spark.sources.layout import (
-        _fixture_fingerprint,
-    )
-
-    fp = _fixture_fingerprint(key) if os.path.isdir(key) else None
-    k = (name, id(spark), key, fp)
-    hit = _LP_CACHE.get(k)
-    if hit is not None:
-        return hit[0]
-    path = os.path.join(_stage_dir(), name)
-    build().write.mode("overwrite").parquet(path)
-    df = spark.read.parquet(path)
-    # evict every superseded entry for this leaf (older fingerprint
-    # or other session) — their staged directories are gone after the
-    # overwrite anyway
-    for other in [o for o in _LP_CACHE if o[0] == name and o != k]:
-        _opath = _LP_CACHE.pop(other)[1]
-        shutil.rmtree(os.path.dirname(_opath), ignore_errors=True)
-    _LP_CACHE[k] = (df, path)
-    return df
-
-
 def _basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Staged co-purchase pair-support table ``(pa < pb, s_ab)`` with
     NO support threshold — the ONE many-consumer intermediate of the
@@ -5847,8 +5781,8 @@ def _basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     this table each of them re-ran the distinct ``(order, part)``
     self-join from raw lineitem — ten fact-table scans and ten basket
     fan-out shuffles for byte-identical intermediates. Materialized
-    once per (session, sf) as a parquet staging table via
-    ``_lp_cached``: lineage truncates for real, every consumer plan
+    once per (session, fixture) as a parquet staging table via
+    ``layout.staged``: lineage truncates for real, every consumer plan
     bottoms out at a leaf file scan (with size stats, so small
     derived sides broadcast downstream), and each consumer's support
     threshold is a pushed-down filter on the staged file. This is the
@@ -5869,7 +5803,7 @@ def _basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("s_ab"))
         )
 
-    return _lp_cached("basket_pairs", spark, sf_dir, build)
+    return staged("basket_pairs", spark, sf_dir, build)
 
 
 def _basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5889,7 +5823,7 @@ def _basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = op.agg(F.countDistinct("o").alias("n_orders"))
         return item.crossJoin(F.broadcast(n))
 
-    return _lp_cached("basket_items", spark, sf_dir, build)
+    return staged("basket_items", spark, sf_dir, build)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5920,7 +5854,7 @@ def _basket_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _lp_cached("basket_triangles", spark, sf_dir, build)
+    return staged("basket_triangles", spark, sf_dir, build)
 
 
 def _lp_kept_adjacency(spark: SparkSession, sf_dir: str, e: DataFrame):
@@ -5966,7 +5900,7 @@ def _lp_kept_adjacency(spark: SparkSession, sf_dir: str, e: DataFrame):
             .select("node", "d", "rn", "n")
         )
 
-    dr = _lp_cached("lp_dr", spark, sf_dir, build_dr)
+    dr = staged("lp_dr", spark, sf_dir, build_dr)
 
     def build_keep() -> DataFrame:
         med = dr.where(F.expr("rn = (n + 1) div 2")).select(
@@ -6002,14 +5936,14 @@ def _lp_kept_adjacency(spark: SparkSession, sf_dir: str, e: DataFrame):
             .select("node", "nbr", "cd")
         )
 
-    keep = _lp_cached("lp_keep", spark, sf_dir, build_keep)
+    keep = staged("lp_keep", spark, sf_dir, build_keep)
 
     def build_deg() -> DataFrame:
         return keep.groupBy("node").agg(
             F.count(F.lit(1)).alias("kd"), F.max("cd").alias("cd_pre")
         )
 
-    degs = _lp_cached("lp_deg", spark, sf_dir, build_deg)
+    degs = staged("lp_deg", spark, sf_dir, build_deg)
     kdeg = degs.select("node", F.col("kd").alias("d"))
     cdeg = degs.select("node", F.col("cd_pre").alias("d"))
     return keep.select("node", "nbr"), kdeg, cdeg

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from web_analytics_visits_re_processing_spark.operators.sessionize import with_session_columns
 from web_analytics_visits_re_processing_spark.plans.registry import query
 from web_analytics_visits_re_processing_spark.plans.webanalytics import GAP_US, _events
+from web_analytics_visits_re_processing_spark.sources.layout import staged
 
 # Shared DuckDB session CTE (identical to the webanalytics.py gate
 # convention: strict > on the gap, (ts, event_id) tiebreak).
@@ -47,43 +48,25 @@ seq AS (
 )"""
 
 
-# Single-slot cache for the daily spine, keyed by sf_dir: EWMA and
-# Holt at the same sf SHARE one persisted ~30-row table (a repeat call
-# returns the live cache instead of allocating another block), and a
-# new sf evicts the previous entry. persist()+count(), NOT
-# localCheckpoint: a checkpoint's storage lives on an internal RDD
-# that DataFrame.unpersist cannot release, so repeated bench reps in a
-# long-lived session would accumulate blocks (the importance_scores
-# lesson); a cache-manager entry frees cleanly on eviction. Caveat
-# (same contract as corpus.importance_scores): a result DataFrame
-# obtained at one sf must be materialized before querying another sf —
-# the repo's query/bench harnesses materialize each call exactly once.
-_DAILY_SEQ_CACHE: dict = {}
-
-
 def _daily_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(d, x, n): daily purchase revenue cents with a 1-based day
-    index, eagerly PERSISTED — the recursive-CTE queries (EWMA, Holt)
-    recurse over this ~30-row table; without materialization the
-    recursion re-evaluates the event-scale rollup every step."""
-    key = (id(spark), sf_dir)
-    hit = _DAILY_SEQ_CACHE.get(key)
-    if hit is not None:
-        return hit
-    ev = _events(spark, sf_dir)
-    daily = (
-        ev.where(F.col("event_type") == "purchase")
-        .groupBy(F.to_date("ts").alias("d"))
-        .agg(F.sum(F.floor(F.col("value") * 100)).cast("long").alias("x"))
-    )
-    seq = daily.select(
-        "d", "x", F.row_number().over(Window.orderBy("d")).alias("n")
-    ).persist()
-    seq.count()
-    for k in list(_DAILY_SEQ_CACHE):
-        _DAILY_SEQ_CACHE.pop(k).unpersist(blocking=False)
-    _DAILY_SEQ_CACHE[key] = seq
-    return seq
+    index, STAGED once per session and fixture (``layout.staged``) and
+    shared by EWMA, Holt and Holt–Winters — their recursions and folds
+    run over this ~30-row table; without materialization a recursion
+    re-evaluates the event-scale rollup every step."""
+
+    def build() -> DataFrame:
+        daily = (
+            _events(spark, sf_dir)
+            .where(F.col("event_type") == "purchase")
+            .groupBy(F.to_date("ts").alias("d"))
+            .agg(F.sum(F.floor(F.col("value") * 100)).cast("long").alias("x"))
+        )
+        return daily.select(
+            "d", "x", F.row_number().over(Window.orderBy("d")).alias("n")
+        )
+
+    return staged("daily_seq", spark, sf_dir, build)
 
 
 # --- Shapley-value attribution -------------------------------------------------
@@ -614,7 +597,7 @@ def q_ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncating division each step, no float state anywhere, so the
     full recursion replays verbatim in SQL. Scale: the recursion
     depth is DAYS (bounded, tiny), never events; the event-scale work
-    is one map-side-combined daily rollup, eagerly persisted so
+    is one map-side-combined daily rollup, staged (``_daily_seq``) so
     the recursion never re-evaluates it (pre-fix it re-scanned events
     per step — 10 s at sf0.1, ~4 s after). The residual cost is
     Spark's per-step plan iteration (~0.1 s/day, FIXED — identical at

@@ -18,30 +18,13 @@ from pyspark.sql import functions as F
 
 from web_analytics_visits_re_processing_spark.plans.registry import query
 from web_analytics_visits_re_processing_spark.plans.webanalytics import _events
+from web_analytics_visits_re_processing_spark.sources.layout import staged
 from web_analytics_visits_re_processing_spark.sources.tables import load_table
 from web_analytics_visits_re_processing_spark.plans.webanalytics_r7 import (
     _CHURN_QUIET_DAYS,
     _HAZARD_HORIZON,
     q_churn_hazard_curve,
 )
-
-# Single-slot materialized-table cache, one slot PER NAME keyed by
-# (session, sf_dir): a recursive CTE re-evaluates its referenced
-# relations every step, so the ~20-row table it recurses over must be
-# materialized first (the EWMA lesson, commit e18b56b). Delegates to
-# webanalytics._lp_cached, which STAGES the table to a temp parquet
-# and reads it back instead of persist(): lineage truncates for real,
-# so every downstream reference (including the GSP level tables'
-# 3-way self-join legs) is a leaf file scan and the audited plan tree
-# stays shallow — the r8 plan-bloat fix; see the _LP_CACHE comment
-# for the full rationale (and why localCheckpoint stays banned).
-def _persisted(name: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    from web_analytics_visits_re_processing_spark.plans.webanalytics import (
-        _lp_cached,
-    )
-
-    return _lp_cached(name, spark, sf_dir, build)
-
 
 # The hazard sub-pipeline shared with churn_hazard_curve's oracle
 # (same censoring convention — see webanalytics_r7.py): kept textually
@@ -115,16 +98,15 @@ def q_km_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuinely RECURSIVE (truncating-div products are non-associative,
     so no window aggregate expresses it), making it the repo's third
     recursive-CTE shape (EWMA, Holt, KM) — the recursion runs over
-    the ~{_HAZARD_HORIZON}-row hazard table, eagerly PERSISTED first
-    because a recursive CTE re-evaluates referenced relations every
+    the ~{_HAZARD_HORIZON}-row hazard table, STAGED first
+    (``layout.staged``) because a recursive CTE re-evaluates referenced relations every
     step (the EWMA lesson: without materialization each of the ~20
     steps would re-scan events). Scale: recursion depth is TENURE
     DAYS (calendar-bounded), never users; the event-scale work is the
-    single user rollup inside the hazard build; driver-side state is
-    the one persisted ≤{_HAZARD_HORIZON}-row table in a single-slot
-    cache. Hazard semantics (censoring cutoff, at-risk accounting)
+    single user rollup inside the hazard build; the staged
+    ≤{_HAZARD_HORIZON}-row table is the only state kept. Hazard semantics (censoring cutoff, at-risk accounting)
     are churn_hazard_curve's, verbatim (webanalytics_r7.py)."""
-    _persisted(
+    staged(
         "km_hazard", spark, sf_dir,
         lambda: q_churn_hazard_curve(spark, sf_dir),
     ).createOrReplaceTempView("km_hazard_r8")
@@ -324,11 +306,11 @@ def q_gsp_apriori_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The sequence table feeds FIVE consumers (nu, F1, the level-2
     # scan, the level-3 scan, and — without caching — each leg of the
-    # 3-way c3 self-join would recompute the whole chain): persist the
+    # 3-way c3 self-join would recompute the whole chain): stage the
     # user-level rollup once. It is user-granular (one row per user,
-    # never event-scale) and spill-safe; the single-slot cache evicts
-    # it when the sf changes.
-    s2 = _persisted("gsp_s2", spark, sf_dir, build_s2)
+    # never event-scale) and spill-safe; its slot is replaced when the
+    # fixture changes.
+    s2 = staged("gsp_s2", spark, sf_dir, build_s2)
 
     # r14 (verdict item 9, the PQ-hoist lesson applied to the level
     # scans; then the not-yet int-index follow-through at close-out):
@@ -387,7 +369,7 @@ def q_gsp_apriori_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into SQL text, where the parser would read a backslash in a
     # symbol as an escape (``\b`` → backspace) and change the symbol.
     _dict = F.array(*map(F.lit, syms1))
-    s2a = _persisted(
+    s2a = staged(
         "gsp_s2a",
         spark,
         sf_dir,
@@ -425,10 +407,10 @@ def q_gsp_apriori_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("hit"),
         )
     )
-    # F2 is referenced three times by the Apriori join — persist the
+    # F2 is referenced three times by the Apriori join — stage the
     # ≤|F1|²-row id-pair table so the level-2 scan runs once, not
     # three times.
-    f2 = _persisted(
+    f2 = staged(
         "gsp_f2a", spark, sf_dir,
         lambda: (
             scan2.groupBy("ai", "bi")
@@ -862,8 +844,8 @@ def q_holt_winters_dow_backtest(
     sequence — exact on this fixture (all 30 days have purchases at
     every SF); a production gap-day series runs gap_fill_hourly_
     counts' spine first. Scale: identical to EWMA/Holt — recursion
-    depth is calendar days; the event-scale rollup is the persisted
-    ~30-row daily spine (shared cache with EWMA/Holt via _daily_seq);
+    depth is calendar days; the event-scale rollup is the staged
+    ~30-row daily spine (shared with EWMA/Holt via _daily_seq);
     the per-step state is 10 integers. Citation: Winters 1960;
     Hyndman & Athanasopoulos (fpp3) §8.3 additive form."""
     from web_analytics_visits_re_processing_spark.plans.webanalytics_r7 import (
@@ -2438,7 +2420,7 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stage the bounded community table once (house pattern), then
     # the total is a leaf-scan aggregate broadcast back — r9
     # single-partition-window retirement, second audit pass.
-    rows_staged = _persisted("modularity_comm", spark, sf_dir, lambda: rows)
+    rows_staged = staged("modularity_comm", spark, sf_dir, lambda: rows)
     tot = rows_staged.agg(
         F.sum("q_contrib_ppm").cast("long").alias("modularity_ppm")
     )

@@ -107,11 +107,13 @@ def get_spark(
 
     conf = {
         "spark.sql.session.timeZone": "UTC",
-        # The events fixture stores TIMESTAMP(NANOS), which Spark 4
-        # rejects outright; read nanos as int64 (rebuilt to micros in
-        # sources.tables.load_table). Set once here — library code only
-        # falls back to an idempotent runtime set for driver-provided
-        # vanilla sessions.
+        # Serves the legacy fixture layout that load_table still
+        # accepts: a TIMESTAMP(NANOS) ``ts``, which Spark 4 rejects
+        # outright, is read as int64 (rebuilt to micros in
+        # sources.tables.load_table). The shipped fixtures store
+        # timestamp[us]. Set once here — library code only falls back
+        # to an idempotent runtime set for driver-provided vanilla
+        # sessions.
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
         "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",

@@ -182,14 +182,13 @@ class LifetimeStatsProcessor(StatefulProcessor):
 def user_lifetime_stream(
     events: DataFrame,
     gap_seconds: int = 86_400,
-    watermark_delay: str = "1 hour",
 ) -> DataFrame:
     """events (streaming, ``ts`` timestamp) → one lifetime-stats row
     per user, emitted when the watermark passes last_event + gap."""
     return (
         events.where(F.col("ts").isNotNull())
         .select("user_id", "ts", "value")
-        .withWatermark("ts", watermark_delay)
+        .withWatermark("ts", "1 hour")
         .groupBy("user_id")
         .transformWithStateInPandas(
             LifetimeStatsProcessor(gap_seconds),
@@ -379,12 +378,11 @@ class TypeRollupProcessor(StatefulProcessor):
 def user_type_rollup_stream(
     events: DataFrame,
     gap_seconds: int = 86_400,
-    watermark_delay: str = "1 hour",
 ) -> DataFrame:
     return (
         events.where(F.col("ts").isNotNull())
         .select("user_id", "ts", "event_type", "value")
-        .withWatermark("ts", watermark_delay)
+        .withWatermark("ts", "1 hour")
         .groupBy("user_id")
         .transformWithStateInPandas(
             TypeRollupProcessor(gap_seconds),
